@@ -372,8 +372,8 @@ def pack_sequences(
     window over ONE partition, a non-starter at 100 TB. This runs
     `_two_level_prefix` (the textbook two-level scan: range partition →
     per-partition window → P-row driver prefix broadcast back; the only
-    driver-side data is P longs — a documented bounded exception like
-    duplicate_key_bitmap's).
+    driver-side data is P longs, bounded by the partition count, not the
+    row count).
 
     The reference has no packing; nearest analog is the batched pair
     iterator it feeds its scorer (/root/reference/record_matching/

@@ -21,181 +21,10 @@ tests/test_blocking.py::test_salting_pair_set_equivalence).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from record_matching_spark.operators.minhash import minhash_bands, with_minhash_signature
-
-
-def duplicate_key_bitmap(
-    blocks: DataFrame, key_col: str = "block_key", log2_slots: int = 24
-) -> tuple:
-    """Approximate membership structure for 'this block key occurs ≥ 2
-    times': a packed bitmap over 2^log2_slots hash slots (slot = key's low
-    bits — keys are xxhash64 outputs, so low bits are uniform).
-
-    Built in one map-only pass (mapInArrow): each partition emits its
-    distinct slots split into seen-once / seen-twice lists as PACKED
-    int64 bytes (one binary cell per partition — 8 bytes per distinct
-    slot on the driver via np.frombuffer, not ~28 B/int boxed Python
-    lists; ADVICE r3); the driver unions the twice-lists with slots seen
-    once in ≥ 2 partitions. CONSERVATIVE by construction: a slot
-    collision keeps a singleton band (false positive), never drops a true
-    duplicate — so filtering on the bitmap provably preserves the
-    candidate-pair set (the exact census downstream is unchanged). Scale
-    regime: driver traffic is ≤ 8 bytes per distinct (partition, slot);
-    size log2_slots so the slot load factor stays ≪ 1, and skip the
-    prefilter entirely (None) at row counts where that's impossible — the
-    census filter alone is always correct.
-
-    Returns (bitmap: np.ndarray[uint8] packed bits, log2_slots, stats) with
-    stats = {total_rows, dropped_rows, drop_frac}: a definitely-singleton
-    slot (seen exactly once across all partitions, never twice anywhere)
-    holds exactly one block row, so the sketch itself yields the EXACT
-    number of rows the prefilter would remove — the signal the auto-on
-    heuristic keys on (VERDICT r3 item 8), at no extra pass."""
-    n_slots = 1 << log2_slots
-    mask = np.uint64(n_slots - 1)
-
-    def sketch(batches):
-        import pyarrow as pa
-
-        slots_parts = []
-        n_rows = 0
-        for rb in batches:
-            h = rb.column(0).to_numpy(zero_copy_only=False).astype(np.uint64)
-            n_rows += len(h)
-            slots_parts.append((h & mask).astype(np.int64))
-        if slots_parts:
-            slots = np.concatenate(slots_parts)
-            uniq, counts = np.unique(slots, return_counts=True)
-            ones = uniq[counts == 1]
-            twos = uniq[counts >= 2]
-        else:
-            ones = twos = np.empty(0, dtype=np.int64)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([ones.tobytes()]), pa.array([twos.tobytes()]),
-             pa.array([n_rows], type=pa.int64())],
-            names=["ones", "twos", "n_rows"],
-        )
-
-    rows = (
-        blocks.select(F.col(key_col))
-        .mapInArrow(sketch, schema="ones binary, twos binary, n_rows long")
-        .collect()
-    )
-    ones_all = np.concatenate(
-        [np.frombuffer(r["ones"], dtype=np.int64) for r in rows]
-        or [np.empty(0, dtype=np.int64)]
-    )
-    twos_all = np.concatenate(
-        [np.frombuffer(r["twos"], dtype=np.int64) for r in rows]
-        or [np.empty(0, dtype=np.int64)]
-    )
-    total_rows = int(sum(r["n_rows"] for r in rows))
-    uniq, counts = np.unique(ones_all, return_counts=True)
-    dup_slots = np.union1d(uniq[counts >= 2], np.unique(twos_all))
-    dropped = int(np.setdiff1d(uniq[counts == 1], twos_all).size)
-    bits = np.zeros(n_slots, dtype=bool)
-    bits[dup_slots] = True
-    stats = {
-        "total_rows": total_rows,
-        "dropped_rows": dropped,
-        "drop_frac": dropped / total_rows if total_rows else 0.0,
-        "n_dup_slots": int(dup_slots.size),
-        "dup_slots": dup_slots,
-    }
-    return np.packbits(bits), log2_slots, stats
-
-
-def singleton_row_frac(
-    blocks: DataFrame, key_col: str = "block_key", sample_mod: int = 64,
-    min_sample_rows: int = 5000,
-) -> float:
-    """Estimated fraction of block rows whose key occurs exactly once —
-    the rows the band prefilter would drop. Pure JVM: sample 1/sample_mod
-    of the KEY SPACE (keys are xxhash64 outputs, so `pmod(key, m) == 0`
-    is an unbiased key sample and keeps every occurrence of a sampled
-    key), then one tiny groupBy over ~rows/sample_mod rows. Falls back to
-    the exact full count when the sample is under min_sample_rows.
-    Unlike the duplicate_key_bitmap sketch this needs NO Arrow crossing
-    and NO materialization of `blocks`, so the auto-prefilter decision
-    costs ~nothing when the answer is 'off'."""
-    for mod in ([sample_mod, 1] if sample_mod > 1 else [1]):
-        s = blocks.select(F.col(key_col))
-        if mod > 1:
-            s = s.filter(F.pmod(F.col(key_col), F.lit(mod)) == 0)
-        row = (
-            s.groupBy(key_col)
-            .count()
-            .agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("count") == 1, 1).otherwise(0)), F.lit(0)
-                ).alias("singles"),
-                F.coalesce(F.sum("count"), F.lit(0)).alias("rows"),
-            )
-            .collect()[0]
-        )
-        if row["rows"] >= min_sample_rows or mod == 1:
-            return row["singles"] / row["rows"] if row["rows"] else 0.0
-    return 0.0
-
-
-def filter_blocks_by_slot_join(
-    blocks: DataFrame, dup_slots: np.ndarray, log2_slots: int,
-    key_col: str = "block_key",
-) -> DataFrame:
-    """JVM-side prefilter: broadcast hash SEMI-join of blocks against the
-    dup-slot id list on `key & (2^log2_slots - 1)` — the same predicate as
-    the bitmap filter with ZERO Python/Arrow crossings on the big side
-    (the r4 A/B showed the Arrow filter pass dominating the prefilter's
-    cost; a broadcast semi-join scans blocks entirely inside whole-stage
-    codegen). dup_slots is small exactly when the prefilter is worth
-    running (high singleton fraction ⇒ few duplicated slots).
-
-    An EMPTY dup_slots (100%-singleton corpus — every block key unique, so
-    zero candidate pairs) short-circuits to an always-false filter: the
-    semantically identical result without tripping pandas empty-schema
-    inference (ADVICE r4)."""
-    spark = blocks.sparkSession
-    if dup_slots.size == 0:
-        return blocks.filter(F.lit(False))
-    mask = (1 << log2_slots) - 1
-    slots_df = spark.createDataFrame(
-        pd.DataFrame({"_slot": dup_slots.astype(np.int64)}), schema="_slot long"
-    )
-    return blocks.join(
-        F.broadcast(slots_df),
-        F.col(key_col).bitwiseAND(F.lit(mask)) == F.col("_slot"),
-        "left_semi",
-    )
-
-
-def filter_blocks_by_bitmap(
-    blocks: DataFrame, bitmap: np.ndarray, log2_slots: int,
-    key_col: str = "block_key",
-) -> DataFrame:
-    """Drop rows whose key slot is not marked in the bitmap (definitely-
-    singleton bands) BEFORE the blocking shuffle — the bloom-style band
-    prefilter (VERDICT r2 item 3). The bitmap rides to executors as a
-    broadcast variable (n_slots/8 bytes); the test is a vectorized numpy
-    gather per Arrow batch."""
-    mask = np.uint64((1 << log2_slots) - 1)
-    bc = blocks.sparkSession.sparkContext.broadcast(bitmap)
-    names = blocks.columns
-    key_idx = names.index(key_col)
-
-    def keep(batches):
-        bm = bc.value
-        for rb in batches:
-            h = rb.column(key_idx).to_numpy(zero_copy_only=False).astype(np.uint64)
-            slots = (h & mask).astype(np.int64)
-            hit = (bm[slots >> 3] >> (7 - (slots & 7).astype(np.uint8))) & 1
-            yield rb.filter(hit.astype(bool))
-
-    return blocks.mapInArrow(keep, schema=blocks.schema)
 
 
 def token_sorted_key(tokens_col: str = "tokens", first_k: int = 24) -> F.Column:
@@ -254,7 +83,7 @@ def blocking_keys(
         parts.append(
             minhash_bands(
                 sigs, id_col=id_col, num_bands=num_bands, rows_per_band=rows_per_band
-            ).withColumnRenamed(id_col, id_col)
+            )
         )
     out = parts[0]
     for p in parts[1:]:
@@ -267,12 +96,9 @@ def candidate_pairs(
     id_col: str = "file_id",
     salt_cap: int = 1000,
     drop_cap: int | None = None,
-    repartition_blocks: bool = True,
     dedup: bool = True,
     keep_block_key: bool = True,
     persist_blocks: bool = True,
-    prefilter_log2_slots: int | str | None = None,
-    prefilter_auto_min_drop: float = 0.95,
 ) -> DataFrame:
     """Distinct candidate pairs (left < right) from a (id, block_key) table.
 
@@ -292,61 +118,7 @@ def candidate_pairs(
     raw pair stream is returned (a pair may repeat, once per shared block) —
     cheaper when a downstream filter shrinks the stream before its own
     dedup (verify-then-dedup, see functions/dedup.py).
-
-    prefilter_log2_slots: when set, a duplicate_key_bitmap pass prunes
-    definitely-singleton band rows BEFORE the blocking shuffle (most band
-    keys are unique, so the dominant (id, key) exchange shrinks by the
-    singleton fraction minus the bitmap's false-positive rate). Pair set
-    provably unchanged (tests/test_blocking.py::
-    test_prefilter_pair_set_equivalence); the exact census still runs.
-    Costs one extra map-only scan of `blocks` — callers should pass
-    materialized blocks (the pipeline's parquet stage / the dedup path's
-    localCheckpoint already do).
-
-    prefilter_log2_slots="auto" (VERDICT r3 item 8): the singleton-row
-    fraction is estimated first with a pure-JVM key-space sample
-    (`singleton_row_frac` — no Arrow crossing, no materialization,
-    ~rows/64 shuffled), and the prefilter machinery (bitmap sketch +
-    filter pass) engages only when the estimate clears
-    prefilter_auto_min_drop. CALIBRATION (r4, BENCH.md): on this
-    single-box tmpfs-shuffle rig the filter loses at EVERY measured
-    fraction — 1.7× at 21%, 2.2× at 51%, 4.3× at 86% singleton rows —
-    because one extra scan of blocks costs as much as the shuffle rows it
-    saves; the default threshold (0.95) therefore declines in all
-    measured regimes, matching the measured winner. The filter's real
-    regime is network-shuffle clusters where an exchanged row costs far
-    more than a scanned one — deployments there should LOWER the
-    threshold. Three-arm A/B evidence: scripts/prefilter_ab_bench.py.
     """
-    if prefilter_log2_slots is not None:
-        auto = prefilter_log2_slots == "auto"
-        lg_req = 24 if auto else prefilter_log2_slots
-        engage = True
-        if auto:
-            engage = (
-                singleton_row_frac(blocks, key_col="block_key")
-                >= prefilter_auto_min_drop
-            )
-        if engage:
-            # the sketch + filter scan blocks twice on top of the main
-            # pass; the documented contract is that callers pass
-            # MATERIALIZED blocks (the pipeline reads a parquet stage, the
-            # dedup path localCheckpoints) so those extra scans don't
-            # re-run upstream UDFs — no redundant copy is made here (the
-            # r4 A/B measured the old internal re-checkpoint as pure loss).
-            bitmap, lg, stats = duplicate_key_bitmap(
-                blocks, key_col="block_key", log2_slots=lg_req
-            )
-            if stats["n_dup_slots"] <= 4_000_000:
-                # JVM broadcast semi-join on dup slots (≤ 32 MB broadcast):
-                # whole-stage-codegen filter, no Arrow crossing
-                blocks = filter_blocks_by_slot_join(
-                    blocks, stats["dup_slots"], lg, key_col="block_key"
-                )
-            else:
-                blocks = filter_blocks_by_bitmap(
-                    blocks, bitmap, lg, key_col="block_key"
-                )
     # repartition FIRST so the census window reuses the same hash
     # partitioning instead of shuffling twice (one exchange total).
     # The partition COUNT is explicit: the pair self-join EXPLODES row
@@ -356,10 +128,7 @@ def candidate_pairs(
     n_part = int(
         blocks.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    if repartition_blocks:
-        b = blocks.repartition(n_part, F.col("block_key"))
-    else:
-        b = blocks
+    b = blocks.repartition(n_part, F.col("block_key"))
     w = Window.partitionBy("block_key")
     b = b.withColumn("bsize", F.count("*").over(w)).filter(F.col("bsize") > 1)
     if drop_cap is not None:

@@ -87,17 +87,23 @@ _LEV_THRESHOLD = _SIG_CHARS // 2
 
 # broadcast budget for the per-distinct-content feature table: measured
 # payload ≈ 1 KB/row (int32 tid + float32 tw arrays + 96-char sig). The
-# default 256 MB cap targets the smallest executors a mixed cluster is
-# likely to run (VERDICT r2 item 5: a forced 500 MB broadcast can OOM small
-# executors); deployments with fat executors can raise it per call.
+# 256 MB cap targets the smallest executors a mixed cluster is likely to
+# run (VERDICT r2 item 5: a forced 500 MB broadcast can OOM small
+# executors).
 _FEATURE_ROW_BYTES = 1024
-DEFAULT_BROADCAST_BUDGET_BYTES = 256 << 20
+BROADCAST_BUDGET_BYTES = 256 << 20
 
 # sha_features: above this many distinct documents the vocabulary may not
 # fit the driver/broadcast, so the idf attach falls back to the shuffle
 # join instead of the numpy-broadcast map-side finish (module constant so
 # tests can force the fallback and pin both paths to identical outputs)
 VOCAB_BROADCAST_MAX_DOCS = 1_000_000
+
+# pair_features scores each distinct content pair once (then joins back to
+# file pairs) when files outnumber distinct contents by more than this
+# ratio; below it, per file pair (module constant so tests can force either
+# plan and pin the two to each other)
+DEDUP_CONTENT_MIN_RATIO = 1.3
 
 
 # ---------------------------------------------------------------- features
@@ -337,156 +343,22 @@ def _cos_jac_batch(tid_l, tw_l, tid_r, tw_r, n: int):
     return cos, jac
 
 
-# Mask-scatter vs per-string-loop crossover for _pad_codepoints, measured
-# at n=20k uniform-length batches (scripts/pad_codepoints_ab.py): mask
-# 1.18x at 150, ~parity at 200-250, 0.74-0.77x at 300-400.
-_PAD_MASK_MAX_L = 192
-
-
-def _pad_codepoints(strs: list) -> tuple[np.ndarray, np.ndarray]:
-    """(n, Lmax) uint32 codepoint matrix (zero-padded) + per-row lengths.
-    utf-32-le gives exact Python-string character semantics. One batch-wide
-    join+encode+frombuffer and a single BOOLEAN-MASK scatter — no
-    per-string Python loop (VERDICT r4 item 7). Mask assignment fills in
-    row-major order, each row's first len(s) slots, which is exactly the
-    concatenated encode order. Measured (scripts/pad_codepoints_ab.py):
-    mask beats the loop 4.4x/1.6x/1.2x at Lmax 30/120/150 but LOSES
-    ~0.75x past Lmax~250 (the n*Lmax mask dominates), so batches with
-    Lmax > _PAD_MASK_MAX_L fall back to the per-string loop — same
-    outputs, property-pinned by test_jw_vectorized_matches_scalar. The
-    integer fancy-index variant lost at long lengths too (0.37x)."""
-    n = len(strs)
-    lens = np.fromiter((len(s) for s in strs), dtype=np.int64, count=n)
-    L = int(lens.max()) if n and lens.size else 0
-    M = np.zeros((n, max(L, 1)), dtype=np.uint32)
-    if 0 < L <= _PAD_MASK_MAX_L:
-        flat = np.frombuffer("".join(strs).encode("utf-32-le"), dtype=np.uint32)
-        mask = np.arange(L, dtype=np.int64)[None, :] < lens[:, None]
-        M[mask] = flat
-    elif L > 0:
-        for i, s in enumerate(strs):
-            if s:
-                M[i, : len(s)] = np.frombuffer(
-                    s.encode("utf-32-le"), dtype=np.uint32
-                )
-    return M, lens
-
-
-def _jw_batch_vec(av: list, bv: list) -> np.ndarray:
-    """Batch-vectorized exact Jaro-Winkler (Winkler 1990) — the
-    rapidfuzz-style kernel for batches of mostly-UNIQUE strings where the
-    per-combo memo stops helping (VERDICT r3 watch item). All pairs
-    advance through the greedy match loop simultaneously: iteration i
-    processes character i of every left string against every right
-    string's window in one (n × Lmax) boolean pass; transpositions and
-    the common-prefix bonus are gather/compare matrices. Semantics are
-    bit-identical to `_jaro_winkler` (property-tested in
-    test_round4::test_jw_vectorized_matches_scalar)."""
-    n = len(av)
-    if n == 0:
-        return np.empty(0)
-    av = [x or "" for x in av]
-    bv = [x or "" for x in bv]
-    A, l1 = _pad_codepoints(av)
-    B, l2 = _pad_codepoints(bv)
-    L1, L2 = A.shape[1], B.shape[1]
-    window = np.maximum(np.maximum(l1, l2) // 2 - 1, 0)
-    flags1 = np.zeros((n, L1), dtype=bool)
-    flags2 = np.zeros((n, L2), dtype=bool)
-    j_idx = np.arange(L2)
-    rows = np.arange(n)
-    for i in range(int(l1.max()) if n else 0):
-        active = i < l1
-        if not active.any():
-            break
-        c = A[:, i]
-        lo = np.maximum(0, i - window)
-        hi = np.minimum(l2, i + window + 1)
-        cand = (
-            (B == c[:, None])
-            & ~flags2
-            & (j_idx[None, :] >= lo[:, None])
-            & (j_idx[None, :] < hi[:, None])
-            & active[:, None]
-        )
-        has = cand.any(axis=1)
-        first = cand.argmax(axis=1)
-        flags2[rows[has], first[has]] = True
-        flags1[:, i] = has
-    m = flags1.sum(axis=1)
-    # transpositions: gather matched chars in order from each side, count
-    # positionwise mismatches
-    Mmax = int(m.max()) if n else 0
-    t = np.zeros(n, dtype=np.int64)
-    if Mmax > 0:
-        M1 = np.zeros((n, Mmax), dtype=np.uint32)
-        M2 = np.zeros((n, Mmax), dtype=np.uint32)
-        r1, c1 = np.nonzero(flags1)
-        M1[r1, (np.cumsum(flags1, axis=1) - 1)[r1, c1]] = A[r1, c1]
-        r2, c2 = np.nonzero(flags2)
-        M2[r2, (np.cumsum(flags2, axis=1) - 1)[r2, c2]] = B[r2, c2]
-        t = ((M1 != M2) & (np.arange(Mmax)[None, :] < m[:, None])).sum(
-            axis=1
-        ) // 2
-    with np.errstate(divide="ignore", invalid="ignore"):
-        jaro = (
-            m / np.maximum(l1, 1)
-            + m / np.maximum(l2, 1)
-            + (m - t) / np.maximum(m, 1)
-        ) / 3.0
-    jaro = np.where((m == 0) | (l1 == 0) | (l2 == 0), 0.0, jaro)
-    # common-prefix bonus: run length of leading equality over min(4, l1, l2)
-    P = min(4, L1, L2)
-    if P > 0:
-        pmask = np.arange(P)[None, :] < np.minimum(l1, l2)[:, None]
-        eq = (A[:, :P] == B[:, :P]) & pmask
-        prefix = np.cumprod(eq, axis=1).sum(axis=1)
-    else:
-        prefix = np.zeros(n, dtype=np.int64)
-    out = jaro + prefix * 0.1 * (1.0 - jaro)
-    # exact equality (incl. both-empty) is 1.0 by definition
-    eq_rows = np.fromiter(
-        (x == y for x, y in zip(av, bv)), dtype=bool, count=n
-    )
-    return np.where(eq_rows, 1.0, out)
-
-
-def _jw_batch(av: list, bv: list, vec_min_len: int = 64) -> np.ndarray:
-    """Jaro-Winkler over one batch of string pairs: dedupe to distinct
-    combos (paths repeat heavily across candidate pairs — clone families
-    share module names), then dispatch the distinct set by length.
-    MEASURED crossover (BENCH.md r4): the vectorized kernel pays its
-    (n × Lmax) bool-matrix passes only on longer strings — 0.9× at path
-    length ~30 but 1.7× at ~120 and 3.0× at ~300 — so short batches keep
-    the scalar loop and long ones go vectorized. Either way repeat-heavy
-    batches pay ~nothing per repeat and unique-heavy batches no longer
-    rely on the memo (VERDICT r3 watch item)."""
-    n = len(av)
-    if n == 0:
-        return np.empty(0)
-    # dedupe on (x, y) TUPLES — a separator-joined key would mis-split when
-    # a left string itself contains the separator character (ADVICE r4)
-    seen: dict = {}
-    inv = np.empty(n, dtype=np.int64)
-    ua: list = []
-    ub: list = []
+def _jw_batch(av: list, bv: list) -> np.ndarray:
+    """Jaro-Winkler over one batch of string pairs (None reads as ""):
+    each distinct pair is scored once by `_jaro_winkler` — paths repeat
+    heavily across candidate pairs (clone families share module names), so
+    a repeat costs one dict lookup."""
+    memo: dict = {}
+    out = np.empty(len(av))
     for i, (x, y) in enumerate(zip(av, bv)):
+        # memo on (x, y) TUPLES — a separator-joined key would mis-split
+        # when a left string itself contains the separator (ADVICE r4)
         key = (x or "", y or "")
-        j = seen.get(key)
-        if j is None:
-            j = len(ua)
-            seen[key] = j
-            ua.append(key[0])
-            ub.append(key[1])
-        inv[i] = j
-    if max(max(map(len, ua)), max(map(len, ub))) >= vec_min_len:
-        vals = _jw_batch_vec(list(ua), list(ub))
-    else:
-        vals = np.fromiter(
-            (_jaro_winkler(x, y) for x, y in zip(ua, ub)),
-            dtype=np.float64, count=len(ua),
-        )
-    return vals[inv]
+        v = memo.get(key)
+        if v is None:
+            v = memo[key] = _jaro_winkler(*key)
+        out[i] = v
+    return out
 
 
 def _feature_kernel(key_cols: tuple[str, str], with_paths: bool):
@@ -582,8 +454,8 @@ def _jaro_winkler(s1: str, s2: str) -> float:
 
 @F.pandas_udf(DoubleType())
 def _jw_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Jaro-Winkler column UDF: dedupe-to-distinct then the batch-vectorized
-    kernel (`_jw_batch`), same math as the mapInArrow feature kernel."""
+    """Jaro-Winkler column UDF over `_jw_batch` — jw_path of the
+    per-content plan, whose kernel runs on content pairs without paths."""
     av = a.fillna("").to_numpy(dtype=object)
     bv = b.fillna("").to_numpy(dtype=object)
     return pd.Series(_jw_batch(list(av), list(bv)))
@@ -619,15 +491,65 @@ def _lev_expr(suffix_a: str, suffix_b: str) -> F.Column:
     ).alias("lev_sig")
 
 
+def _score_content(
+    base: DataFrame, shafk: DataFrame, keys: tuple[str, str],
+    sides: tuple[str, str], bcast, meta_feats: dict | None = None,
+) -> DataFrame:
+    """Attach both sides' content features to `base` (joined on
+    csid{sides[0]} / csid{sides[1]}) and run the feature kernel once over
+    the result; output rows are keyed by `keys`. With `meta_feats`, the
+    metadata features ride the kernel as pass-through columns and paths
+    ride it for jw_path (`base` then carries path_l/path_r and the
+    metadata columns)."""
+    a, b = sides
+    fa = shafk.select(
+        F.col("csid").alias(f"csid{a}"), F.col("sig").alias(f"sig{a}"),
+        F.col("tid").alias("tid_l"), F.col("tw").alias("tw_l"),
+    )
+    fb = shafk.select(
+        F.col("csid").alias(f"csid{b}"), F.col("sig").alias(f"sig{b}"),
+        F.col("tid").alias("tid_r"), F.col("tw").alias("tw_r"),
+    )
+    # B21 imputation flags: an empty tid list (or a missing feature row)
+    # means the side had no tokens — its content features are sentinel
+    # values the classifier should be able to discount
+    e_a = F.coalesce(F.size("tid_l"), F.lit(0)) == 0
+    e_b = F.coalesce(F.size("tid_r"), F.lit(0)) == 0
+    with_paths = meta_feats is not None
+    extra = (
+        [c.alias(name) for name, c in meta_feats.items()] + ["path_l", "path_r"]
+        if with_paths else []
+    )
+    pre = (
+        base.join(bcast(fa), f"csid{a}")
+        .join(bcast(fb), f"csid{b}")
+        .select(
+            *keys,
+            (F.col(f"csid{a}") == F.col(f"csid{b}")).alias("_same"),
+            _lev_expr(a, b),
+            (e_a | e_b).cast("double").alias("any_empty"),
+            (e_a & e_b).cast("double").alias("both_empty"),
+            *extra,
+            "tid_l", "tw_l", "tid_r", "tw_r",
+        )
+    )
+    key_t = dict(base.dtypes)
+    schema = (
+        f"{keys[0]} {key_t[keys[0]]}, {keys[1]} {key_t[keys[1]]}, "
+        "jaccard double, tfidf_cos double, lev_sig double, any_empty double, "
+        "both_empty double"
+    )
+    if with_paths:
+        schema += ", same_lang double, dir_sim double, jw_path double"
+    return pre.mapInArrow(_feature_kernel(keys, with_paths), schema=schema)
+
+
 def pair_features(
     pairs: DataFrame,
     files: DataFrame,
     tokens_col: str = "tokens",
     shaf: DataFrame | None = None,
     id_col: str = "file_id",
-    dedup_content: bool | None = None,
-    broadcast_features: bool | None = None,
-    broadcast_budget_bytes: int = DEFAULT_BROADCAST_BUDGET_BYTES,
 ) -> DataFrame:
     """Featurize candidate pairs (left/right are values of `id_col` —
     pass id_col="fid" for the compact-surrogate pipeline path).
@@ -635,15 +557,16 @@ def pair_features(
     All join keys are int64 surrogates: record ids via `id_col`, contents
     via csid = xxhash64(content_sha) — a 64-char sha never rides a shuffle.
 
-    Two plans, picked by the corpus' duplicate ratio (overridable):
-    - dedup_content=True  — content features computed once per distinct
-      canonical (csid_a ≤ csid_b) pair, joined back (the reference's
+    Two plans, picked by the corpus' duplicate ratio:
+    - dedup_content (files > DEDUP_CONTENT_MIN_RATIO × distinct contents)
+      — content features computed once per distinct canonical
+      (csid_a ≤ csid_b) pair, joined back (the reference's
       embed-each-distinct-value-once economy, main.py:89-93). Wins when
       many files share identical content.
-    - dedup_content=False — features computed directly per file pair
-      (skips the distinct + join-back shuffles). Wins when contents are
-      mostly unique (mutation-heavy corpora).
-    Output: left, right, jaccard, tfidf_cos, lev_sig, jw_sig, jw_path.
+    - otherwise — features computed directly per file pair (skips the
+      distinct + join-back shuffles). Wins when contents are mostly unique
+      (mutation-heavy corpora).
+    Output: left, right, *FEATURES.
     """
     built_shaf = shaf is None
     if shaf is None:
@@ -657,30 +580,24 @@ def pair_features(
         # localCheckpoint auto-releases on GC.
         shafk = shafk.localCheckpoint(eager=True)
 
-    if dedup_content is None or broadcast_features is None:
-        # decide from the (cheap, often cached) files table — counting shaf
-        # would materialize the whole TF-IDF build once for the count and
-        # then recompute it in the real plan
-        row = files.agg(
-            F.count("*").alias("n"),
-            F.count_distinct("content_sha").alias("d")
-            if "content_sha" in files.columns
-            else F.count_distinct(tokens_col).alias("d"),
-        ).collect()[0]
-        n_files, n_shas = row["n"], row["d"]
-        if dedup_content is None:
-            dedup_content = n_files > 1.3 * n_shas
-        if broadcast_features is None:
-            # byte-budgeted broadcast decision (~1 KB/row measured). The
-            # candidate-pair stream is 50-1000× the feature table, so
-            # broadcasting turns BOTH attach joins into shuffle-free
-            # broadcast-hash joins (vs sort-merge shuffling pair_count × 2 KB
-            # — the round-1 scoring stage's hidden cost). Above the budget
-            # the plan falls back to sort-merge, the correct shape when the
-            # distinct-content table itself is cluster-scale.
-            broadcast_features = (
-                n_shas * _FEATURE_ROW_BYTES <= broadcast_budget_bytes
-            )
+    # decide from the (cheap, often cached) files table — counting shaf
+    # would materialize the whole TF-IDF build once for the count and then
+    # recompute it in the real plan
+    row = files.agg(
+        F.count("*").alias("n"),
+        F.count_distinct("content_sha").alias("d")
+        if "content_sha" in files.columns
+        else F.count_distinct(tokens_col).alias("d"),
+    ).collect()[0]
+    n_files, n_shas = row["n"], row["d"]
+    dedup_content = n_files > DEDUP_CONTENT_MIN_RATIO * n_shas
+    # byte-budgeted broadcast decision (~1 KB/row measured). The
+    # candidate-pair stream is 50-1000× the feature table, so broadcasting
+    # turns BOTH attach joins into shuffle-free broadcast-hash joins (vs
+    # sort-merge shuffling pair_count × 2 KB — the round-1 scoring stage's
+    # hidden cost). Above the budget the plan falls back to sort-merge, the
+    # correct shape when the distinct-content table itself is cluster-scale.
+    broadcast_features = n_shas * _FEATURE_ROW_BYTES <= BROADCAST_BUDGET_BYTES
 
     def _maybe_bcast(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if broadcast_features else df
@@ -732,37 +649,9 @@ def pair_features(
         p = p.withColumn("csid_a", F.least("csid_l", "csid_r")).withColumn(
             "csid_b", F.greatest("csid_l", "csid_r")
         )
-        sha_pairs = p.select("csid_a", "csid_b").distinct()
-        fa = shafk.select(
-            F.col("csid").alias("csid_a"), F.col("sig").alias("sig_a"),
-            F.col("tid").alias("tid_l"), F.col("tw").alias("tw_l"),
-        )
-        fb = shafk.select(
-            F.col("csid").alias("csid_b"), F.col("sig").alias("sig_b"),
-            F.col("tid").alias("tid_r"), F.col("tw").alias("tw_r"),
-        )
-        # B21 imputation flags: an empty tid list (or a missing feature row)
-        # means the side had no tokens — its content features are sentinel
-        # values the classifier should be able to discount
-        e_a = F.coalesce(F.size("tid_l"), F.lit(0)) == 0
-        e_b = F.coalesce(F.size("tid_r"), F.lit(0)) == 0
-        sha_pre = (
-            sha_pairs.join(_maybe_bcast(fa), "csid_a")
-            .join(_maybe_bcast(fb), "csid_b")
-            .select(
-                "csid_a", "csid_b",
-                (F.col("csid_a") == F.col("csid_b")).alias("_same"),
-                _lev_expr("_a", "_b"),
-                (e_a | e_b).cast("double").alias("any_empty"),
-                (e_a & e_b).cast("double").alias("both_empty"),
-                "tid_l", "tw_l", "tid_r", "tw_r",
-            )
-        )
-        sha_scored = sha_pre.mapInArrow(
-            _feature_kernel(("csid_a", "csid_b"), with_paths=False),
-            schema="csid_a bigint, csid_b bigint, jaccard double, "
-                   "tfidf_cos double, lev_sig double, any_empty double, "
-                   "both_empty double",
+        sha_scored = _score_content(
+            p.select("csid_a", "csid_b").distinct(), shafk,
+            ("csid_a", "csid_b"), ("_a", "_b"), _maybe_bcast,
         )
         return (
             p.join(sha_scored, ["csid_a", "csid_b"])
@@ -770,40 +659,9 @@ def pair_features(
             .withColumns(meta_feats)
             .select("left", "right", *FEATURES)
         )
-
-    fa = shafk.select(
-        F.col("csid").alias("csid_l"), F.col("sig").alias("sig_l"),
-        F.col("tid").alias("tid_l"), F.col("tw").alias("tw_l"),
-    )
-    fb = shafk.select(
-        F.col("csid").alias("csid_r"), F.col("sig").alias("sig_r"),
-        F.col("tid").alias("tid_r"), F.col("tw").alias("tw_r"),
-    )
-    e_l = F.coalesce(F.size("tid_l"), F.lit(0)) == 0
-    e_r = F.coalesce(F.size("tid_r"), F.lit(0)) == 0
-    pre = (
-        p.join(_maybe_bcast(fa), "csid_l")
-        .join(_maybe_bcast(fb), "csid_r")
-        .select(
-            "left", "right",
-            (F.col("csid_l") == F.col("csid_r")).alias("_same"),
-            _lev_expr("_l", "_r"),
-            (e_l | e_r).cast("double").alias("any_empty"),
-            (e_l & e_r).cast("double").alias("both_empty"),
-            meta_feats["same_lang"].alias("same_lang"),
-            meta_feats["dir_sim"].alias("dir_sim"),
-            "path_l", "path_r", "tid_l", "tw_l", "tid_r", "tw_r",
-        )
-    )
-    id_t = dict(pairs.select("left", "right").dtypes)
-    out = pre.mapInArrow(
-        _feature_kernel(("left", "right"), with_paths=True),
-        schema=f"left {id_t['left']}, right {id_t['right']}, jaccard double, "
-               "tfidf_cos double, lev_sig double, any_empty double, "
-               "both_empty double, same_lang double, dir_sim double, "
-               "jw_path double",
-    )
-    return out.select("left", "right", *FEATURES)
+    return _score_content(
+        p, shafk, ("left", "right"), ("_l", "_r"), _maybe_bcast, meta_feats
+    ).select("left", "right", *FEATURES)
 
 
 # ----------------------------------------------------------------- scoring

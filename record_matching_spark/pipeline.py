@@ -69,10 +69,6 @@ class PipelineConfig:
     # 64 = int64 surrogate ids (default); 128 = struct<h1,h2> dual-hash ids
     # for 10^12-file scale (collision n²/2¹²⁹)
     id_bits: int = 64
-    # bloom-style band prefilter: prune definitely-singleton band rows
-    # before the s4 blocking shuffle (pair set provably unchanged). None =
-    # off; e.g. 24 = 2^24 bitmap slots. Size so slot load stays ≪ 1.
-    band_prefilter_log2: int | None = None
 
     def fingerprint(self) -> str:
         return json.dumps(asdict(self), sort_keys=True)
@@ -213,7 +209,6 @@ class Pipeline:
             lambda: candidate_pairs(
                 blocks, id_col="fid", salt_cap=cfg.salt_cap, drop_cap=cfg.drop_cap,
                 persist_blocks=False,  # blocks already parquet-materialized
-                prefilter_log2_slots=cfg.band_prefilter_log2,
             ),
         )
         if stop_after == "s4_pairs":

@@ -40,7 +40,6 @@ from record_matching_spark.operators.scoring import (
 from record_matching_spark.synth import repo_files, synth_repo_files_with_truth
 
 cores = int(sys.argv[1]); fams = int(sys.argv[2])
-pf = int(sys.argv[3]) if len(sys.argv) > 3 else 0  # band-prefilter log2 slots, 0=off
 spark = get_spark(app_name=f"scaling-{{cores}}", master=f"local[{{cores}}]",
                   shuffle_partitions=4 * cores)
 truth = synth_repo_files_with_truth(spark, n_families=fams, seed=42,
@@ -51,8 +50,7 @@ norm = normalize_files(files).cache(); norm.count()
 # phase 1: blocking + salted candidate pairs
 t0 = time.monotonic()
 pairs = candidate_pairs(blocking_keys(norm, id_col="fid"), id_col="fid",
-                        salt_cap=1000,
-                        prefilter_log2_slots=pf or None).cache()
+                        salt_cap=1000).cache()
 n_pairs = pairs.count()
 t1 = time.monotonic()
 # phase 2: featurize + score over cached pairs — the candidate-pairs-
@@ -82,9 +80,8 @@ print("RESULT " + json.dumps({{"cores": cores, "files": n_files,
 
 def run_level(cores: int, fams: int) -> dict:
     code = WORKER.format(repo=str(REPO))
-    pf = os.environ.get("SCALING_PREFILTER", "0")
     out = subprocess.run(
-        [sys.executable, "-c", code, str(cores), str(fams), pf],
+        [sys.executable, "-c", code, str(cores), str(fams)],
         capture_output=True, text=True, timeout=3600,
         env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "48g"},
     )

@@ -73,99 +73,13 @@ def test_salting_pair_set_equivalence(blocks):
     assert salted.filter(F.col("left") >= F.col("right")).count() == 0
 
 
-def test_prefilter_pair_set_equivalence(blocks):
-    """The bloom-style band prefilter (duplicate_key_bitmap) must emit
-    EXACTLY the unfiltered pair set — it may only drop rows whose band key
-    is definitely singleton (VERDICT r3 item: the prefilter is conservative;
-    the exact census still decides). Tested at a deliberately TINY bitmap
-    (2^12 slots → heavy slot collisions) so the false-positive path is
-    exercised, and at a realistic width."""
-    base = candidate_pairs(blocks, salt_cap=1_000).select("left", "right")
-    for lg in (12, 20):
-        pre = candidate_pairs(
-            blocks, salt_cap=1_000, prefilter_log2_slots=lg
-        ).select("left", "right")
-        assert base.exceptAll(pre).count() == 0, f"lost pairs at log2={lg}"
-        assert pre.exceptAll(base).count() == 0, f"extra pairs at log2={lg}"
-
-
-def test_duplicate_key_bitmap_marks_all_dup_keys(spark):
-    """Every key that truly occurs ≥2 times (within or across partitions)
-    must be marked; singletons in empty slots must not be."""
-    import numpy as np
-
-    from record_matching_spark.operators.blocking import duplicate_key_bitmap
-
-    rows = ([("a", 5), ("b", 5)]            # dup within a partition
-            + [(f"s{i}", 1000 + i) for i in range(50)]  # singletons
-            + [("c", 77), ("d", 77)])       # dup (likely across partitions)
-    df = spark.createDataFrame(rows, "file_id string, block_key long").repartition(8)
-    bm, lg, stats = duplicate_key_bitmap(df, log2_slots=16)
-    # exact drop accounting: 50 singleton rows removable out of 54
-    assert stats["total_rows"] == 54
-    assert stats["dropped_rows"] == 50
-    assert abs(stats["drop_frac"] - 50 / 54) < 1e-12
-    bits = np.unpackbits(bm)
-    mask = (1 << lg) - 1
-    for k in (5, 77):
-        assert bits[k & mask] == 1
-    marked = int(bits.sum())
-    assert marked <= 2 + 50  # singletons only marked via (absent) collisions
-
-
-def test_prefilter_auto_decision(spark, monkeypatch):
-    """prefilter_log2_slots='auto' applies the (expensive) filter pass only
-    when the JVM-estimated singleton-row fraction clears the calibrated
-    threshold (0.95 — every measured lower fraction loses on this box,
-    BENCH.md): near-pure-singleton blocks → filter on; dup-dominated
-    blocks → filter skipped. Pair sets identical either way."""
-    import record_matching_spark.operators.blocking as B
-
-    calls = []
-    orig_bm = B.filter_blocks_by_bitmap
-    orig_sj = B.filter_blocks_by_slot_join
-
-    def spy_bm(*a, **k):
-        calls.append("bitmap")
-        return orig_bm(*a, **k)
-
-    def spy_sj(*a, **k):
-        calls.append("slot_join")
-        return orig_sj(*a, **k)
-
-    monkeypatch.setattr(B, "filter_blocks_by_bitmap", spy_bm)
-    monkeypatch.setattr(B, "filter_blocks_by_slot_join", spy_sj)
-
-    # 98% singleton rows → drop_frac ≈ 0.98 ≥ 0.95 → filter applied
-    high = spark.createDataFrame(
-        [(f"s{i}", 10_000 + i) for i in range(490)]
-        + [(f"d{i}", 20_000 + i // 2) for i in range(10)],
-        "file_id string, block_key long",
-    )
-    got = sorted(
-        (r["left"], r["right"])
-        for r in B.candidate_pairs(high, prefilter_log2_slots="auto").collect()
-    )
-    assert calls, "high-singleton corpus must trigger the filter"
-    want = sorted(
-        (r["left"], r["right"])
-        for r in B.candidate_pairs(high, prefilter_log2_slots=None).collect()
-    )
-    assert got == want
-
-    # every key duplicated → drop_frac 0 < threshold → filter skipped
-    calls.clear()
-    low = spark.createDataFrame(
-        [(f"d{i}", 30_000 + i // 2) for i in range(200)],
-        "file_id string, block_key long",
-    )
-    n = B.candidate_pairs(low, prefilter_log2_slots="auto").count()
-    assert not calls, "dup-dominated corpus must skip the filter"
-    assert n == 100
-
-
 def test_drop_cap_drops_mega_blocks(spark):
     rows = [(f"id{i}", "hot") for i in range(50)] + [("x", "cold"), ("y", "cold")]
     df = spark.createDataFrame(rows, "file_id string, block_key string")
     got = candidate_pairs(df, salt_cap=10, drop_cap=49)
     assert got.count() == 1  # only the cold pair survives
+    # all-singleton blocks (every key unique) give zero pairs
+    singles = spark.createDataFrame(
+        [(i, i * 1000 + 7) for i in range(200)], "fid long, block_key long"
+    ).localCheckpoint(eager=True)
+    assert candidate_pairs(singles, id_col="fid").count() == 0

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import hashlib
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -116,49 +115,6 @@ def test_simhash_majority_two_tokens(spark):
     ).collect()
     a, b = (r["h"] & (2**64 - 1) for r in hs)
     assert got == (a & b), (hex(got), hex(a), hex(b))
-
-
-def test_jw_vectorized_matches_scalar():
-    """The batch-vectorized Jaro-Winkler must agree with the scalar
-    reference on every pair — property-tested over adversarial strings
-    (repeats, transpositions, prefixes, unicode, empties)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from record_matching_spark.operators.scoring import (
-        _jaro_winkler,
-        _jw_batch,
-        _jw_batch_vec,
-    )
-
-    alphabet = st.sampled_from(list("abcXYZ/._é中0"))
-    strs = st.text(alphabet=alphabet, max_size=24)
-
-    @settings(max_examples=300, deadline=None)
-    @given(st.lists(st.tuples(strs, strs), min_size=1, max_size=12))
-    def check(pairs):
-        av = [p[0] for p in pairs]
-        bv = [p[1] for p in pairs]
-        want = [_jaro_winkler(x, y) for x, y in pairs]
-        got_vec = _jw_batch_vec(av, bv)
-        got_dedup = _jw_batch(av, bv)
-        assert np.allclose(got_vec, want, atol=1e-12), (pairs, got_vec, want)
-        assert np.allclose(got_dedup, want, atol=1e-12)
-
-    check()
-
-
-def test_jw_known_values():
-    """Classic published Jaro-Winkler cases pin the constants."""
-    from record_matching_spark.operators.scoring import _jw_batch_vec
-
-    got = _jw_batch_vec(
-        ["MARTHA", "DIXON", "abc", "", "same"],
-        ["MARHTA", "DICKSONX", "abc", "x", "same"],
-    )
-    assert abs(got[0] - 0.9611111111111111) < 1e-12
-    assert abs(got[1] - 0.8133333333333332) < 1e-10
-    assert got[2] == 1.0 and got[3] == 0.0 and got[4] == 1.0
 
 
 def test_winnow_portable_array_matches_long_form(spark):

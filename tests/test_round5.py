@@ -1,7 +1,6 @@
-"""Round-5 gates. First batch: ADVICE r4 fixes (empty-dup-slot prefilter,
-NUL-safe JW dedupe), the vectorized codepoint padding (VERDICT item 7),
-lazy hyperplane planes (item 6), C4-style line-level dedup (item 2),
-Gopher repetition signals (item 3), the embedding near-dup LSH scale path
+"""Round-5 gates. First batch: lazy hyperplane planes (VERDICT r4 item
+6), C4-style line-level dedup (item 2), Gopher repetition signals
+(item 3), the embedding near-dup LSH scale path
 (item 4), the mid-stage-kill manifest gate (item 8), span decontamination,
 PII scrub, substring dedup, packing, JSONL, HTML extraction, streaming
 decontamination. Second batch (q46-q60): unigram/bigram/Kneser-Ney LM
@@ -20,74 +19,6 @@ import json
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-
-# ----------------------------------------------------------- ADVICE fixes
-
-
-def test_prefilter_all_singleton_empty_dup_slots(spark):
-    """ADVICE r4 (medium): a 100%-singleton-key corpus produces an EMPTY
-    dup-slot set; both the explicit-slots and the auto prefilter paths must
-    return zero pairs instead of crashing on empty-schema inference."""
-    from record_matching_spark.operators.blocking import (
-        candidate_pairs, duplicate_key_bitmap, filter_blocks_by_slot_join,
-    )
-
-    blocks = spark.createDataFrame(
-        [(i, i * 1000 + 7) for i in range(200)], "fid long, block_key long"
-    ).localCheckpoint(eager=True)
-    # direct unit: empty dup_slots short-circuits to an always-false filter
-    _, lg, stats = duplicate_key_bitmap(blocks, log2_slots=20)
-    assert stats["n_dup_slots"] == 0
-    assert (
-        filter_blocks_by_slot_join(blocks, stats["dup_slots"], lg).count() == 0
-    )
-    # explicit slots engage the prefilter unconditionally
-    assert candidate_pairs(blocks, id_col="fid", prefilter_log2_slots=20).count() == 0
-    # auto mode with a cleared threshold engages on exactly this regime
-    assert (
-        candidate_pairs(
-            blocks, id_col="fid", prefilter_log2_slots="auto",
-            prefilter_auto_min_drop=0.5,
-        ).count() == 0
-    )
-
-
-def test_jw_batch_nul_strings():
-    """ADVICE r4 (low): strings containing '\\x00' must dedupe on (x, y)
-    tuples — the old NUL-joined key mis-split and scored the wrong pair."""
-    from record_matching_spark.operators.scoring import _jaro_winkler, _jw_batch
-
-    # the exact failure shape: left contains NUL, so 'a\x00b' + NUL + 'b'
-    # previously split back as ('a', 'b\x00b')
-    av = ["a\x00b", "a", "a\x00b", None]
-    bv = ["b", "\x00bb", "b", "x"]
-    got = _jw_batch(av, bv)
-    exp = np.array([_jaro_winkler(x or "", y or "") for x, y in zip(av, bv)])
-    np.testing.assert_allclose(got, exp)
-    # and through the vectorized (long-string) branch
-    la = "x" * 80 + "\x00" + "y" * 40
-    lb = "x" * 80 + "z" * 10
-    got2 = _jw_batch([la, la, lb], [lb, lb, la])
-    exp2 = np.array(
-        [_jaro_winkler(la, lb), _jaro_winkler(la, lb), _jaro_winkler(lb, la)]
-    )
-    np.testing.assert_allclose(got2, exp2)
-
-
-def test_pad_codepoints_vectorized():
-    """VERDICT r4 item 7: the batch-wide encode+scatter must agree with
-    per-string utf-32-le encoding, including unicode and empties."""
-    from record_matching_spark.operators.scoring import _pad_codepoints
-
-    strs = ["", "abc", "héllo", "日本語テキスト",
-            "a" * 50, "\x00mid\x00"]
-    M, lens = _pad_codepoints(strs)
-    assert lens.tolist() == [len(s) for s in strs]
-    for i, s in enumerate(strs):
-        exp = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
-        np.testing.assert_array_equal(M[i, : len(s)], exp)
-        assert (M[i, len(s):] == 0).all()
 
 
 # ------------------------------------------------- lazy hyperplane planes

@@ -4,12 +4,15 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from record_matching_spark.operators.normalize import normalize_files
 from record_matching_spark.operators.scoring import (
+    FEATURES,
     _jaro_winkler,
+    _jw_batch,
     pair_features,
     score_pairs,
     train_weights,
@@ -24,6 +27,60 @@ def test_jaro_winkler_known_values():
     assert _jaro_winkler("abc", "abc") == 1.0
     assert _jaro_winkler("abc", "xyz") == 0.0
     assert _jaro_winkler("", "abc") == 0.0
+
+
+def test_jw_batch_known_values():
+    """Classic published Jaro-Winkler cases pin the constants through the
+    distinct-pair memo the feature kernel calls."""
+    got = _jw_batch(
+        ["MARTHA", "DIXON", "abc", "", "same"],
+        ["MARHTA", "DICKSONX", "abc", "x", "same"],
+    )
+    assert abs(got[0] - 0.9611111111111111) < 1e-12
+    assert abs(got[1] - 0.8133333333333332) < 1e-10
+    assert got[2] == 1.0 and got[3] == 0.0 and got[4] == 1.0
+
+
+def test_jw_batch_matches_scalar():
+    """The distinct-pair memo must return the scalar reference's value for
+    every pair — property-tested over adversarial strings (repeats,
+    transpositions, prefixes, unicode, empties), each batch doubled so
+    repeats hit the memo."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    alphabet = st.sampled_from(list("abcXYZ/._é中0"))
+    strs = st.text(alphabet=alphabet, max_size=24)
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.lists(st.tuples(strs, strs), min_size=1, max_size=12))
+    def check(pairs):
+        pairs = pairs + pairs[::-1]
+        got = _jw_batch([p[0] for p in pairs], [p[1] for p in pairs])
+        want = [_jaro_winkler(x, y) for x, y in pairs]
+        assert got.tolist() == want, (pairs, got, want)
+
+    check()
+
+
+def test_jw_batch_nul_strings():
+    """Strings containing '\\x00' must dedupe on (x, y) tuples — a
+    NUL-joined key mis-splits and scores the wrong pair."""
+    # the exact failure shape: left contains NUL, so 'a\x00b' + NUL + 'b'
+    # would split back as ('a', 'b\x00b')
+    av = ["a\x00b", "a", "a\x00b", None]
+    bv = ["b", "\x00bb", "b", "x"]
+    got = _jw_batch(av, bv)
+    exp = np.array([_jaro_winkler(x or "", y or "") for x, y in zip(av, bv)])
+    np.testing.assert_allclose(got, exp)
+    # and on long strings
+    la = "x" * 80 + "\x00" + "y" * 40
+    lb = "x" * 80 + "z" * 10
+    got2 = _jw_batch([la, la, lb], [lb, lb, la])
+    exp2 = np.array(
+        [_jaro_winkler(la, lb), _jaro_winkler(la, lb), _jaro_winkler(lb, la)]
+    )
+    np.testing.assert_allclose(got2, exp2)
 
 
 def _mk_files(spark, contents):
@@ -103,6 +160,38 @@ def test_metadata_features(spark):
     assert xy["same_lang"] == 0.0 and xz["same_lang"] == 1.0
     assert xy["dir_sim"] == 1.0          # src/a == src/a
     assert xz["dir_sim"] == 0.0          # src/a vs lib/b
+
+
+def test_pair_features_plans_agree(spark, monkeypatch):
+    """The per-distinct-content-pair plan and the per-file-pair plan must
+    give every pair the same features. Forced on one dup-heavy corpus
+    (which picks the per-content plan by itself); 1e-12, not exact, because
+    _cos_jac_batch sums in an order that depends on which side is left."""
+    import record_matching_spark.operators.scoring as S
+    from record_matching_spark.operators.blocking import blocking_keys, candidate_pairs
+    from record_matching_spark.synth import repo_files, synth_repo_files_with_truth
+
+    truth = synth_repo_files_with_truth(spark, n_families=40, seed=42,
+                                        mutations_max=0, heavy_families=2)
+    norm = normalize_files(repo_files(truth)).cache()
+    n_files, n_shas = norm.agg(F.count("*"), F.count_distinct("content_sha")).first()
+    assert n_files > S.DEDUP_CONTENT_MIN_RATIO * n_shas
+    pairs = candidate_pairs(blocking_keys(norm, id_col="fid"), id_col="fid").cache()
+
+    def run(ratio):
+        monkeypatch.setattr(S, "DEDUP_CONTENT_MIN_RATIO", ratio)
+        feats = pair_features(pairs, norm, id_col="fid")
+        # only the per-content plan evaluates jw_path in a pandas UDF
+        plan = feats._jdf.queryExecution().executedPlan().toString()
+        assert ("ArrowEvalPython" in plan) == (ratio == 0.0)
+        return {(r["left"], r["right"]): r for r in feats.collect()}
+
+    per_sha, per_file = run(0.0), run(math.inf)
+    assert per_sha.keys() == per_file.keys() and len(per_sha) > 1000
+    for key, a in per_sha.items():
+        b = per_file[key]
+        for f in FEATURES:
+            assert abs(a[f] - b[f]) <= 1e-12, (key, f, a[f], b[f])
 
 
 def test_score_monotone(spark):
