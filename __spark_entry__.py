@@ -1984,8 +1984,8 @@ def oracle_sql() -> dict[str, str]:
                                      regexp_replace(u, '[.,;:!?)]+$', ''),
                                      '#.*$', ''),
                                    '([?&])utm_[A-Za-z0-9_]+=[^&#]*', '\1', 'g'),
-                                 '\?&', '?', 'g'),
-                               '&&+', '&', 'g'),
+                                 '&&+', '&', 'g'),
+                               '\?&', '?', 'g'),
                              '[?&]+$', '') AS u5
                     FROM raw)
             )

@@ -9,13 +9,36 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from record_matching_spark.operators.blocking import candidate_pairs
 from record_matching_spark.operators.minhash import minhash_bands, with_minhash_signature
 from record_matching_spark.operators.normalize import char_shingles, tokenize
+
+
+# plan node classes (logical, and physical inside cached relations) that
+# shuffle: a frame holding one already has shuffle-set parallelism. AQE
+# wraps only plans that shuffle (or hold subqueries) and hides them from
+# the walk, so its node counts as one.
+_SHUFFLE_NODES = ("Join", "Aggregate", "Sort", "Window", "Repartition",
+                  "Rebalance", "Deduplicate", "Exchange", "AdaptiveSparkPlan")
+
+
+def _shuffles(plan) -> bool:
+    """Whether any node of a JVM plan tree, cached plans included (they
+    are inner children of InMemoryRelation), is a shuffling node. Walks
+    node classes, so a column or path named like a node cannot match."""
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if any(t in name for t in _SHUFFLE_NODES):
+            return True
+        for seq in (node.children(), node.innerChildren()):
+            todo.extend(seq.apply(i) for i in range(seq.size()))
+    return False
 
 
 def _fan_out(df: DataFrame) -> DataFrame:
@@ -29,24 +52,13 @@ def _fan_out(df: DataFrame) -> DataFrame:
     this is a NO-OP — no exchange is added at cluster scale. Measured on
     the single-file sf0.1 documents table: the q19 signature pipeline drops
     from a 4.1s single-core stage to a parallel one (~8× wall)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        # only consult partition counts for shuffle-free (scan-rooted)
-        # plans: under AQE, .rdd on an exchange-bearing frame EXECUTES the
-        # upstream stages to learn the partition count (verified: one extra
-        # job) — and such inputs already carry shuffle-set parallelism
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        if any(
-            tok in plan
-            for tok in ("Join", "Aggregate", "Sort", "Window",
-                        "Repartition", "Deduplicate", "Exchange")
-        ):
-            return df
-        n = df.rdd.getNumPartitions()
-    except Exception:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    # only consult partition counts for shuffle-free (scan-rooted) plans:
+    # under AQE, .rdd on an exchange-bearing frame EXECUTES the upstream
+    # stages to learn the partition count (verified: one extra job)
+    if _shuffles(df._jdf.queryExecution().optimizedPlan()):
         return df
-    if n >= target:
+    if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
 
@@ -126,6 +138,137 @@ def ngram_jaccard_pairs(
     )
 
 
+# corpora of at most this many documents verify against a broadcast
+# payload; larger ones sort-merge the pair stream against it, the only
+# attach that is safe at scale. Tests patch it to reach that branch.
+VERIFY_BROADCAST_MAX_DOCS = 200_000
+
+# verify-payload column names of the two sides of a cross-corpus pair
+_CORPUS = ("corpus_id", "_ta", "_sha_a", "_na")
+_PROBE = ("probe_id", "_tb", "_sha_b", "_nb")
+
+
+def _tokens(text: Column, shingle_k: int | None) -> Column:
+    """Lowercased words, or character k-shingles when shingle_k is set."""
+    return char_shingles(text, shingle_k) if shingle_k is not None else tokenize(text)
+
+
+def _bands(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    num_bands: int,
+    rows_per_band: int,
+    shingle_k: int | None,
+    keep_cols: list[str] | tuple[str, ...] = (),
+) -> DataFrame:
+    """(_id, *keep_cols, block_key): every document's LSH band keys plus
+    its content-hash key, so identical texts are ALWAYS candidates
+    whatever their tokens (empty-token docs get unique sentinel
+    signatures). Stateless per row, so it runs unchanged under Structured
+    Streaming; `keep_cols` (already on df) ride along because a stream
+    cannot be re-joined to itself to attach them afterwards. No
+    array_sort: the signature is a set function of the distinct tokens,
+    so sorting the (string) tokens first is pure waste."""
+    keep = [F.col(c) for c in keep_cols]
+    toks = df.select(
+        F.col(id_col).alias("_id"),
+        F.array_distinct(_tokens(F.col(text_col), shingle_k)).alias("_t"),
+        *keep,
+    )
+    sigs = with_minhash_signature(
+        toks, tokens_col="_t", num_hashes=num_hashes, uniq_col="_id"
+    )
+    return minhash_bands(
+        sigs, id_col="_id", num_bands=num_bands, rows_per_band=rows_per_band,
+        keep_cols=list(keep_cols),
+    ).unionByName(
+        df.select(
+            F.col(id_col).alias("_id"),
+            *keep,
+            F.xxhash64(F.lit("cs"), F.col(text_col)).alias("block_key"),
+        )
+    )
+
+
+def _payload(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_k: int | None,
+    names: tuple[str, str, str, str] = ("_id", "_t", "_sha", "_n"),
+    keep_cols: list[str] | tuple[str, ...] = (),
+) -> DataFrame:
+    """The exact-verify payload, one row per document, under `names`:
+    (id, *keep_cols, sorted distinct xxhash64 token set, xxhash64 content
+    hash, set size). A long-array intersect is ~9× cheaper than a string
+    one and Jaccard is unchanged (a 64-bit collision inside one pair's
+    ~100-token union has probability ~1e-16)."""
+    i, t, sha, n = names
+    return df.select(
+        F.col(id_col).alias(i),
+        *keep_cols,
+        F.array_sort(
+            F.transform(
+                F.array_distinct(_tokens(F.col(text_col), shingle_k)),
+                lambda tok: F.xxhash64(tok),
+            )
+        ).alias(t),
+        F.xxhash64(F.col(text_col)).alias(sha),
+    ).withColumn(n, F.size(t))
+
+
+def _size_ok(threshold: float) -> Column:
+    """EXACT size prefilter on a candidate carrying both set sizes
+    (_na, _nb), cheap enough to run before the O(|A|+|B|) intersect:
+    J(A,B) ≥ t implies min(|A|,|B|)/max(|A|,|B|) ≥ t (|A∩B| ≤ min and
+    |A∪B| ≥ max). It kills the low-J candidates banded LSH inevitably
+    admits (b=32, r=4 catches ~87% of J=0.5 pairs; 70% of candidates on
+    the sf0.1 documents mega-clusters). The 1e-9 slack guards the one-ulp
+    division-rounding edge so no true pair is lost; both-empty pairs are
+    kept for the content-hash decision."""
+    return (
+        F.least("_na", "_nb").cast("double")
+        / F.greatest("_na", "_nb", F.lit(1))
+        >= F.lit(threshold - 1e-9)
+    ) | ((F.col("_na") == 0) & (F.col("_nb") == 0))
+
+
+def _verified(cand: DataFrame, threshold: float) -> DataFrame:
+    """cand plus `jaccard`, the exact Jaccard of the two payloads it
+    carries (_ta/_tb, _sha_a/_sha_b, _na/_nb), kept where ≥ threshold.
+    |A∪B| = |A| + |B| − |A∩B| (the sets are distinct), so array_union
+    never materializes. Two empty token sets are duplicates ONLY when the
+    content is identical (the tokenizer alphabet is [a-z0-9_])."""
+    inter = F.size(F.array_intersect("_ta", "_tb"))
+    empty_case = F.when(F.col("_sha_a") == F.col("_sha_b"), F.lit(1.0)).otherwise(
+        F.lit(0.0)
+    )
+    jaccard = F.when(
+        (F.col("_na") == 0) & (F.col("_nb") == 0), empty_case
+    ).otherwise(inter.cast("double") / (F.col("_na") + F.col("_nb") - inter))
+    return cand.withColumn("jaccard", jaccard).filter(F.col("jaccard") >= threshold)
+
+
+def _index(
+    df: DataFrame,
+    names: tuple[str, str, str, str],
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    num_bands: int,
+    rows_per_band: int,
+    shingle_k: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(bands, payload) of one side of a cross-corpus match, keyed by
+    names[0]."""
+    bands = _bands(
+        df, id_col, text_col, num_hashes, num_bands, rows_per_band, shingle_k
+    ).withColumnRenamed("_id", names[0])
+    return bands, _payload(df, id_col, text_col, shingle_k, names)
+
+
 def minhash_near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -135,8 +278,6 @@ def minhash_near_dup_pairs(
     num_bands: int = 32,
     rows_per_band: int = 4,
     salt_cap: int = 2000,
-    verify_exact: bool = True,
-    broadcast_features: bool | None = None,
     shingle_k: int | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs (the 100-TB-scale dedup path).
@@ -153,36 +294,13 @@ def minhash_near_dup_pairs(
     Join strategy: candidate pairs are deduped first (distinct on the two id
     columns only — cross-band duplicates would otherwise multiply the
     verification's array work), then per-doc token features are attached —
-    broadcast when the corpus is small (`broadcast_features=None` picks by
-    corpus row count), sort-merge otherwise.
+    broadcast when the corpus has at most VERIFY_BROADCAST_MAX_DOCS
+    documents, sort-merge otherwise.
     """
-    def _tok(c):
-        if shingle_k is not None:
-            return char_shingles(c, shingle_k)
-        return tokenize(c)
-
     # single-file corpora otherwise run tokenize+signature on one core
     df = _fan_out(df)
-    # no array_sort: the minhash signature is a set function of the distinct
-    # tokens, so sorting the (string) token array first is pure waste — for
-    # shingle mode that was an n·log n string sort per document
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(_tok(F.col(text_col))).alias("_t"),
-    )
-    sigs = with_minhash_signature(
-        toks, tokens_col="_t", num_hashes=num_hashes, uniq_col="_id"
-    )
-    blocks = minhash_bands(sigs, id_col="_id",
-                           num_bands=num_bands, rows_per_band=rows_per_band)
-    # content-hash block key: identical documents are ALWAYS candidates,
-    # independent of tokenization — required now that empty-token docs get
-    # unique sentinel signatures (ADVICE fix)
-    blocks = blocks.unionByName(
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.xxhash64(F.lit("cs"), F.col(text_col)).alias("block_key"),
-        )
+    blocks = _bands(
+        df, id_col, text_col, num_hashes, num_bands, rows_per_band, shingle_k
     )
     # the salted self-join scans blocks twice; materialize EAGERLY so the
     # signature UDF runs once and Catalyst/AQE plan the self-join with real
@@ -193,33 +311,14 @@ def minhash_near_dup_pairs(
     # observe() — every doc emits exactly num_bands band rows + 1
     # content-sha row, so n_docs = n_block_rows/(num_bands+1) and the join
     # strategy needs NO separate count job (VERDICT r2 item 5).
-    from pyspark.sql import Observation
-
     obs = Observation("dedup_blocks_n")
     blocks = blocks.observe(obs, F.count(F.lit(1)).alias("n"))
     blocks = blocks.localCheckpoint(eager=True)
-    if not verify_exact:
-        return candidate_pairs(blocks, id_col="_id", salt_cap=salt_cap).select(
-            "left", "right"
-        )
-    if broadcast_features is None:
-        n_docs = obs.get["n"] / (num_bands + 1)
-        broadcast_features = n_docs <= 200_000
-    # verify on xxhash64'd token arrays: long-array intersect is ~9× cheaper
-    # than string arrays and Jaccard is unchanged (a 64-bit collision inside
-    # one pair's ~100-token union has probability ~1e-16). Materialized ONCE
-    # (localCheckpoint): both verify sides and the size table read it, so
-    # tokenize runs one more time total instead of once per join side.
-    toksh = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_sort(
-            F.transform(
-                F.array_distinct(_tok(F.col(text_col))), lambda t: F.xxhash64(t)
-            )
-        ).alias("_t"),
-        F.xxhash64(F.col(text_col)).alias("_sha"),
-    ).withColumn("_n", F.size("_t")).localCheckpoint(eager=True)
-    if broadcast_features:
+    broadcast = obs.get["n"] / (num_bands + 1) <= VERIFY_BROADCAST_MAX_DOCS
+    # materialized ONCE: both verify sides and the size table read it, so
+    # tokenize runs one more time total instead of once per join side
+    toksh = _payload(df, id_col, text_col, shingle_k).localCheckpoint(eager=True)
+    if broadcast:
         # split attach (all four joins map-side broadcast): sizes+sha first
         # so the size filter runs before any array row is built
         sz_a = F.broadcast(toksh.select(
@@ -235,126 +334,25 @@ def minhash_near_dup_pairs(
     else:
         # sort-merge regime: a split attach would double the pair-stream
         # exchanges, so sizes ride with the arrays (the round-5 shape)
-        sz_a = sz_b = None
         a = toksh.select(F.col("_id").alias("left"), F.col("_t").alias("_ta"),
                          F.col("_sha").alias("_sha_a"), F.col("_n").alias("_na"))
         b = toksh.select(F.col("_id").alias("right"), F.col("_t").alias("_tb"),
                          F.col("_sha").alias("_sha_b"), F.col("_n").alias("_nb"))
     # dedup-first: cross-band duplicate pairs would multiply the (array-
     # copying) feature joins, and the pair stream is just two int64 columns —
-    # the cheapest thing in this plan to shuffle
+    # the cheapest thing in this plan to shuffle. candidate_pairs is looked
+    # up as a module global so a caller can wrap it.
     pairs = candidate_pairs(
         blocks, id_col="_id", salt_cap=salt_cap, keep_block_key=False
     )
-    # both-empty token sets: duplicate ONLY when content is identical
-    empty_case = F.when(F.col("_sha_a") == F.col("_sha_b"), F.lit(1.0)).otherwise(
-        F.lit(0.0)
-    )
-    # EXACT size prefilter before the O(|A|+|B|) intersect: J(A,B) ≥ t
-    # implies min(|A|,|B|)/max(|A|,|B|) ≥ t (since |A∩B| ≤ min and
-    # |A∪B| ≥ max). Two-int comparison kills the low-J candidates that
-    # banded LSH inevitably admits (b=32, r=4 catches ~87% of J=0.5 pairs);
-    # measured 70% of candidates cut on the sf0.1 documents mega-clusters.
-    # The 1e-9 slack guards the one-ulp division-rounding edge so no true
-    # pair is lost; both-empty pairs (_na=_nb=0 → ratio computed on 0/0)
-    # are kept via the >= on greatest(...,1) only when sizes are equal.
-    # r6 optimization: the size/sha columns attach FIRST (three int64s per
-    # side) and the filter runs BEFORE the token arrays join on, so the
-    # array-copying attach touches only size-plausible candidates (~30% of
-    # the stream on the sf0.1 mega-clusters) instead of every one.
-    size_ok = (
-        F.least("_na", "_nb").cast("double")
-        / F.greatest("_na", "_nb", F.lit(1))
-        >= F.lit(threshold - 1e-9)
-    ) | ((F.col("_na") == 0) & (F.col("_nb") == 0))
-    # |A∪B| = |A| + |B| − |A∩B| (the arrays are distinct), so array_union
-    # never needs to materialize — one set op per pair instead of two
-    inter = F.size(F.array_intersect("_ta", "_tb"))
-    union_sz = F.col("_na") + F.col("_nb") - inter
-    if broadcast_features:
-        cand = pairs.join(sz_a, "left").join(sz_b, "right").filter(size_ok)
-        cand = cand.join(a, "left").join(b, "right")
+    if broadcast:
+        # the size filter runs BEFORE the token arrays join on, so the
+        # array-copying attach touches only size-plausible candidates
+        cand = pairs.join(sz_a, "left").join(sz_b, "right")
+        cand = cand.filter(_size_ok(threshold)).join(a, "left").join(b, "right")
     else:
-        cand = pairs.join(a, "left").join(b, "right").filter(size_ok)
-    return (
-        cand.withColumn(
-            "jaccard",
-            F.when((F.col("_na") == 0) & (F.col("_nb") == 0), empty_case).otherwise(
-                inter.cast("double") / union_sz
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("left", "right", "jaccard")
-    )
-
-
-def _cc_tok(c, shingle_k: int | None):
-    return char_shingles(c, shingle_k) if shingle_k is not None else tokenize(c)
-
-
-def _cc_bands(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    num_bands: int,
-    rows_per_band: int,
-    shingle_k: int | None,
-    keep_cols: list[str] | None = None,
-) -> DataFrame:
-    """(_id, block_key[, *keep_cols]): LSH band keys + the content-sha key
-    (identical text is ALWAYS a candidate regardless of tokenization).
-    Shared by the batch and streaming decontamination paths — stateless
-    per row, so it runs unchanged under Structured Streaming. `keep_cols`
-    (already present on df) ride through both branches — the streaming
-    path carries its verify payload this way because a stream cannot be
-    re-joined to itself to attach features afterwards."""
-    keep = keep_cols or []
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_sort(
-            F.array_distinct(_cc_tok(F.col(text_col), shingle_k))
-        ).alias("_t"),
-        *(F.col(c) for c in keep),
-    )
-    sigs = with_minhash_signature(
-        toks, tokens_col="_t", num_hashes=num_hashes, uniq_col="_id"
-    )
-    b = minhash_bands(sigs, id_col="_id",
-                      num_bands=num_bands, rows_per_band=rows_per_band,
-                      keep_cols=keep)
-    return b.unionByName(
-        df.select(
-            F.col(id_col).alias("_id"),
-            *(F.col(c) for c in keep),
-            F.xxhash64(F.lit("cs"), F.col(text_col)).alias("block_key"),
-        )
-    )
-
-
-def _cc_feats(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    idname: str,
-    suf: str,
-    shingle_k: int | None,
-) -> DataFrame:
-    """(<idname>, _t<suf>, _sha_<suf>, _n<suf>): sorted distinct token
-    hashes, content hash, and token count — the exact-verify payload."""
-    return df.select(
-        F.col(id_col).alias(idname),
-        F.array_sort(
-            F.transform(
-                F.array_distinct(_cc_tok(F.col(text_col), shingle_k)),
-                lambda t: F.xxhash64(t),
-            )
-        ).alias(f"_t{suf}"),
-        F.xxhash64(F.col(text_col)).alias(f"_sha_{suf}"),
-        F.size(
-            F.array_distinct(_cc_tok(F.col(text_col), shingle_k))
-        ).alias(f"_n{suf}"),
-    )
+        cand = pairs.join(a, "left").join(b, "right").filter(_size_ok(threshold))
+    return _verified(cand, threshold).select("left", "right", "jaccard")
 
 
 def build_near_dup_index(
@@ -375,14 +373,11 @@ def build_near_dup_index(
     keys + the content-sha always-candidate key; feats = (corpus_id,
     _ta sorted distinct token hashes, _sha_a, _na) — the exact-verify
     payload. Plain flat-schema DataFrames, round-trippable through any
-    sink (test_round5 pins parquet roundtrip → identical pairs).
+    sink (test_dedup pins parquet roundtrip → identical pairs).
     Parameters must match at query time (the index is only valid for the
     banding scheme that built it)."""
-    bands = _cc_bands(
-        df, id_col, text_col, num_hashes, num_bands, rows_per_band, shingle_k
-    ).withColumnRenamed("_id", "corpus_id")
-    feats = _cc_feats(df, id_col, text_col, "corpus_id", "a", shingle_k)
-    return bands, feats
+    return _index(df, _CORPUS, id_col, text_col,
+                  num_hashes, num_bands, rows_per_band, shingle_k)
 
 
 def near_dup_pairs_against_index(
@@ -396,47 +391,23 @@ def near_dup_pairs_against_index(
     num_bands: int = 32,
     rows_per_band: int = 4,
     shingle_k: int | None = None,
-    broadcast_probe: bool = True,
 ) -> DataFrame:
     """cross_corpus_near_dup_pairs against a PREBUILT index (see
     build_near_dup_index): the probe shard's bands+features broadcast,
     the stored index crosses two map-only scans — the shape of a daily
     ingest against a 100-TB history. Banding parameters must equal the
     index's. Output: (corpus_id, probe_id, jaccard)."""
-    pb = _cc_bands(
-        probe, id_col, text_col, num_hashes, num_bands, rows_per_band, shingle_k
-    ).withColumnRenamed("_id", "probe_id")
-    pf = _cc_feats(probe, id_col, text_col, "probe_id", "b", shingle_k)
-    if broadcast_probe:
-        pb, pf = F.broadcast(pb), F.broadcast(pf)
+    pb, pf = _index(probe, _PROBE, id_col, text_col,
+                    num_hashes, num_bands, rows_per_band, shingle_k)
     cand = (
-        index_bands.join(pb, "block_key")
+        index_bands.join(F.broadcast(pb), "block_key")
         .select("corpus_id", "probe_id")
         .distinct()
+        .join(index_feats, "corpus_id")
+        .join(F.broadcast(pf), "probe_id")
+        .filter(_size_ok(threshold))
     )
-    union_sz = F.size(F.array_union("_ta", "_tb"))
-    empty_case = F.when(
-        F.col("_sha_a") == F.col("_sha_b"), F.lit(1.0)
-    ).otherwise(F.lit(0.0))
-    size_ok = (
-        F.least("_na", "_nb").cast("double")
-        / F.greatest("_na", "_nb", F.lit(1))
-        >= F.lit(threshold - 1e-9)
-    ) | ((F.col("_na") == 0) & (F.col("_nb") == 0))
-    return (
-        cand.join(index_feats, "corpus_id")
-        .join(pf, "probe_id")
-        .filter(size_ok)
-        .withColumn(
-            "jaccard",
-            F.when(union_sz == 0, empty_case).otherwise(
-                F.size(F.array_intersect("_ta", "_tb")).cast("double")
-                / union_sz
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("corpus_id", "probe_id", "jaccard")
-    )
+    return _verified(cand, threshold).select("corpus_id", "probe_id", "jaccard")
 
 
 def incremental_dedup(
@@ -507,62 +478,30 @@ def cross_corpus_near_dup_pairs(
     num_bands: int = 32,
     rows_per_band: int = 4,
     shingle_k: int | None = None,
-    broadcast_probe: bool = True,
 ) -> DataFrame:
     """Decontamination: near-duplicate pairs BETWEEN two corpora — find
     training documents that leak evaluation/benchmark content (the
     train/test-overlap removal step every large-scale training-data
     pipeline needs; no within-side pairs are emitted).
 
-    Scale shape for the real use (100-TB corpus × small benchmark set):
-    the PROBE side's LSH band keys and token-hash features broadcast
-    (benchmarks are ≤ millions of rows), so the big corpus is never
-    shuffled — it streams through band computation, a broadcast hash join
-    on band keys, and a broadcast feature attach: two map-only scans of
-    the corpus, zero corpus-sized exchanges. Candidates are exact-verified
-    with token Jaccard ≥ threshold exactly like minhash_near_dup_pairs
-    (LSH is recall machinery, not the decision); identical text across
-    corpora is ALWAYS a candidate via the content-sha key regardless of
-    tokenization. Output: (corpus_id, probe_id, jaccard).
+    The corpus is indexed on the fly (build_near_dup_index) and probed
+    with near_dup_pairs_against_index. Scale shape for the real use
+    (100-TB corpus × small benchmark set): the PROBE side's LSH band keys
+    and token-hash features broadcast (benchmarks are ≤ millions of
+    rows), so the big corpus is never shuffled — it streams through band
+    computation, a broadcast hash join on band keys, and a broadcast
+    feature attach: two map-only scans of the corpus, zero corpus-sized
+    exchanges. Candidates are exact-verified with token Jaccard ≥
+    threshold exactly like minhash_near_dup_pairs (LSH is recall
+    machinery, not the decision); identical text across corpora is ALWAYS
+    a candidate via the content-sha key regardless of tokenization.
+    Output: (corpus_id, probe_id, jaccard).
     """
-    pb = _cc_bands(
-        probe, id_col, text_col, num_hashes, num_bands, rows_per_band, shingle_k
-    ).withColumnRenamed("_id", "probe_id")
-    pf = _cc_feats(probe, id_col, text_col, "probe_id", "b", shingle_k)
-    if broadcast_probe:
-        pb, pf = F.broadcast(pb), F.broadcast(pf)
-    cand = (
-        _cc_bands(
-            corpus, id_col, text_col,
-            num_hashes, num_bands, rows_per_band, shingle_k,
-        )
-        .join(pb, "block_key")
-        .select(F.col("_id").alias("corpus_id"), "probe_id")
-        .distinct()
-    )
-    cf = _cc_feats(corpus, id_col, text_col, "corpus_id", "a", shingle_k)
-    union_sz = F.size(F.array_union("_ta", "_tb"))
-    empty_case = F.when(
-        F.col("_sha_a") == F.col("_sha_b"), F.lit(1.0)
-    ).otherwise(F.lit(0.0))
-    size_ok = (
-        F.least("_na", "_nb").cast("double")
-        / F.greatest("_na", "_nb", F.lit(1))
-        >= F.lit(threshold - 1e-9)
-    ) | ((F.col("_na") == 0) & (F.col("_nb") == 0))
-    return (
-        cand.join(cf, "corpus_id")
-        .join(pf, "probe_id")
-        .filter(size_ok)
-        .withColumn(
-            "jaccard",
-            F.when(union_sz == 0, empty_case).otherwise(
-                F.size(F.array_intersect("_ta", "_tb")).cast("double")
-                / union_sz
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("corpus_id", "probe_id", "jaccard")
+    return near_dup_pairs_against_index(
+        *build_near_dup_index(corpus, text_col, id_col,
+                              num_hashes, num_bands, rows_per_band, shingle_k),
+        probe, text_col, id_col, threshold,
+        num_hashes, num_bands, rows_per_band, shingle_k,
     )
 
 
@@ -744,7 +683,6 @@ def ngram_decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     portable: bool = False,
-    broadcast_probe: bool = True,
 ) -> DataFrame:
     """Exact n-gram decontamination (the GPT-3/PaLM mode: a training doc
     is contaminated if it shares ANY exact n-token run with a benchmark
@@ -778,9 +716,7 @@ def ngram_decontaminate(
             .distinct()
         )
 
-    pg = grams(probe).select("_gk").distinct()
-    if broadcast_probe:
-        pg = F.broadcast(pg)
+    pg = F.broadcast(grams(probe).select("_gk").distinct())
     return (
         grams(corpus)
         .join(pg, "_gk", "left_semi")

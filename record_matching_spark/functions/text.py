@@ -925,7 +925,7 @@ def extract_normalized_urls(col: Column) -> Column:
     2. trim trailing sentence punctuation ( .,;:!?) and `)`;
     3. drop the #fragment;
     4. drop utm_* tracking params, then tidy the leftover separators
-       (`?&`→`?`, `&&`→`&`, trailing `?`/`&` dropped);
+       (`&&`→`&`, then `?&`→`?`, trailing `?`/`&` dropped);
     5. lowercase the scheme+host (path/query stay case-sensitive);
     6. drop a trailing `/`."""
     urls = F.regexp_extract_all(col, F.lit(r"""https?://[^\s<>"']+"""), 0)
@@ -934,8 +934,8 @@ def extract_normalized_urls(col: Column) -> Column:
         u = F.regexp_replace(u, r"[.,;:!?)]+$", "")
         u = F.regexp_replace(u, r"#.*$", "")
         u = F.regexp_replace(u, r"([?&])utm_[A-Za-z0-9_]+=[^&#]*", r"$1")
-        u = F.regexp_replace(u, r"\?&", "?")
         u = F.regexp_replace(u, r"&&+", "&")
+        u = F.regexp_replace(u, r"\?&", "?")
         u = F.regexp_replace(u, r"[?&]+$", "")
         host = F.lower(F.regexp_extract(u, r"^(https?://[^/?#]+)", 1))
         rest = F.regexp_replace(u, r"^https?://[^/?#]+", "")
@@ -1109,7 +1109,8 @@ def quality_filter(
     Rule order (first failure wins): too_short, too_long, lang_blocked,
     low_quality, repetitive_lines, repetitive_2gram. Language comes from
     `lang_col` when given (upstream metadata) or the engine's own
-    language_id otherwise; `allowed_langs=None` disables the rule.
+    language_id otherwise; `allowed_langs=None` disables the rule and an
+    empty list blocks every language.
 
     Scale shape: the length/lang/quality rules are pure Catalyst in one
     map-only scan; the two repetition signals (Gopher rules) need a
@@ -1135,7 +1136,7 @@ def quality_filter(
         .when(F.length(t) > max_chars, "too_long")
         .when(
             ~F.col("_lang").isin(*allowed_langs)
-            if allowed_langs
+            if allowed_langs is not None
             else F.lit(False),
             "lang_blocked",
         )

@@ -126,10 +126,10 @@ def streaming_near_dup(
     """Cross-batch streaming NEAR-dup candidates: MinHash-LSH band keys with
     per-band representative state.
 
-    Streaming analog of `functions.dedup.minhash_near_dup_pairs(
-    verify_exact=False)` — the same signature → band → content-sha-key
-    recipe (reusing the batch UDFs; they are stateless per row so they run
-    unchanged under Structured Streaming), but membership is resolved
+    Streaming analog of the candidate stage of
+    `functions.dedup.minhash_near_dup_pairs` — the same signature → band →
+    content-sha-key builder (stateless per row, so it runs unchanged under
+    Structured Streaming), but membership is resolved
     against ALL history via the state store instead of a self-join: each
     band key holds its FIRST-seen doc id (its representative), and every
     later arrival on that band — same micro-batch or any later one — emits
@@ -138,8 +138,8 @@ def streaming_near_dup(
 
     verify_threshold=None (default) emits every candidate edge — exact
     verification then belongs downstream (join the edge stream against a
-    doc store). verify_threshold=τ mirrors the batch path's
-    verify-then-emit (minhash_near_dup_pairs verify_exact): the
+    doc store). verify_threshold=τ mirrors the batch path's exact
+    verify-then-emit over the same token-hash payload: the
     representative's sorted token-HASH set rides in state (packed int64
     bytes, 8 B/token), every later same-band arrival is exact-verified
     against it in-state, and a candidate below τ produces NO row; output
@@ -162,37 +162,19 @@ def streaming_near_dup(
     """
     import numpy as np
 
-    from record_matching_spark.operators.minhash import (
-        minhash_bands,
-        with_minhash_signature,
-    )
-    from record_matching_spark.operators.normalize import char_shingles, tokenize
-
-    def _tok(c):
-        return char_shingles(c, shingle_k) if shingle_k is not None else tokenize(c)
+    from record_matching_spark.functions.dedup import _bands, _payload
 
     verify = verify_threshold is not None
-    toks = stream.select(
-        F.col(id_col).cast("string").alias("_id"),
-        F.array_sort(F.array_distinct(_tok(F.col(text_col)))).alias("_t"),
-        F.xxhash64(F.lit("cs"), F.col(text_col)).alias("_cs"),
+    stream = stream.select(
+        F.col(id_col).cast("string").alias(id_col), F.col(text_col)
     )
     if verify:
-        # sorted distinct token hashes — the exact-verify payload
-        toks = toks.withColumn(
-            "_th", F.array_sort(F.transform("_t", lambda t: F.xxhash64(t)))
-        )
-    keep = ["_th"] if verify else []
-    sigs = with_minhash_signature(
-        toks, tokens_col="_t", num_hashes=num_hashes, uniq_col="_id"
-    )
-    bands = minhash_bands(
-        sigs, id_col="_id", num_bands=num_bands, rows_per_band=rows_per_band,
-        keep_cols=keep,
-    ).unionByName(
-        # identical texts are ALWAYS candidates regardless of tokenization
-        # (empty-token docs carry unique sentinel signatures, batch parity)
-        toks.select(F.col("_id"), *keep, F.col("_cs").alias("block_key"))
+        # the representative's verify payload rides through the band explode
+        stream = _payload(stream, id_col, text_col, shingle_k,
+                          (id_col, "_th", "_sha", "_n"), keep_cols=[text_col])
+    bands = _bands(
+        stream, id_col, text_col, num_hashes, num_bands, rows_per_band,
+        shingle_k, keep_cols=["_th"] if verify else [],
     )
 
     def match_fn(
@@ -280,10 +262,10 @@ def streaming_decontaminate(
     (doc_id, probe_id, jaccard) for STREAM documents that near-duplicate
     any document of a STATIC probe corpus (benchmark/eval suites) — the
     continuous-ingest form of `functions.dedup.cross_corpus_near_dup_pairs`
-    (same LSH band construction via the shared `_cc_bands`/`_cc_feats`,
-    same exact-Jaccard verify-then-emit, same content-sha identical-text
-    guarantee), so documents leaking benchmark content are flagged at
-    ingest time instead of by a later batch sweep.
+    (the same band builder, verify payload and exact-Jaccard check from
+    `functions.dedup`, same content-sha identical-text guarantee), so
+    documents leaking benchmark content are flagged at ingest time instead
+    of by a later batch sweep.
 
     Scale shape (unbounded corpus stream × bounded probe set): the probe's
     band keys and token-hash features are BATCH frames marked broadcast —
@@ -303,59 +285,27 @@ def streaming_decontaminate(
     pytest-gated: over the same data this equals
     cross_corpus_near_dup_pairs row-for-row.
     """
-    from record_matching_spark.functions.dedup import _cc_bands, _cc_feats, _cc_tok
+    from record_matching_spark.functions.dedup import (
+        _PROBE, _bands, _index, _payload, _size_ok, _verified,
+    )
 
     # the verify payload is plain column exprs over the SAME rows — attach
     # it before the band explode (a stream cannot re-join itself later)
-    enriched = stream.select(
-        F.col(id_col),
-        F.col(text_col),
-        F.array_sort(
-            F.transform(
-                F.array_distinct(_cc_tok(F.col(text_col), shingle_k)),
-                lambda t: F.xxhash64(t),
-            )
-        ).alias("_ta"),
-        F.xxhash64(F.col(text_col)).alias("_sha_a"),
-        F.size(
-            F.array_distinct(_cc_tok(F.col(text_col), shingle_k))
-        ).alias("_na"),
+    enriched = _payload(stream, id_col, text_col, shingle_k,
+                        (id_col, "_ta", "_sha_a", "_na"), keep_cols=[text_col])
+    bands = _bands(
+        enriched, id_col, text_col, num_hashes, num_bands, rows_per_band,
+        shingle_k, keep_cols=["_ta", "_sha_a", "_na"],
     )
-    bands = _cc_bands(
-        enriched, id_col, text_col,
-        num_hashes, num_bands, rows_per_band, shingle_k,
-        keep_cols=["_ta", "_sha_a", "_na"],
+    pb, pf = _index(probe, _PROBE, id_col, text_col,
+                    num_hashes, num_bands, rows_per_band, shingle_k)
+    hits = (
+        bands.join(F.broadcast(pb), "block_key")
+        .join(F.broadcast(pf), "probe_id")
+        .filter(_size_ok(threshold))
     )
-    pb = F.broadcast(
-        _cc_bands(
-            probe, id_col, text_col,
-            num_hashes, num_bands, rows_per_band, shingle_k,
-        ).withColumnRenamed("_id", "probe_id")
-    )
-    pf = F.broadcast(
-        _cc_feats(probe, id_col, text_col, "probe_id", "b", shingle_k)
-    )
-    union_sz = F.size(F.array_union("_ta", "_tb"))
-    empty_case = F.when(
-        F.col("_sha_a") == F.col("_sha_b"), F.lit(1.0)
-    ).otherwise(F.lit(0.0))
-    size_ok = (
-        F.least("_na", "_nb").cast("double")
-        / F.greatest("_na", "_nb", F.lit(1))
-        >= F.lit(threshold - 1e-9)
-    ) | ((F.col("_na") == 0) & (F.col("_nb") == 0))
     return (
-        bands.join(pb, "block_key")
-        .join(pf, "probe_id")
-        .filter(size_ok)
-        .withColumn(
-            "jaccard",
-            F.when(union_sz == 0, empty_case).otherwise(
-                F.size(F.array_intersect("_ta", "_tb")).cast("double")
-                / union_sz
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
+        _verified(hits, threshold)
         .select(F.col("_id").alias("doc_id"), "probe_id", "jaccard")
         .dropDuplicates(["doc_id", "probe_id"])
     )

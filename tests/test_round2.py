@@ -1,6 +1,6 @@
 """Round-2 operators: search (B24), normalization analogs (B10), SQL surface
-(A25), shingle-LSH dedup, empty-token dedup semantics (ADVICE), RF CV (B19),
-and the CSV source/sink round-trip (A1/A4)."""
+(A25), empty-token pair scoring (ADVICE), RF CV (B19), and the CSV
+source/sink round-trip (A1/A4)."""
 
 from __future__ import annotations
 
@@ -75,68 +75,6 @@ def test_sql_views_over_testdata(spark):
         GROUP BY r.r_name ORDER BY r.r_name
     """).collect()
     assert len(got) == 5 and sum(r["n"] for r in got) == 25
-
-
-# ------------------------------------------- shingle-LSH dedup == brute force
-
-
-def test_shingle_lsh_matches_bruteforce(spark):
-    from record_matching_spark.functions.dedup import minhash_near_dup_pairs
-    from record_matching_spark.operators.normalize import char_shingles
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    lsh = {
-        (r["left"], r["right"])
-        for r in minhash_near_dup_pairs(docs, threshold=0.9, shingle_k=8).collect()
-    }
-    sh = docs.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(char_shingles(F.col("text"), 8))).alias("_t"),
-    )
-    a = sh.select(F.col("doc_id").alias("left"), F.col("_t").alias("_ta"))
-    b = sh.select(F.col("doc_id").alias("right"), F.col("_t").alias("_tb"))
-    union = F.size(F.array_union("_ta", "_tb"))
-    brute = {
-        (r["left"], r["right"])
-        for r in a.crossJoin(b)
-        .filter(F.col("left") < F.col("right"))
-        .withColumn(
-            "j",
-            F.size(F.array_intersect("_ta", "_tb")).cast("double")
-            / F.greatest(union, F.lit(1)),
-        )
-        .filter(F.col("j") >= 0.9)
-        .collect()
-    }
-    assert lsh == brute
-
-
-# ------------------------------ ADVICE: empty-token docs are not near-dups
-
-
-def test_empty_token_docs_not_near_dups(spark):
-    from record_matching_spark.functions.dedup import (
-        minhash_near_dup_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "!!! ???"),          # tokenizes to empty
-            (2, "$$$ %%%"),          # tokenizes to empty, different content
-            (3, "!!! ???"),          # identical content to 1
-            (4, "normal english words here"),
-        ],
-        "doc_id long, text string",
-    )
-    mh = {(r["left"], r["right"]) for r in
-          minhash_near_dup_pairs(docs, threshold=0.9).collect()}
-    assert (1, 3) in mh, "identical punctuation-only docs ARE duplicates"
-    assert (1, 2) not in mh and (2, 3) not in mh, (
-        "different empty-token docs are NOT duplicates")
-    ng = {(r["left"], r["right"]) for r in
-          ngram_jaccard_pairs(docs, threshold=0.9).collect()}
-    assert (1, 3) in ng and (1, 2) not in ng
 
 
 def test_empty_token_pairs_score_low(spark):

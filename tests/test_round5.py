@@ -2,14 +2,13 @@
 6), C4-style line-level dedup (item 2), Gopher repetition signals
 (item 3), the embedding near-dup LSH scale path
 (item 4), the mid-stage-kill manifest gate (item 8), span decontamination,
-PII scrub, substring dedup, packing, JSONL, HTML extraction, streaming
-decontamination. Second batch (q46-q60): unigram/bigram/Kneser-Ney LM
-scoring, exact n-gram decontamination, mixture accounting, temperature
-resampling, keep-one near-dup dedup, quality-filter chain, global shuffle
-rank, token-balanced shards, BPE pretokenizer counting, incremental-ingest
-index, leakage-safe splitting, IVF-PQ (residual) with its recall gate, URL
-dedup, the two-level prefix-sum property gate, streaming stateless parity,
-and the two runnable end-to-end examples (ER + pretraining recipe)."""
+PII scrub, substring dedup, packing, JSONL, HTML extraction. Second batch
+(q46-q60): unigram/bigram/Kneser-Ney LM scoring, mixture accounting,
+temperature resampling, quality-filter chain, global shuffle rank,
+token-balanced shards, BPE pretokenizer counting, leakage-safe splitting,
+IVF-PQ (residual) with its recall gate, URL dedup, the two-level
+prefix-sum property gate, streaming stateless parity, and the two
+runnable end-to-end examples (ER + pretraining recipe)."""
 
 from __future__ import annotations
 
@@ -454,83 +453,6 @@ def test_jsonl_roundtrip(spark, tmp_path):
     assert {p["doc_id"] for p in parsed} == {1, 2, 3}
 
 
-# ------------------------------------------- streaming decontamination
-
-
-def test_streaming_decontaminate_parity_and_exactly_once(spark, tmp_path):
-    """streaming_decontaminate == cross_corpus_near_dup_pairs over the same
-    data (batch parity), emits exactly one row per contaminated (doc,
-    probe) pair across micro-batches INCLUDING re-deliveries, flags an
-    exact probe copy via the content-sha key, and never flags clean or
-    below-threshold docs."""
-    from record_matching_spark.functions.dedup import cross_corpus_near_dup_pairs
-    from record_matching_spark.streaming.ops import (
-        run_stream_to_parquet,
-        streaming_decontaminate,
-    )
-
-    src = tmp_path / "dc_in"
-    dst = tmp_path / "dc_out"
-    ckp = tmp_path / "dc_ck"
-    schema = "doc_id string, text string"
-
-    bench = " ".join(f"tok{i}" for i in range(60))
-    other_bench = " ".join(f"alt{i}" for i in range(60))
-    near = bench.replace("tok7 ", "zzz7 ")  # J = 59/61 ≈ 0.967
-    half = " ".join(
-        [f"tok{i}" for i in range(30)] + [f"oth{i}" for i in range(30)]
-    )  # J vs bench ≈ 0.33 — bands may collide, verify must reject
-    clean = " ".join(f"new{i}" for i in range(60))
-
-    probe = spark.createDataFrame(
-        [("P1", bench), ("P2", other_bench)], schema
-    )
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        run_stream_to_parquet(
-            streaming_decontaminate(
-                stream, probe, text_col="text", id_col="doc_id",
-                threshold=0.9,
-            ),
-            str(dst), str(ckp),
-        )
-
-    # batch 1: A ≈ P1, B clean, C == P2 verbatim
-    spark.createDataFrame(
-        [("A", near), ("B", clean), ("C", other_bench)], schema
-    ).write.parquet(str(src), mode="append")
-    run()
-    got1 = {
-        (r["doc_id"], r["probe_id"]): r["jaccard"]
-        for r in spark.read.parquet(str(dst)).collect()
-    }
-    assert set(got1) == {("A", "P1"), ("C", "P2")}, got1
-    assert abs(got1[("A", "P1")] - 59 / 61) < 1e-12
-    assert got1[("C", "P2")] == 1.0
-
-    # batch 2: A re-delivered (no duplicate row), H below τ (no row),
-    # D == P1 verbatim (new contamination)
-    spark.createDataFrame(
-        [("A", near), ("H", half), ("D", bench)], schema
-    ).write.parquet(str(src), mode="append")
-    run()
-    rows = spark.read.parquet(str(dst)).collect()
-    got2 = {(r["doc_id"], r["probe_id"]): r["jaccard"] for r in rows}
-    assert len(rows) == len(got2) == 3, rows  # exactly-once per pair
-    assert set(got2) == {("A", "P1"), ("C", "P2"), ("D", "P1")}, got2
-
-    # batch parity: the batch operator over ALL delivered docs agrees
-    all_docs = spark.read.parquet(str(src)).dropDuplicates(["doc_id"])
-    batch = {
-        (r["corpus_id"], r["probe_id"]): r["jaccard"]
-        for r in cross_corpus_near_dup_pairs(
-            all_docs, probe, text_col="text", id_col="doc_id", threshold=0.9
-        ).collect()
-    }
-    assert batch == got2
-
-
 # --------------------------------------------------------- PII scrubbing
 
 
@@ -602,37 +524,6 @@ def test_unigram_logprob_orders_rarity(spark):
     assert out[1]["n_tokens"] == 3
 
 
-def test_ngram_decontaminate_planted_leak(spark):
-    """A corpus doc embedding an exact n-token probe run is flagged with
-    the right distinct-gram count; clean docs are absent; the portable
-    (string-key) and production (xxhash64-key) modes agree."""
-    from record_matching_spark.functions.dedup import ngram_decontaminate
-
-    probe = spark.createDataFrame(
-        [(100, "the quick brown fox jumps over the lazy dog tonight")],
-        "doc_id long, text string",
-    )
-    corpus = spark.createDataFrame(
-        [
-            # contains tokens 1-10 of the probe verbatim -> for n=5 that is
-            # 6 distinct probe 5-grams
-            (1, "intro words then the quick brown fox jumps over the lazy dog tonight and more"),
-            (2, "completely unrelated text with no shared runs at all here"),
-            # shares only a 4-token run -> no 5-gram match
-            (3, "quick brown fox jumps somewhere else entirely now"),
-        ],
-        "doc_id long, text string",
-    )
-    for portable in (True, False):
-        out = {
-            r["doc_id"]: r["n_matched"]
-            for r in ngram_decontaminate(
-                corpus, probe, n=5, portable=portable
-            ).collect()
-        }
-        assert out == {1: 6}, out
-
-
 def test_mixture_report_shares(spark):
     from record_matching_spark.functions.sampling import mixture_report
 
@@ -695,30 +586,6 @@ def test_temperature_sample_properties(spark):
     assert kept2 & small_ids == kept_ids & small_ids == small_ids
 
 
-def test_near_dedup_keep_min(spark):
-    """End-to-end near-dup dedup: exact duplicate groups collapse to their
-    min id; unique docs survive as their own kept singleton."""
-    from record_matching_spark.functions.dedup import near_dedup_keep_min
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = (
-        [(i, base) for i in (7, 3, 9)]
-        + [(i, "one two three four five six seven eight nine ten") for i in (20, 21)]
-        + [(30, "totally unique words describing nothing shared anywhere else")]
-    )
-    out = {
-        r["doc_id"]: (r["cluster_id"], r["kept"])
-        for r in near_dedup_keep_min(
-            spark.createDataFrame(rows, "doc_id long, text string"),
-            threshold=0.9,
-        ).collect()
-    }
-    assert out[3] == (3, True) and out[7] == (3, False) and out[9] == (3, False)
-    assert out[20] == (20, True) and out[21] == (20, False)
-    assert out[30] == (30, True)
-    assert len(out) == 6
-
-
 def test_quality_filter_verdicts(spark):
     """Each rule fires on its planted doc; FIRST failing rule wins; docs
     passing all rules are kept; disabled rules cost nothing and never
@@ -752,6 +619,15 @@ def test_quality_filter_verdicts(spark):
     # all rules disabled -> everything passes, repetition join not needed
     all_pass = quality_filter(df).collect()
     assert all(r["kept"] for r in all_pass) and len(all_pass) == 6
+    # an empty allow-list blocks every doc that passes the length rules
+    none_allowed = {
+        r["doc_id"]: r["verdict"]
+        for r in quality_filter(
+            df, min_chars=20, allowed_langs=[], lang_col="lang"
+        ).collect()
+    }
+    assert none_allowed == {1: "too_short", 2: "lang_blocked", 3: "lang_blocked",
+                            4: "lang_blocked", 5: "lang_blocked", 6: "lang_blocked"}
 
 
 def test_global_shuffle_rank_permutation(spark):
@@ -907,76 +783,6 @@ def test_two_level_prefix_matches_sequential(spark):
         exp = np.cumsum(vals)
         assert total == int(exp[-1])
         assert got == {i: int(exp[i]) for i in range(n)}
-
-
-def test_near_dup_index_parquet_roundtrip(spark, tmp_path):
-    """The incremental-ingest contract: an index built once, written to
-    parquet, and read back must yield byte-identical pair sets to the
-    direct (recompute-history) path."""
-    from record_matching_spark.functions.dedup import (
-        build_near_dup_index, cross_corpus_near_dup_pairs,
-        near_dup_pairs_against_index,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    hist = spark.createDataFrame(
-        [(i, base if i % 3 == 0 else f"hist doc {i} with words {i * 7}")
-         for i in range(60)],
-        "doc_id long, text string",
-    )
-    new = spark.createDataFrame(
-        [(100, base), (101, "entirely novel content never seen before"),
-         (102, base + " kappa")],
-        "doc_id long, text string",
-    )
-    bands, feats = build_near_dup_index(hist)
-    bands.write.parquet(str(tmp_path / "bands"))
-    feats.write.parquet(str(tmp_path / "feats"))
-    from_disk = near_dup_pairs_against_index(
-        spark.read.parquet(str(tmp_path / "bands")),
-        spark.read.parquet(str(tmp_path / "feats")),
-        new, threshold=0.9,
-    )
-    direct = cross_corpus_near_dup_pairs(hist, new, threshold=0.9)
-    a = sorted(map(tuple, from_disk.collect()))
-    b = sorted(map(tuple, direct.collect()))
-    assert a == b and len(a) > 0
-    # every exact copy of the duplicated base doc was caught
-    assert {p for _, p, _ in a} >= {100, 102}
-
-
-def test_incremental_dedup_verdicts(spark):
-    """history_dup beats shard_dup; keep-first within the shard is by
-    lower id regardless of that doc's own verdict; novel docs are kept."""
-    from record_matching_spark.functions.dedup import (
-        build_near_dup_index, incremental_dedup,
-    )
-
-    hist = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog today")],
-        "doc_id long, text string",
-    )
-    new = spark.createDataFrame(
-        [
-            (10, "the quick brown fox jumps over the lazy dog today"),  # hist dup
-            (11, "one two three four five six seven eight nine ten"),   # kept
-            (12, "one two three four five six seven eight nine ten"),   # shard dup of 11
-            (13, "the quick brown fox jumps over the lazy dog today"),  # hist dup (also shard dup of 10 — history wins)
-            (14, "completely fresh words appearing nowhere else at all"),
-        ],
-        "doc_id long, text string",
-    )
-    bands, feats = build_near_dup_index(hist)
-    out = {
-        r["doc_id"]: (r["reason"], r["kept"])
-        for r in incremental_dedup(new, bands, feats, threshold=0.9).collect()
-    }
-    assert out[10] == ("history_dup", False)
-    assert out[11] == ("kept", True)
-    assert out[12] == ("shard_dup", False)
-    assert out[13] == ("history_dup", False)
-    assert out[14] == ("kept", True)
-    assert len(out) == 5
 
 
 def test_streaming_stateless_text_ops_parity(spark, tmp_path):
@@ -1163,6 +969,7 @@ def test_url_extract_normalize_and_dedup(spark):
         (2, "dup of it: https://www.example.com/Path/To?x=1 plus https://other.example.com/"),
         (9, "no urls here at all"),
         (3, "trailing slash http://Host.example.com/dir/ and bare http://host.example.com/dir"),
+        (7, "two utm params in a row https://t.example.com/p?utm_a=1&utm_b=2&c=3"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     norm = {
@@ -1181,6 +988,7 @@ def test_url_extract_normalize_and_dedup(spark):
         "http://host.example.com/dir",
         "http://host.example.com/dir",
     ]
+    assert norm[7] == ["https://t.example.com/p?c=3"]
     out = {
         (r["doc_id"], r["url"]): r["kept"]
         for r in url_dedup(df).collect()
@@ -1191,7 +999,8 @@ def test_url_extract_normalize_and_dedup(spark):
     assert out[(2, "https://other.example.com")] is True
     # doc 3's two spellings normalize to ONE url -> one output row, kept
     assert out[(3, "http://host.example.com/dir")] is True
-    assert len(out) == 4
+    assert out[(7, "https://t.example.com/p?c=3")] is True
+    assert len(out) == 5
 
 
 def test_pretraining_pipeline_example(spark):

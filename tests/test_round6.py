@@ -9,9 +9,6 @@ internals is pinned to the round-5 semantics here.
   must equal the raw stream's.
 - connected components dropped large-star's per-round distinct — component
   assignments on duplicate-heavy / high-diameter graphs must be exact.
-- minhash_near_dup_pairs verifies via |A∪B| = |A|+|B|−|A∩B| with a split
-  size-first attach — pair sets and jaccard VALUES must equal the
-  brute-force oracle's.
 """
 
 from __future__ import annotations
@@ -125,22 +122,3 @@ def test_cc_exact_on_dup_heavy_graph(spark):
         assert got[n] == 0
     for n in range(100, 161):
         assert got[n] == 100
-
-
-def test_minhash_jaccard_values_match_oracle(spark):
-    """The na+nb−inter union rewrite and the split size-first attach must
-    leave pair sets AND jaccard values identical to brute force."""
-    from record_matching_spark.functions.dedup import (
-        minhash_near_dup_pairs, ngram_jaccard_pairs,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    got = {
-        (r["left"], r["right"]): r["jaccard"]
-        for r in minhash_near_dup_pairs(docs, threshold=0.8).collect()
-    }
-    want = {
-        (r["left"], r["right"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, threshold=0.8).collect()
-    }
-    assert got == want  # exact doubles: same ints divided in both plans
