@@ -514,8 +514,9 @@ def ivfpq_cosine_topk(
     sub = dim // m
 
     # deterministic hash-sample for quantizer TRAINING only; id-sorted so
-    # the training set (hence centroids) is independent of partitioning
-    mod = max(1, n_rows // train_cap)
+    # the training set (hence centroids) is independent of partitioning;
+    # ceiling division keeps the expected sample at or below train_cap
+    mod = max(1, -(-n_rows // train_cap))
     train = corpus_n.select("neighbor_id", "_nva")
     if mod > 1:
         train = train.filter(

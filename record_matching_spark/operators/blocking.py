@@ -21,10 +21,33 @@ tests/test_blocking.py::test_salting_pair_set_equivalence).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import time
+
+from pyspark.serializers import CPickleSerializer
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from record_matching_spark.operators.minhash import minhash_bands, with_minhash_signature
+
+
+# Longest wait for an observe() row after its action has finished. The row
+# arrives through the listener bus, normally within milliseconds; a bus that
+# drops the event must not hang the caller.
+OBSERVE_TIMEOUT_S = 10.0
+
+
+def _observed_row(obs: Observation, timeout_s: float = OBSERVE_TIMEOUT_S) -> dict | None:
+    """The metrics of `obs` as a dict, or None if they have not arrived
+    within `timeout_s` (`Observation.get` waits without a bound). Each JVM
+    read (`getRowOrEmpty`) waits at most 100 ms."""
+    deadline = time.monotonic() + timeout_s
+    while True:
+        row = obs._jo.getRowOrEmpty()
+        if not row.isEmpty():
+            utils = obs._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+            return CPickleSerializer().loads(utils.toPyRow(row.get())).asDict()
+        if time.monotonic() >= deadline:
+            return None
 
 
 def token_sorted_key(tokens_col: str = "tokens", first_k: int = 24) -> F.Column:
@@ -150,8 +173,6 @@ def candidate_pairs(
     id_is_long = dict(b.dtypes).get(id_col) == "bigint"
     obs = None
     if dedup and persist_blocks and id_is_long:
-        from pyspark.sql import Observation
-
         obs = Observation()
         b = b.observe(
             obs, F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
@@ -171,14 +192,14 @@ def candidate_pairs(
         # themselves (the staged pipeline's parquet checkpoint does exactly
         # this, pipeline.py s3_blocks).
         b = b.localCheckpoint(eager=True)
-    narrow = False
-    if obs is not None:
-        row = obs.get
-        narrow = (
-            row["lo"] is not None
-            and -(1 << 31) <= row["lo"]
-            and row["hi"] < (1 << 31)
-        )
+    # no bounds within the timeout → keep the ids wide (same pairs)
+    row = _observed_row(obs) if obs is not None else None
+    narrow = (
+        row is not None
+        and row["lo"] is not None
+        and -(1 << 31) <= row["lo"]
+        and row["hi"] < (1 << 31)
+    )
     id_expr = F.col(id_col).cast("int") if narrow else F.col(id_col)
 
     a_side = b.withColumn(

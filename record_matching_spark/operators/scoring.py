@@ -205,14 +205,14 @@ def sha_features(files: DataFrame, tokens_col: str = "tokens") -> DataFrame:
         # vocab ≪ corpus: ship the idf table to executors as two sorted
         # numpy arrays and finish entirely map-side. The only shuffle in
         # this whole operator is the vocab-sized tid→df aggregate.
-        df_rows = (
+        vocab = (
             stage1.select(F.explode("tid").alias("tid"))
             .groupBy("tid")
             .agg(F.count(F.lit(1)).alias("df"))
-            .collect()
+            .toArrow()
         )
-        vt = np.array([r["tid"] for r in df_rows], dtype=np.int64)
-        vdf = np.array([r["df"] for r in df_rows], dtype=np.float64)
+        vt = vocab.column("tid").to_numpy().astype(np.int64)
+        vdf = vocab.column("df").to_numpy().astype(np.float64)
         order = np.argsort(vt)
         vt, vdf = vt[order], vdf[order]
         bc = files.sparkSession.sparkContext.broadcast((vt, vdf))

@@ -14,9 +14,11 @@ Parquet directory and the per-stage CLI restarts anywhere,
   s7_clusters     large-star/small-star transitive closure (main.py:629-651)
 
 Every stage writes Parquet + a _manifest.json carrying rows, wall_ms,
-per-partition row counts (lineage), and the config fingerprint; a rerun
-skips stages whose manifest matches — so a killed run resumes where it
-died (north-rule resumability requirement).
+per-partition row counts (lineage), codegen_compiles (generated classes
+compiled while building and writing the stage; 0 when a repeat run in the
+same session finds every query shape in the codegen cache) and the config
+fingerprint; a rerun skips stages whose manifest matches — so a killed run
+resumes where it died (north-rule resumability requirement).
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ from record_matching_spark.operators.scoring import (
     score_pairs,
     sha_features,
 )
+from record_matching_spark.session import codegen_compiles
 
 MANIFEST = "_manifest.json"
 
@@ -131,9 +134,12 @@ class Pipeline:
         # the fingerprint before staging, so resume invalidation is intact.
         return self._input_fp is None or m.get("input_fp") == self._input_fp
 
-    def _write_stage(self, stage: str, df: DataFrame) -> DataFrame:
-        """Materialize a stage: parquet + manifest with per-partition lineage."""
+    def _write_stage(self, stage: str, build) -> DataFrame:
+        """Materialize a stage: parquet + manifest with per-partition lineage
+        and the generated classes compiled while building and writing it."""
         out = self._path(stage)
+        compiles0 = codegen_compiles(self.spark)
+        df = build()
         t0 = time.monotonic()
         df.write.mode("overwrite").parquet(str(out / "data"))
         back = self.spark.read.parquet(str(out / "data"))
@@ -145,19 +151,22 @@ class Pipeline:
         ]
         rows = sum(p["rows"] for p in part_counts)
         wall_ms = int((time.monotonic() - t0) * 1000)
+        compiles = codegen_compiles(self.spark) - compiles0
         manifest = {
             "stage": stage,
             "complete": True,
             "rows": rows,
             "wall_ms": wall_ms,
             "partitions": part_counts,
+            "codegen_compiles": compiles,
             "config": self.config.fingerprint(),
             "input_fp": self._input_fp,
             "written_at": time.time(),
         }
         (out / MANIFEST).write_text(json.dumps(manifest, indent=1))
         self.stage_metrics[stage] = {"rows": rows, "wall_ms": wall_ms,
-                                     "n_partitions": len(part_counts)}
+                                     "n_partitions": len(part_counts),
+                                     "codegen_compiles": compiles}
         return back
 
     def _read_stage(self, stage: str) -> DataFrame:
@@ -167,7 +176,7 @@ class Pipeline:
         if self._is_done(stage):
             self.stage_metrics[stage] = {"resumed": True}
             return self._read_stage(stage)
-        return self._write_stage(stage, build())
+        return self._write_stage(stage, build)
 
     # ------------------------------------------------------------ the run
 

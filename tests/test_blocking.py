@@ -3,6 +3,8 @@ pair-set equivalence (FIXTURES.md §5)."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -83,3 +85,38 @@ def test_drop_cap_drops_mega_blocks(spark):
         [(i, i * 1000 + 7) for i in range(200)], "fid long, block_key long"
     ).localCheckpoint(eager=True)
     assert candidate_pairs(singles, id_col="fid").count() == 0
+
+
+def test_missing_bounds_keep_ids_wide(spark, monkeypatch):
+    """candidate_pairs reads the id bounds with a bounded wait; when they do
+    not arrive it keeps the ids wide and gives the int32-narrowed run's
+    pairs. An observation whose action never ran reads as None in time."""
+    from pyspark.sql import Observation
+
+    from record_matching_spark.operators import blocking
+
+    rows = [(i, i % 7) for i in range(60)] + [(i, 100 + i % 3) for i in range(60, 90)]
+    df = spark.createDataFrame(rows, "fid long, block_key long")
+
+    def pairs():
+        out = blocking.candidate_pairs(df, id_col="fid", salt_cap=4)
+        return out.dtypes, sorted(tuple(r) for r in out.collect())
+
+    seen = []
+    read = blocking._observed_row
+
+    def recording(obs):
+        seen.append(read(obs))
+        return seen[-1]
+
+    monkeypatch.setattr(blocking, "_observed_row", recording)
+    narrowed = pairs()
+    assert seen == [{"lo": 0, "hi": 89}]  # fits int32: the narrowed plan ran
+    monkeypatch.setattr(blocking, "_observed_row", lambda obs: None)
+    assert pairs() == narrowed and len(narrowed[1]) > 0
+
+    never = Observation()
+    df.observe(never, F.count(F.lit(1)).alias("n"))
+    t0 = time.monotonic()
+    assert read(never, timeout_s=0.3) is None
+    assert time.monotonic() - t0 < 5

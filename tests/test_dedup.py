@@ -107,6 +107,35 @@ def test_minhash_verify_attach_shapes_agree(spark, monkeypatch):
     assert sort_merge == broadcast and len(broadcast) > 0
 
 
+def test_rerun_compiles_no_new_code(spark):
+    """The near-dup workload (minhash_near_dup_pairs, then connected
+    components over the verified pairs) compiles about 100 generated
+    classes; the session's codegen cache holds them all, so a second run
+    compiles none and gives the same pairs and groups."""
+    from record_matching_spark.functions.dedup import minhash_near_dup_pairs
+    from record_matching_spark.operators.cluster import cluster_assignments
+    from record_matching_spark.session import codegen_compiles
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+
+    def run():
+        before = codegen_compiles(spark)
+        pairs = minhash_near_dup_pairs(docs, threshold=0.8)
+        edges = pairs.select(F.col("left").alias("src"),
+                             F.col("right").alias("dst"))
+        out = (
+            sorted(tuple(r) for r in pairs.collect()),
+            sorted(tuple(r) for r in
+                   cluster_assignments(edges, docs, "doc_id").collect()),
+        )
+        return out, codegen_compiles(spark) - before
+
+    first, _ = run()
+    second, compiles = run()
+    assert compiles == 0, f"second run compiled {compiles} classes"
+    assert second == first and len(first[0]) > 0
+
+
 def test_fan_out_walks_plan_nodes(spark, tmp_path):
     """A single-partition scan is spread to defaultParallelism even when a
     column name reads like a plan node; a frame that already shuffles

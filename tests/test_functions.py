@@ -131,6 +131,29 @@ def test_ivf_topk_recall(spark, emb):
     assert recall >= 0.85, f"IVF recall {recall:.3f}"
 
 
+def test_ivfpq_training_sample_within_cap(spark, monkeypatch):
+    """The quantizers train on a hash sample of about train_cap vectors at
+    most: 250 vectors with train_cap=100 keep one id in three (ceiling
+    division), not one in two (~125 rows)."""
+    from record_matching_spark.functions import similarity
+
+    rng = np.random.RandomState(7)
+    rows = [(i, [float(x) for x in rng.normal(size=16)]) for i in range(250)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    sizes = []
+    lloyd = similarity._lloyd
+
+    def capture(X, k, iters, seed):
+        sizes.append(X.shape[0])
+        return lloyd(X, k, iters, seed)
+
+    monkeypatch.setattr(similarity, "_lloyd", capture)
+    out = similarity.ivfpq_cosine_topk(corpus, corpus, k=3, n_cells=4,
+                                       n_probe=2, m=4, nbits=4, train_cap=100)
+    assert out.count() > 0
+    assert sizes and all(0 < n <= 100 for n in sizes), sizes
+
+
 def test_embedding_near_dups_symmetric_threshold(spark):
     rows = [
         (1, [1.0, 0.0, 0.0], 0),

@@ -20,7 +20,8 @@ from record_matching_spark.operators.evaluate import (
 )
 from record_matching_spark.operators.normalize import assert_sha_invariant
 from record_matching_spark.operators.scoring import choose_threshold, score_pairs, train_weights
-from record_matching_spark.pipeline import Pipeline, PipelineConfig
+from record_matching_spark.pipeline import MANIFEST, Pipeline, PipelineConfig
+from record_matching_spark.session import codegen_compiles
 from record_matching_spark.synth import entity_truth, labeled_pairs, repo_files
 
 
@@ -74,6 +75,32 @@ def test_manifests_and_lineage(run):
         assert m["complete"] and m["rows"] > 0
         assert isinstance(m["partitions"], list) and len(m["partitions"]) >= 1
         assert sum(p["rows"] for p in m["partitions"]) == m["rows"]
+        assert isinstance(m["codegen_compiles"], int) and m["codegen_compiles"] >= 0
+        assert run["pipe"].stage_metrics[stage]["codegen_compiles"] == m["codegen_compiles"]
+    metrics = json.loads((run["work"] / "metrics.json").read_text())
+    assert all("codegen_compiles" in metrics[s] for s in Pipeline.STAGES)
+
+
+def test_rerun_compiles_no_new_code(spark, truth_df, tmp_path_factory):
+    """One pipeline run compiles more generated classes than Spark's default
+    100-entry codegen cache holds (at 100 entries a second run recompiled
+    146). get_spark sizes the cache to the plan set, so a second run in
+    fresh workdirs compiles none: the JVM-wide compile count does not move
+    and every stage manifest records 0."""
+    files = repo_files(truth_df)
+    runs = []
+    for name in ("rerun_1", "rerun_2"):
+        work = tmp_path_factory.mktemp(name)
+        before = codegen_compiles(spark)
+        clusters = Pipeline(spark, work, PipelineConfig(tau=0.5)).run(files)
+        rows = sorted(tuple(r) for r in clusters.collect())
+        runs.append((work, codegen_compiles(spark) - before, rows))
+    (_, _, first), (work, compiles, second) = runs
+    assert compiles == 0, f"second run compiled {compiles} classes"
+    for stage in Pipeline.STAGES:
+        m = json.loads((work / stage / MANIFEST).read_text())
+        assert m["codegen_compiles"] == 0, (stage, m["codegen_compiles"])
+    assert second == first and len(first) > 0
 
 
 def test_resume_after_kill(run, spark, truth_df, tmp_path_factory):
