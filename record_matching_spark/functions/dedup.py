@@ -13,8 +13,9 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from record_matching_spark import session
 from record_matching_spark.operators.blocking import candidate_pairs
-from record_matching_spark.operators.minhash import minhash_bands, with_minhash_signature
+from record_matching_spark.operators.minhash import minhash_bands
 from record_matching_spark.operators.normalize import char_shingles, tokenize
 
 
@@ -157,7 +158,6 @@ def _bands(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int,
     num_bands: int,
     rows_per_band: int,
     shingle_k: int | None,
@@ -177,12 +177,9 @@ def _bands(
         F.array_distinct(_tokens(F.col(text_col), shingle_k)).alias("_t"),
         *keep,
     )
-    sigs = with_minhash_signature(
-        toks, tokens_col="_t", num_hashes=num_hashes, uniq_col="_id"
-    )
     return minhash_bands(
-        sigs, id_col="_id", num_bands=num_bands, rows_per_band=rows_per_band,
-        keep_cols=list(keep_cols),
+        toks, id_col="_id", tokens_col="_t", num_bands=num_bands,
+        rows_per_band=rows_per_band, keep_cols=keep_cols,
     ).unionByName(
         df.select(
             F.col(id_col).alias("_id"),
@@ -256,7 +253,6 @@ def _index(
     names: tuple[str, str, str, str],
     id_col: str,
     text_col: str,
-    num_hashes: int,
     num_bands: int,
     rows_per_band: int,
     shingle_k: int | None,
@@ -264,7 +260,7 @@ def _index(
     """(bands, payload) of one side of a cross-corpus match, keyed by
     names[0]."""
     bands = _bands(
-        df, id_col, text_col, num_hashes, num_bands, rows_per_band, shingle_k
+        df, id_col, text_col, num_bands, rows_per_band, shingle_k
     ).withColumnRenamed("_id", names[0])
     return bands, _payload(df, id_col, text_col, shingle_k, names)
 
@@ -274,7 +270,6 @@ def minhash_near_dup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.8,
-    num_hashes: int = 128,
     num_bands: int = 32,
     rows_per_band: int = 4,
     salt_cap: int = 2000,
@@ -299,9 +294,7 @@ def minhash_near_dup_pairs(
     """
     # single-file corpora otherwise run tokenize+signature on one core
     df = _fan_out(df)
-    blocks = _bands(
-        df, id_col, text_col, num_hashes, num_bands, rows_per_band, shingle_k
-    )
+    blocks = _bands(df, id_col, text_col, num_bands, rows_per_band, shingle_k)
     # the salted self-join scans blocks twice; materialize EAGERLY so the
     # signature UDF runs once and Catalyst/AQE plan the self-join with real
     # sizes. localCheckpoint (not persist): auto-released when the plan is
@@ -310,11 +303,16 @@ def minhash_near_dup_pairs(
     # The corpus row count rides the SAME materialization action via
     # observe() — every doc emits exactly num_bands band rows + 1
     # content-sha row, so n_docs = n_block_rows/(num_bands+1) and the join
-    # strategy needs NO separate count job (VERDICT r2 item 5).
+    # strategy needs NO separate count job (VERDICT r2 item 5). No count
+    # within the timeout → the sort-merge attach, safe at any size.
     obs = Observation("dedup_blocks_n")
     blocks = blocks.observe(obs, F.count(F.lit(1)).alias("n"))
     blocks = blocks.localCheckpoint(eager=True)
-    broadcast = obs.get["n"] / (num_bands + 1) <= VERIFY_BROADCAST_MAX_DOCS
+    row = session.observed_row(obs)
+    broadcast = (
+        row is not None
+        and row["n"] / (num_bands + 1) <= VERIFY_BROADCAST_MAX_DOCS
+    )
     # materialized ONCE: both verify sides and the size table read it, so
     # tokenize runs one more time total instead of once per join side
     toksh = _payload(df, id_col, text_col, shingle_k).localCheckpoint(eager=True)
@@ -342,9 +340,7 @@ def minhash_near_dup_pairs(
     # copying) feature joins, and the pair stream is just two int64 columns —
     # the cheapest thing in this plan to shuffle. candidate_pairs is looked
     # up as a module global so a caller can wrap it.
-    pairs = candidate_pairs(
-        blocks, id_col="_id", salt_cap=salt_cap, keep_block_key=False
-    )
+    pairs = candidate_pairs(blocks, id_col="_id", salt_cap=salt_cap)
     if broadcast:
         # the size filter runs BEFORE the token arrays join on, so the
         # array-copying attach touches only size-plausible candidates
@@ -359,7 +355,6 @@ def build_near_dup_index(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 128,
     num_bands: int = 32,
     rows_per_band: int = 4,
     shingle_k: int | None = None,
@@ -377,7 +372,7 @@ def build_near_dup_index(
     Parameters must match at query time (the index is only valid for the
     banding scheme that built it)."""
     return _index(df, _CORPUS, id_col, text_col,
-                  num_hashes, num_bands, rows_per_band, shingle_k)
+                  num_bands, rows_per_band, shingle_k)
 
 
 def near_dup_pairs_against_index(
@@ -387,7 +382,6 @@ def near_dup_pairs_against_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.8,
-    num_hashes: int = 128,
     num_bands: int = 32,
     rows_per_band: int = 4,
     shingle_k: int | None = None,
@@ -398,7 +392,7 @@ def near_dup_pairs_against_index(
     ingest against a 100-TB history. Banding parameters must equal the
     index's. Output: (corpus_id, probe_id, jaccard)."""
     pb, pf = _index(probe, _PROBE, id_col, text_col,
-                    num_hashes, num_bands, rows_per_band, shingle_k)
+                    num_bands, rows_per_band, shingle_k)
     cand = (
         index_bands.join(F.broadcast(pb), "block_key")
         .select("corpus_id", "probe_id")
@@ -417,7 +411,6 @@ def incremental_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.8,
-    num_hashes: int = 128,
     num_bands: int = 32,
     rows_per_band: int = 4,
     shingle_k: int | None = None,
@@ -437,7 +430,7 @@ def incremental_dedup(
     hist = (
         near_dup_pairs_against_index(
             index_bands, index_feats, new_df, text_col, id_col, threshold,
-            num_hashes, num_bands, rows_per_band, shingle_k,
+            num_bands, rows_per_band, shingle_k,
         )
         .select(F.col("probe_id").alias(id_col))
         .distinct()
@@ -446,8 +439,8 @@ def incremental_dedup(
     within = (
         minhash_near_dup_pairs(
             new_df, text_col=text_col, id_col=id_col, threshold=threshold,
-            num_hashes=num_hashes, num_bands=num_bands,
-            rows_per_band=rows_per_band, shingle_k=shingle_k,
+            num_bands=num_bands, rows_per_band=rows_per_band,
+            shingle_k=shingle_k,
         )
         .select(F.col("right").alias(id_col))
         .distinct()
@@ -474,7 +467,6 @@ def cross_corpus_near_dup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.8,
-    num_hashes: int = 128,
     num_bands: int = 32,
     rows_per_band: int = 4,
     shingle_k: int | None = None,
@@ -499,9 +491,9 @@ def cross_corpus_near_dup_pairs(
     """
     return near_dup_pairs_against_index(
         *build_near_dup_index(corpus, text_col, id_col,
-                              num_hashes, num_bands, rows_per_band, shingle_k),
+                              num_bands, rows_per_band, shingle_k),
         probe, text_col, id_col, threshold,
-        num_hashes, num_bands, rows_per_band, shingle_k,
+        num_bands, rows_per_band, shingle_k,
     )
 
 

@@ -243,7 +243,13 @@ def _two_level_prefix(
         .sortWithinPartitions(*sort_cols)
         .withColumn("_pid", F.spark_partition_id())
     )
-    w = Window.partitionBy("_pid").orderBy(*sort_cols)
+    # ROWS frame: under the default RANGE frame, rows with tied sort keys
+    # would share one running sum
+    w = (
+        Window.partitionBy("_pid")
+        .orderBy(*sort_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
     # eager: the totals collect below and the final join both read this —
     # an un-pinned lazy checkpoint left the range-partition + sort open to
     # recomputation depending on which action ran first (VERDICT r5 nit)

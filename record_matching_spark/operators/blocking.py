@@ -21,33 +21,11 @@ tests/test_blocking.py::test_salting_pair_set_equivalence).
 
 from __future__ import annotations
 
-import time
-
-from pyspark.serializers import CPickleSerializer
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from record_matching_spark.operators.minhash import minhash_bands, with_minhash_signature
-
-
-# Longest wait for an observe() row after its action has finished. The row
-# arrives through the listener bus, normally within milliseconds; a bus that
-# drops the event must not hang the caller.
-OBSERVE_TIMEOUT_S = 10.0
-
-
-def _observed_row(obs: Observation, timeout_s: float = OBSERVE_TIMEOUT_S) -> dict | None:
-    """The metrics of `obs` as a dict, or None if they have not arrived
-    within `timeout_s` (`Observation.get` waits without a bound). Each JVM
-    read (`getRowOrEmpty`) waits at most 100 ms."""
-    deadline = time.monotonic() + timeout_s
-    while True:
-        row = obs._jo.getRowOrEmpty()
-        if not row.isEmpty():
-            utils = obs._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
-            return CPickleSerializer().loads(utils.toPyRow(row.get())).asDict()
-        if time.monotonic() >= deadline:
-            return None
+from record_matching_spark import session
+from record_matching_spark.operators.minhash import minhash_bands
 
 
 def token_sorted_key(tokens_col: str = "tokens", first_k: int = 24) -> F.Column:
@@ -70,44 +48,35 @@ def blocking_keys(
     files: DataFrame,
     id_col: str = "file_id",
     tokens_col: str = "tokens",
-    use_minhash: bool = True,
-    use_token_sorted: bool = True,
-    use_content_sha: bool = True,
-    num_hashes: int = 128,
     num_bands: int = 32,
     rows_per_band: int = 4,
     minhash_seed: int = 1,
 ) -> DataFrame:
-    """(id, block_key) long table — union of the enabled blocking signals."""
+    """(id, block_key) long table — the union of three key families: the
+    exact content-sha key (when `files` has content_sha), the token-sorted
+    key and the MinHash-LSH band keys (num_bands × rows_per_band hashes)."""
     parts: list[DataFrame] = []
-    if use_content_sha and "content_sha" in files.columns:
+    if "content_sha" in files.columns:
         parts.append(
             files.select(
                 F.col(id_col),
                 F.xxhash64(F.lit("cs"), F.col("content_sha")).alias("block_key"),
             )
         )
-    if use_token_sorted:
-        # empty-token files must not all share the hash-of-empty-string key
-        # (same ADVICE fix as the minhash sentinel); identical-content pairs
-        # are still caught by the content-sha key above
-        key = F.when(
-            F.size(F.col(tokens_col)) > 0, token_sorted_key(tokens_col)
-        ).otherwise(F.xxhash64(F.lit("ts-empty"), F.col(id_col)))
-        parts.append(files.select(F.col(id_col), key.alias("block_key")))
-    if use_minhash:
-        sigs = with_minhash_signature(
-            files.select(id_col, tokens_col),
-            tokens_col=tokens_col,
-            num_hashes=num_hashes,
-            seed=minhash_seed,
-            uniq_col=id_col,  # empty-token files never share an LSH block
+    # empty-token files must not all share the hash-of-empty-string key
+    # (same ADVICE fix as the minhash sentinel); identical-content pairs
+    # are still caught by the content-sha key above
+    key = F.when(
+        F.size(F.col(tokens_col)) > 0, token_sorted_key(tokens_col)
+    ).otherwise(F.xxhash64(F.lit("ts-empty"), F.col(id_col)))
+    parts.append(files.select(F.col(id_col), key.alias("block_key")))
+    parts.append(
+        minhash_bands(
+            files.select(id_col, tokens_col), id_col=id_col,
+            tokens_col=tokens_col, num_bands=num_bands,
+            rows_per_band=rows_per_band, seed=minhash_seed,
         )
-        parts.append(
-            minhash_bands(
-                sigs, id_col=id_col, num_bands=num_bands, rows_per_band=rows_per_band
-            )
-        )
+    )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -119,8 +88,6 @@ def candidate_pairs(
     id_col: str = "file_id",
     salt_cap: int = 1000,
     drop_cap: int | None = None,
-    dedup: bool = True,
-    keep_block_key: bool = True,
     persist_blocks: bool = True,
 ) -> DataFrame:
     """Distinct candidate pairs (left < right) from a (id, block_key) table.
@@ -136,11 +103,9 @@ def candidate_pairs(
       (the reference's k-neighbor cap plays this role, claude_poc/
       entity-resolution_v4.py:313).
 
-    Output: (left, right, block_key) with block_key = the minimum key that
-    produced the pair (deterministic representative). With dedup=False the
-    raw pair stream is returned (a pair may repeat, once per shared block) —
-    cheaper when a downstream filter shrinks the stream before its own
-    dedup (verify-then-dedup, see functions/dedup.py).
+    Output: (left, right), each pair once however many blocks the two ids
+    share — the reference's `filtered` table (context.py:80-85). Ids keep
+    the type of `id_col`.
     """
     # repartition FIRST so the census window reuses the same hash
     # partitioning instead of shuffling twice (one exchange total).
@@ -172,7 +137,7 @@ def candidate_pairs(
     # ER fid path) never fit, so this is dormant there by construction.
     id_is_long = dict(b.dtypes).get(id_col) == "bigint"
     obs = None
-    if dedup and persist_blocks and id_is_long:
+    if persist_blocks and id_is_long:
         obs = Observation()
         b = b.observe(
             obs, F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
@@ -193,7 +158,7 @@ def candidate_pairs(
         # this, pipeline.py s3_blocks).
         b = b.localCheckpoint(eager=True)
     # no bounds within the timeout → keep the ids wide (same pairs)
-    row = _observed_row(obs) if obs is not None else None
+    row = session.observed_row(obs) if obs is not None else None
     narrow = (
         row is not None
         and row["lo"] is not None
@@ -224,11 +189,8 @@ def candidate_pairs(
         .select(
             F.least("_l", "_r").alias("left"),
             F.greatest("_l", "_r").alias("right"),
-            "block_key",
         )
     )
-    if not dedup:
-        return raw if keep_block_key else raw.select("left", "right")
     # Pair dedup, exchange-first (r6 optimization, guide §2.5/§5): the raw
     # pair stream is quadratic per block and SKEWED per join task (one
     # mega-band's task can emit 10-100× the median), so a map-side partial
@@ -247,26 +209,12 @@ def candidate_pairs(
         n_part, 2 * blocks.sparkSession.sparkContext.defaultParallelism
     )
 
-    def _widen(df: DataFrame) -> DataFrame:
-        # undo the int32 transport narrowing: output ids keep their
-        # original type (values are identical — the cast was lossless)
-        if not narrow:
-            return df
-        return df.withColumns(
-            {"left": F.col("left").cast("bigint"),
-             "right": F.col("right").cast("bigint")}
-        )
-
-    if not keep_block_key:
-        # shuffles only the two id columns — cheaper when the caller doesn't
-        # need the block provenance (e.g. dedup verification)
-        return _widen(
-            raw.select("left", "right")
-            .repartition(pair_parts, "left", "right")
-            .distinct()
-        )
-    return _widen(
-        raw.repartition(pair_parts, "left", "right")
-        .groupBy("left", "right")
-        .agg(F.min("block_key").alias("block_key"))
+    out = raw.repartition(pair_parts, "left", "right").distinct()
+    if not narrow:
+        return out
+    # undo the int32 transport narrowing: output ids keep their original
+    # type (values are identical — the cast was lossless)
+    return out.withColumns(
+        {"left": F.col("left").cast("bigint"),
+         "right": F.col("right").cast("bigint")}
     )

@@ -22,8 +22,9 @@ Round-cost design (round-3 rework, VERDICT r2 item 2; round-6 trim):
   emit duplicate rows (bounded by in-degree); small-star's windows are
   duplicate-insensitive and its distinct re-canonicalizes the round;
 - the convergence fingerprint rides the SAME action that materializes the
-  per-round localCheckpoint (`df.observe` + eager checkpoint), so the
-  extra full pass per round that _fingerprint() used to cost is gone;
+  per-round localCheckpoint (`df.observe` + eager checkpoint), so a round
+  pays the standalone _fingerprint() pass only when the observed row does
+  not arrive within the bounded wait;
 - lineage is truncated with localCheckpoint every round (iterative
   self-joins otherwise double the plan each iteration — SURVEY.md §7.4
   risk 3). localCheckpoint stores partitions non-replicated: on a
@@ -36,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from record_matching_spark import session
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -117,7 +120,8 @@ def _small_star(e: DataFrame) -> DataFrame:
 def _fingerprint(e: DataFrame) -> tuple:
     """Order-insensitive identity of an edge set (count + two independent
     hash sums). Standalone form — the CC loop folds the same aggregates
-    into the checkpoint action via observe() instead of calling this."""
+    into the checkpoint action via observe() and calls this only when the
+    observed row does not arrive."""
     row = e.agg(*_fp_aggs()).collect()[0]
     return (row["n"], str(row["h1"]), str(row["h2"]))
 
@@ -150,9 +154,13 @@ def connected_components(
         # no separate pass over the edge set per round (VERDICT r2 item 2)
         obs = Observation(f"cc_fp_{i}")
         e = e.observe(obs, *_fp_aggs()).localCheckpoint(eager=True)
-        row = obs.get
-        fp = (row["n"], str(row["h1"]), str(row["h2"]))
-        if fp == prev_fp or row["n"] == 0:  # empty edge set is a fixpoint
+        row = session.observed_row(obs)
+        fp = (
+            (row["n"], str(row["h1"]), str(row["h2"]))
+            if row is not None
+            else _fingerprint(e)
+        )
+        if fp == prev_fp or fp[0] == 0:  # empty edge set is a fixpoint
             break
         prev_fp = fp
     else:

@@ -105,15 +105,21 @@ def with_minhash_signature(
 
 def minhash_bands(
     df: DataFrame,
-    sig_col: str = "minhash",
     id_col: str = "file_id",
+    tokens_col: str = "tokens",
     num_bands: int = 32,
     rows_per_band: int = 4,
-    keep_cols: list[str] | None = None,
+    seed: int = 1,
+    keep_cols: list[str] | tuple[str, ...] = (),
 ) -> DataFrame:
-    """Explode a signature into (id, block_key) LSH band rows.
-    `keep_cols` rides extra columns along (streaming near-dup carries the
-    token-hash set for in-state exact verification).
+    """(id, *keep_cols, block_key) LSH band rows of the MinHash signature of
+    `tokens_col`. The band layout is the only signature parameter: the
+    signature has exactly num_bands × rows_per_band hashes, so every band
+    slice is full (a shorter signature would leave the trailing bands as
+    one empty slice shared by every document). Empty token sets get unique
+    sentinel signatures keyed by `id_col`, so they never share a band.
+    `keep_cols` ride along (streaming near-dup carries the token-hash set
+    for in-state exact verification).
 
     block_key = xxhash64('mh', band_idx, band slice) — a compact int64 so
     the downstream self-join and pair-dedup shuffle 8-byte keys instead of
@@ -123,6 +129,10 @@ def minhash_bands(
     Two records share a band key iff their signatures agree on all
     `rows_per_band` positions of that band: P(share ≥1 band) = 1-(1-J^r)^b.
     """
+    sigs = with_minhash_signature(
+        df, tokens_col=tokens_col, out_col="_sig",
+        num_hashes=num_bands * rows_per_band, seed=seed, uniq_col=id_col,
+    )
     bands = F.transform(
         F.sequence(F.lit(0), F.lit(num_bands - 1)),
         lambda i: F.xxhash64(
@@ -131,14 +141,14 @@ def minhash_bands(
             F.concat_ws(
                 "_",
                 F.transform(
-                    F.slice(F.col(sig_col), i * rows_per_band + 1, rows_per_band),
+                    F.slice(F.col("_sig"), i * rows_per_band + 1, rows_per_band),
                     lambda x: x.cast("string"),
                 ),
             ),
         ),
     )
-    return df.select(
+    return sigs.select(
         F.col(id_col),
-        *[F.col(c) for c in (keep_cols or [])],
+        *[F.col(c) for c in keep_cols],
         F.explode(bands).alias("block_key"),
     )

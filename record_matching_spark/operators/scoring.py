@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from record_matching_spark import session
+
 # NOTE: no Jaro-Winkler on the content signature — pure-Python JW is
 # ~1 ms/pair on 160-char strings (measured), which would dominate the whole
 # scoring stage. JW runs only on short path strings; content similarity
@@ -137,7 +139,7 @@ def sha_features(files: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     via observe() — no separate count job. Beyond 1M distinct docs the
     vocabulary may not fit the driver, so the round-5 shuffle shape is
     kept as the fallback (same outputs, pinned by
-    tests/test_round6.py::test_sha_features_paths_agree)."""
+    tests/test_scoring.py::test_sha_features_paths_agree)."""
     from pyspark.sql import Observation
 
     docs = files.select("content_sha", tokens_col).dropDuplicates(["content_sha"])
@@ -197,9 +199,11 @@ def sha_features(files: DataFrame, tokens_col: str = "tokens") -> DataFrame:
                "tid array<int>, tf array<bigint>",
     ).observe(obs, F.count(F.lit(1)).alias("n"))
     # materialized once: the df aggregate below and the final weight pass
-    # both read it, and the observe rides this single action
+    # both read it, and the observe rides this single action (no count
+    # within the timeout → count the checkpointed table)
     stage1 = stage1.localCheckpoint(eager=True)
-    n_docs = int(obs.get["n"])
+    row = session.observed_row(obs)
+    n_docs = int(row["n"]) if row is not None else stage1.count()
 
     if n_docs <= VOCAB_BROADCAST_MAX_DOCS:
         # vocab ≪ corpus: ship the idf table to executors as two sorted
@@ -706,31 +710,6 @@ def train_weights(
     for name, coef in zip(feats_list, model.coefficients):
         out[name] = float(coef)
     return out
-
-
-def train_random_forest(labeled_feats: DataFrame, num_trees: int = 100,
-                        seed: int = 23):
-    """Alternative pair classifier: RandomForest (reference POC v2,
-    claude_poc_v2/vector_enhanced_entity_resolution_v2.py:2376-2572 —
-    100 trees, seed 23). Returns (model, feature_importances dict).
-    Use model.transform(assembled) for scoring; the logistic path
-    (train_weights/score_pairs) stays the default because its scoring is
-    pure Catalyst."""
-    from pyspark.ml.classification import RandomForestClassifier
-    from pyspark.ml.feature import VectorAssembler
-
-    assembler = VectorAssembler(inputCols=FEATURES, outputCol="fvec")
-    train = assembler.transform(
-        labeled_feats.withColumn("label", F.col("match").cast("double"))
-    )
-    rf = RandomForestClassifier(
-        featuresCol="fvec", labelCol="label", numTrees=num_trees, seed=seed
-    )
-    model = rf.fit(train)
-    importances = {
-        name: float(v) for name, v in zip(FEATURES, model.featureImportances)
-    }
-    return model, importances
 
 
 def train_random_forest_cv(

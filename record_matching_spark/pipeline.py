@@ -47,7 +47,6 @@ MANIFEST = "_manifest.json"
 
 @dataclass
 class PipelineConfig:
-    num_hashes: int = 128
     num_bands: int = 32
     rows_per_band: int = 4
     minhash_seed: int = 1
@@ -204,7 +203,6 @@ class Pipeline:
             lambda: blocking_keys(
                 norm,
                 id_col="fid",
-                num_hashes=cfg.num_hashes,
                 num_bands=cfg.num_bands,
                 rows_per_band=cfg.rows_per_band,
                 minhash_seed=cfg.minhash_seed,

@@ -12,8 +12,10 @@ default.
 from __future__ import annotations
 
 import os
+import time
 
-from pyspark.sql import SparkSession
+from pyspark.serializers import CPickleSerializer
+from pyspark.sql import Observation, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
@@ -25,6 +27,11 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 # warm er_clone run evicted and recompiled 143 classes with Janino, and the
 # JVM JIT-compiled them again; at 1,024 a repeat run compiles none.
 CODEGEN_CACHE_MAX_ENTRIES = 1024
+
+# Longest wait for an observe() row after its action has finished. The row
+# arrives through the listener bus, normally within milliseconds; a bus that
+# drops the event must not hang the caller.
+OBSERVE_TIMEOUT_S = 10.0
 
 
 def get_spark(
@@ -92,3 +99,18 @@ def codegen_compiles(spark: SparkSession) -> int:
     jvm = spark.sparkContext._jvm
     metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def observed_row(obs: Observation, timeout_s: float = OBSERVE_TIMEOUT_S) -> dict | None:
+    """The metrics of `obs` as a dict, or None if they have not arrived
+    within `timeout_s` (`Observation.get` waits without a bound). Each JVM
+    read (`getRowOrEmpty`) waits at most 100 ms. Every operator that reads
+    an observation has a fallback for None that gives the same output."""
+    deadline = time.monotonic() + timeout_s
+    while True:
+        row = obs._jo.getRowOrEmpty()
+        if not row.isEmpty():
+            utils = obs._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+            return CPickleSerializer().loads(utils.toPyRow(row.get())).asDict()
+        if time.monotonic() >= deadline:
+            return None

@@ -117,7 +117,6 @@ def streaming_near_dup(
     stream: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 128,
     num_bands: int = 32,
     rows_per_band: int = 4,
     shingle_k: int | None = None,
@@ -173,8 +172,8 @@ def streaming_near_dup(
         stream = _payload(stream, id_col, text_col, shingle_k,
                           (id_col, "_th", "_sha", "_n"), keep_cols=[text_col])
     bands = _bands(
-        stream, id_col, text_col, num_hashes, num_bands, rows_per_band,
-        shingle_k, keep_cols=["_th"] if verify else [],
+        stream, id_col, text_col, num_bands, rows_per_band, shingle_k,
+        keep_cols=["_th"] if verify else [],
     )
 
     def match_fn(
@@ -253,7 +252,6 @@ def streaming_decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.8,
-    num_hashes: int = 128,
     num_bands: int = 32,
     rows_per_band: int = 4,
     shingle_k: int | None = None,
@@ -294,11 +292,11 @@ def streaming_decontaminate(
     enriched = _payload(stream, id_col, text_col, shingle_k,
                         (id_col, "_ta", "_sha_a", "_na"), keep_cols=[text_col])
     bands = _bands(
-        enriched, id_col, text_col, num_hashes, num_bands, rows_per_band,
-        shingle_k, keep_cols=["_ta", "_sha_a", "_na"],
+        enriched, id_col, text_col, num_bands, rows_per_band, shingle_k,
+        keep_cols=["_ta", "_sha_a", "_na"],
     )
     pb, pf = _index(probe, _PROBE, id_col, text_col,
-                    num_hashes, num_bands, rows_per_band, shingle_k)
+                    num_bands, rows_per_band, shingle_k)
     hits = (
         bands.join(F.broadcast(pb), "block_key")
         .join(F.broadcast(pf), "probe_id")

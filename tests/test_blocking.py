@@ -4,10 +4,12 @@ pair-set equivalence (FIXTURES.md §5)."""
 from __future__ import annotations
 
 import time
+from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
 
+from record_matching_spark import session
 from record_matching_spark.operators.blocking import blocking_keys, candidate_pairs
 from record_matching_spark.operators.minhash import with_minhash_signature
 from record_matching_spark.operators.normalize import normalize_files
@@ -93,26 +95,24 @@ def test_missing_bounds_keep_ids_wide(spark, monkeypatch):
     pairs. An observation whose action never ran reads as None in time."""
     from pyspark.sql import Observation
 
-    from record_matching_spark.operators import blocking
-
     rows = [(i, i % 7) for i in range(60)] + [(i, 100 + i % 3) for i in range(60, 90)]
     df = spark.createDataFrame(rows, "fid long, block_key long")
 
     def pairs():
-        out = blocking.candidate_pairs(df, id_col="fid", salt_cap=4)
+        out = candidate_pairs(df, id_col="fid", salt_cap=4)
         return out.dtypes, sorted(tuple(r) for r in out.collect())
 
     seen = []
-    read = blocking._observed_row
+    read = session.observed_row
 
     def recording(obs):
         seen.append(read(obs))
         return seen[-1]
 
-    monkeypatch.setattr(blocking, "_observed_row", recording)
+    monkeypatch.setattr(session, "observed_row", recording)
     narrowed = pairs()
     assert seen == [{"lo": 0, "hi": 89}]  # fits int32: the narrowed plan ran
-    monkeypatch.setattr(blocking, "_observed_row", lambda obs: None)
+    monkeypatch.setattr(session, "observed_row", lambda obs: None)
     assert pairs() == narrowed and len(narrowed[1]) > 0
 
     never = Observation()
@@ -120,3 +120,35 @@ def test_missing_bounds_keep_ids_wide(spark, monkeypatch):
     t0 = time.monotonic()
     assert read(never, timeout_s=0.3) is None
     assert time.monotonic() - t0 < 5
+
+
+def test_candidate_pairs_equal_within_block_pairs(spark):
+    """candidate_pairs emits exactly the distinct (left, right) pairs that
+    share a block, each once, on a block table where pairs repeat across
+    blocks and salting splits the blocks (salt_cap=2). The oracle
+    enumerates the within-block pairs in Python."""
+    rows = []
+    # docs 1-4 share key 100; 1,2 also share 50; 3,4 share 7
+    for k, members in [(100, [1, 2, 3, 4]), (50, [1, 2]), (7, [3, 4]),
+                       (900, [5, 6, 7]), (3, [6, 7])]:
+        rows += [(m, k) for m in members]
+    members = defaultdict(set)
+    for m, k in rows:
+        members[k].add(m)
+    want = sorted({(a, b) for ms in members.values() for a in ms for b in ms if a < b})
+
+    blocks = spark.createDataFrame(rows, "file_id long, block_key long")
+    out = candidate_pairs(blocks, salt_cap=2)
+    assert out.dtypes == [("left", "bigint"), ("right", "bigint")]
+    assert sorted(tuple(r) for r in out.collect()) == want
+
+
+def test_band_layout_sizes_signature(spark):
+    """The signature has num_bands × rows_per_band hashes: a 40 × 4 layout
+    (160 hashes) gives every band a full slice, so 60 documents with
+    disjoint tokens share no block and give no pair."""
+    docs = [(i, [f"d{i}w{j}" for j in range(5)]) for i in range(60)]
+    df = spark.createDataFrame(docs, "file_id long, tokens array<string>")
+    blocks = blocking_keys(df, num_bands=40, rows_per_band=4)
+    assert blocks.count() == 60 * (1 + 40)  # token-sorted key + bands
+    assert candidate_pairs(blocks).count() == 0

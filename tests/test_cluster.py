@@ -64,3 +64,24 @@ def test_singleton_completion(spark):
     got = {r["file_id"]: r["cluster_id"]
            for r in cluster_assignments(edges, nodes, "file_id").collect()}
     assert got == {"a": "a", "b": "a", "z": "z"}
+
+
+def test_cc_exact_on_dup_heavy_graph(spark):
+    """Star rounds without large-star's distinct must still converge to the
+    exact component minima on a graph that maximizes duplicate emissions
+    (many nodes sharing one minimum) plus a long chain (worst-case
+    diameter), with duplicate + reversed input edges thrown in."""
+    edges = []
+    # star: 1..40 all attached to 0 via a middle hub 41 (degree fan-in)
+    edges += [(41, i) for i in range(41)]
+    # chain: 100..160
+    edges += [(i, i + 1) for i in range(100, 160)]
+    # duplicates and reversed orientations
+    edges += [(i + 1, i) for i in range(100, 160, 3)]
+    edges += [(41, 5), (41, 5), (0, 41)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    for n in range(42):
+        assert got[n] == 0
+    for n in range(100, 161):
+        assert got[n] == 100

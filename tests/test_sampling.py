@@ -4,7 +4,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from record_matching_spark.functions.sampling import hash_split, quota_sample
+from record_matching_spark.functions.sampling import (
+    global_shuffle_rank,
+    hash_split,
+    quota_sample,
+)
 
 
 def test_hash_split_deterministic_and_append_stable(spark):
@@ -48,3 +52,11 @@ def test_quota_sample_caps_and_picks_best(spark):
     g1 = {r["id"] for r in quota_sample(df, ["grp"], 3, id_col="id").collect()}
     g2 = {r["id"] for r in quota_sample(df, ["grp"], 3, id_col="id").collect()}
     assert g1 == g2 and len(g1) == 4
+
+
+def test_global_shuffle_rank_dense_on_duplicate_ids(spark):
+    """Duplicate ids tie on the whole sort key (hash, id); the running
+    count must still give ranks 0..n-1, each exactly once."""
+    df = spark.createDataFrame([(i % 7,) for i in range(40)], "doc_id long")
+    ranks = [r["shuffle_rank"] for r in global_shuffle_rank(df, partitions=3).collect()]
+    assert sorted(ranks) == list(range(40))

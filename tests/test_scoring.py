@@ -237,3 +237,53 @@ def test_train_weights_separates(spark):
         | (~F.col("match") & (F.col("score") > 0.5))
     ).count()
     assert bad == 0
+
+
+def test_sha_features_paths_agree(spark, monkeypatch):
+    """The numpy-broadcast fast path and the >1M-docs shuffle fallback must
+    emit identical (content_sha, sig, tid, tw) tables — same tids, same
+    float32 weights — modulo the empty-doc null-vs-missing-row detail that
+    both normalize to NULL."""
+    import record_matching_spark.operators.scoring as S
+
+    rows = [
+        ("a", "alpha beta beta gamma"),
+        ("b", "alpha beta delta delta delta"),
+        ("c", "gamma gamma epsilon"),
+        ("d", ""),  # empty-token doc -> NULL tid/tw
+        ("e", "alpha beta beta gamma"),  # duplicate content of 'a'
+    ]
+    files = spark.createDataFrame(rows, "file_id string, content string")
+    files = files.withColumn("content_sha", F.sha2("content", 256)).withColumn(
+        "tokens",
+        F.filter(F.split(F.lower("content"), r"[^a-z0-9_]+"),
+                 lambda t: F.length(t) >= 2),
+    )
+    fast = S.sha_features(files)
+    monkeypatch.setattr(S, "VOCAB_BROADCAST_MAX_DOCS", 0)
+    slow = S.sha_features(files)
+
+    def norm(df):
+        out = {}
+        for r in df.collect():
+            out[r["content_sha"]] = (
+                r["sig"],
+                None if r["tid"] is None else tuple(r["tid"]),
+                None if r["tw"] is None else tuple(r["tw"]),
+            )
+        return out
+
+    nf, ns = norm(fast), norm(slow)
+    assert set(nf) == set(ns)
+    for sha in nf:
+        assert nf[sha][0] == ns[sha][0], "sig mismatch"
+        assert nf[sha][1] == ns[sha][1], "tid mismatch"
+        if nf[sha][2] is None:
+            assert ns[sha][2] is None
+        else:
+            for x, y in zip(nf[sha][2], ns[sha][2]):
+                assert x == pytest.approx(y, abs=1e-6)
+    # weights are L2-normalized
+    for sha, (_, tid, tw) in nf.items():
+        if tw:
+            assert sum(w * w for w in tw) == pytest.approx(1.0, abs=1e-5)

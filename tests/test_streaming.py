@@ -157,7 +157,7 @@ def test_streaming_near_dup_verify_threshold(spark, tmp_path):
         run_stream_to_parquet(
             streaming_near_dup(
                 stream, text_col="text", id_col="doc_id",
-                num_hashes=32, num_bands=32, rows_per_band=1,
+                num_bands=32, rows_per_band=1,
                 verify_threshold=0.9,
             ),
             str(dst), str(ckp),
