@@ -4,27 +4,28 @@ Reference analogs:
 - per-field pairwise distances batched on CUDA tensors
   (/root/reference/record_matching/main.py:353-434) → ONE mapInArrow pass
   per pair batch (TF-IDF cosine + Jaccard via a batch-wide vectorized
-  intersect on flat Arrow buffers; memoized Jaro-Winkler on paths);
-  Levenshtein runs JVM-side (banded built-in) and passes through.
+  intersect; bit-parallel signature Levenshtein once per distinct
+  signature pair; memoized Jaro-Winkler on paths).
 - logistic score sigmoid(x·w + b) (/root/reference/record_matching/
   main.py:494-501,606-626) → pure Catalyst expression over broadcast
   weights (no UDF in the scoring hot path).
 - weight training via sklearn liblinear (/root/reference/record_matching/
   main.py:444-486) → pyspark.ml LogisticRegression (distributed).
 - embed-each-distinct-value-once economy (/root/reference/record_matching/
-  main.py:89-93) → features computed once per distinct (content_sha_l,
-  content_sha_r) pair, joined back to file pairs.
+  main.py:89-93) → content features computed once per distinct content
+  (sha_features) and collected once into a broadcast content table that
+  pairs index by id.
 
 Feature vector (per candidate pair):
   jaccard    — |tokens_l ∩ tokens_r| / |tokens_l ∪ tokens_r|   (mapInArrow)
   tfidf_cos  — cosine of L2-normalized TF-IDF vectors          (mapInArrow)
-  lev_sig    — 1 - lev(sig_l, sig_r)/max(len), banded, on the sorted-token
-               signature                                        (Catalyst)
+  lev_sig    — 1 - lev(sig_l, sig_r)/max(len), clamped to 0 beyond
+               _LEV_THRESHOLD, on the sorted-token signature    (mapInArrow)
   jw_path    — Jaro-Winkler on file paths          (memoized, in the kernel)
   same_lang  — language equality                                (Catalyst)
   dir_sim    — path-directory token Jaccard                     (Catalyst)
-  any_empty  — either side has no tokens (B21 imputation flag)  (Catalyst)
-  both_empty — both sides have no tokens (B21 imputation flag)  (Catalyst)
+  any_empty  — either side has no tokens (B21 imputation flag)  (mapInArrow)
+  both_empty — both sides have no tokens (B21 imputation flag)  (mapInArrow)
 """
 
 from __future__ import annotations
@@ -32,17 +33,15 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 from record_matching_spark import session
 
 # NOTE: no Jaro-Winkler on the content signature — pure-Python JW is
 # ~1 ms/pair on 160-char strings (measured), which would dominate the whole
 # scoring stage. JW runs only on short path strings; content similarity
-# comes from TF-IDF cosine + Jaccard (Arrow/numpy) + Levenshtein (JVM).
+# comes from TF-IDF cosine + Jaccard and Levenshtein (Arrow/numpy).
 #
 # same_lang / dir_sim are the metadata-rule features (B11) — the reference
 # scores temporal/metadata rules as classifier features with weight 0.130
@@ -77,21 +76,21 @@ DEFAULT_WEIGHTS: dict[str, float] = {
 }
 
 # sorted distinct tokens joined into the levenshtein signature. Kept short:
-# levenshtein is O(len²) per pair and dominates pair-featurization cost —
+# levenshtein is O(len²) per pair and dominated pair-featurization cost —
 # 12 tokens / 96 chars keeps the feature discriminative at ~25× less work
 # than a 512-char signature (round 2 shrank 160→96 after profiling showed
-# JVM levenshtein was ~40% of the scoring stage). A banded threshold
-# (distance > _SIG_CHARS/2 → similarity clamps to the non-match region)
-# cuts the inner loop further: O(threshold·len) instead of O(len²).
+# JVM levenshtein was ~40% of the scoring stage). A distance above
+# _SIG_CHARS/2 clamps the similarity to 0 (the non-match region); 96 chars
+# fit two 64-bit words of the bit-parallel kernel.
 _SIG_TOKENS = 12
 _SIG_CHARS = 96
 _LEV_THRESHOLD = _SIG_CHARS // 2
 
-# broadcast budget for the per-distinct-content feature table: measured
-# payload ≈ 1 KB/row (int32 tid + float32 tw arrays + 96-char sig). The
-# 256 MB cap targets the smallest executors a mixed cluster is likely to
-# run (VERDICT r2 item 5: a forced 500 MB broadcast can OOM small
-# executors).
+# broadcast budget for the content table the driver collects (csid, CSR
+# token ids/weights, signature): measured payload ≈ 1 KB/row (int32 tid +
+# float32 tw arrays + 96-char sig). The 256 MB cap targets the smallest
+# executors a mixed cluster is likely to run (VERDICT r2 item 5: a forced
+# 500 MB broadcast can OOM small executors).
 _FEATURE_ROW_BYTES = 1024
 BROADCAST_BUDGET_BYTES = 256 << 20
 
@@ -100,12 +99,6 @@ BROADCAST_BUDGET_BYTES = 256 << 20
 # join instead of the numpy-broadcast map-side finish (module constant so
 # tests can force the fallback and pin both paths to identical outputs)
 VOCAB_BROADCAST_MAX_DOCS = 1_000_000
-
-# pair_features scores each distinct content pair once (then joins back to
-# file pairs) when files outnumber distinct contents by more than this
-# ratio; below it, per file pair (module constant so tests can force either
-# plan and pin the two to each other)
-DEDUP_CONTENT_MIN_RATIO = 1.3
 
 
 # ---------------------------------------------------------------- features
@@ -118,10 +111,11 @@ def sha_features(files: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     tid (sorted int32 token-hash ids), tw (L2-normalized float32 TF-IDF
     weights aligned with tid).
 
-    The payload is deliberately COMPACT — this table is joined onto every
-    candidate sha-pair, so its row width is the scoring stage's shuffle
-    volume: int32 ids + float32 weights + a short signature ≈ 0.8 KB/row vs
-    ~3 KB when shipping raw token strings (a 32-bit token-hash collision
+    The payload is deliberately COMPACT — pair_features collects this
+    table once and broadcasts it (above its budget, joins it onto both
+    sides of every candidate pair), so its row width is the scoring stage's
+    broadcast or shuffle volume: int32 ids + float32 weights + a short
+    signature ≈ 0.8 KB/row vs ~3 KB when shipping raw token strings (a 32-bit token-hash collision
     inside one pair's union perturbs jaccard by ~1%, far below the decision
     margin).
 
@@ -179,9 +173,7 @@ def sha_features(files: DataFrame, tokens_col: str = "tokens") -> DataFrame:
             uk, counts = np.unique(keys, return_counts=True)
             urows = (uk >> 31).astype(np.int64)
             utids = (uk & 0x7FFFFFFF).astype(np.int32)
-            row_lens = np.bincount(urows, minlength=n)
-            offsets = np.zeros(n + 1, dtype=np.int32)
-            np.cumsum(row_lens, out=offsets[1:])
+            offsets = _offsets(np.bincount(urows, minlength=n), np.int32)
             tid_col = pa.ListArray.from_arrays(pa.array(offsets), pa.array(utids))
             tf_col = pa.ListArray.from_arrays(
                 pa.array(offsets), pa.array(counts.astype(np.int64))
@@ -243,8 +235,7 @@ def sha_features(files: DataFrame, tokens_col: str = "tokens") -> DataFrame:
                 # fold order as the round-5 JVM aggregate over the sorted tv
                 norms = np.sqrt(np.bincount(rows, weights=w * w, minlength=n))
                 tw = (w / norms[rows]).astype(np.float32)
-                offsets = np.zeros(n + 1, dtype=np.int32)
-                np.cumsum(lens, out=offsets[1:])
+                offsets = _offsets(lens, np.int32)
                 tw_col = pa.ListArray.from_arrays(pa.array(offsets), pa.array(tw))
                 yield pa.RecordBatch.from_arrays(
                     [rb.column(idx["content_sha"]), rb.column(idx["sig"]),
@@ -307,9 +298,25 @@ def _flat_lists(arr):
     return lens, vals
 
 
-def _cos_jac_batch(tid_l, tw_l, tid_r, tw_r, n: int):
-    """Sparse TF-IDF cosine + token-set Jaccard for one Arrow batch of
-    pairs — ONE vectorized intersect for the whole batch.
+def _offsets(lens: np.ndarray, dtype=np.int64) -> np.ndarray:
+    """CSR offsets (n + 1 entries) of row lengths `lens`."""
+    off = np.zeros(len(lens) + 1, dtype=dtype)
+    np.cumsum(lens, out=off[1:])
+    return off
+
+
+def _arrow_side(tid, tw):
+    """(lens, tids, weights) of one side's Arrow tid/tw list columns; a
+    null list (empty-token document) has length 0."""
+    lens, ids = _flat_lists(tid)
+    return lens, ids, _flat_lists(tw)[1]
+
+
+def _cos_jac_batch(left, right, n: int):
+    """Sparse TF-IDF cosine + token-set Jaccard for one batch of n pairs —
+    ONE vectorized intersect for the whole batch. Each side is (lens,
+    tids, weights): per-pair list lengths and the flat, per-pair sorted
+    token ids and their weights.
 
     Each (row, tid) packs into one int64 key (tid < 2³¹ by construction,
     see sha_features); both key streams are globally sorted (rows ascend,
@@ -317,10 +324,8 @@ def _cos_jac_batch(tid_l, tw_l, tid_r, tw_r, n: int):
     single np.searchsorted — no per-pair Python loop, no per-pair
     allocation. Replaces the round-1 per-pair intersect1d loop (the
     scaling bottleneck flagged in VERDICT.md)."""
-    lens_l, ids_l = _flat_lists(tid_l)
-    lens_r, ids_r = _flat_lists(tid_r)
-    _, ws_l = _flat_lists(tw_l)
-    _, ws_r = _flat_lists(tw_r)
+    lens_l, ids_l, ws_l = left
+    lens_r, ids_r, ws_r = right
     if len(ids_l) == 0 or len(ids_r) == 0:
         return np.zeros(n), np.zeros(n)
     rows_l = np.repeat(np.arange(n, dtype=np.int64), lens_l)
@@ -341,18 +346,107 @@ def _cos_jac_batch(tid_l, tw_l, tid_r, tw_r, n: int):
     )
     union = lens_l + lens_r - inter
     # union == 0 (both token sets empty) scores 0: identical-content pairs
-    # short-circuit to 1.0 via the _same flag, so two different empty-token
-    # documents are NOT near-duplicates (ADVICE fix)
+    # short-circuit to 1.0 via the same-content flag, so two different
+    # empty-token documents are NOT near-duplicates (ADVICE fix)
     jac = np.where(union > 0, inter / np.maximum(union, 1.0), 0.0)
     return cos, jac
 
 
-def _jw_batch(av: list, bv: list) -> np.ndarray:
+def _sig_codes(sigs):
+    """Dense ids of an Arrow string column's distinct signatures: (ids per
+    row, code-point matrix of the distinct signatures padded with -1,
+    their lengths in code points)."""
+    import pyarrow.compute as pc
+
+    enc = pc.dictionary_encode(sigs)
+    ids = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    words = enc.dictionary.to_pylist()
+    lens = np.array([len(w) for w in words], dtype=np.int64)
+    flat = np.frombuffer("".join(words).encode("utf-32-le"), dtype=np.int32)
+    codes = np.full((len(words), max(int(lens.max(initial=0)), 1)), -1, np.int32)
+    codes[np.repeat(np.arange(len(words)), lens),
+          np.arange(len(flat)) - np.repeat(np.cumsum(lens) - lens, lens)] = flat
+    return ids, codes, lens
+
+
+def _levenshtein(codes: np.ndarray, lens: np.ndarray, a: np.ndarray, b: np.ndarray):
+    """Exact edit distance between signatures a[k] and b[k] (rows of the
+    code-point matrix `codes`, lengths `lens`), vectorized over k.
+
+    Bit-parallel (Myers 1999, in Hyyrö's 2001 form): the pattern a[k] is
+    packed into 64-bit blocks of vertical deltas, and each character of
+    b[k] advances every block in a dozen word operations; a block passes
+    its horizontal delta to the next one. The last row of the DP matrix
+    is tracked in `score`, starting at len(a[k])."""
+    m, n = lens[a], lens[b]
+    blocks = max(1, -(-codes.shape[1] // 64))
+    pat = np.full((len(a), blocks * 64), -1, np.int32)
+    pat[:, :codes.shape[1]] = codes[a]
+    txt = codes[b]
+    one, top = np.uint64(1), np.uint64(63)
+    pv = np.full((blocks, len(a)), ~np.uint64(0))
+    mv = np.zeros((blocks, len(a)), np.uint64)
+    score = m.copy()
+    last_blk = (m - 1) // 64                  # -1 for an empty pattern
+    last_bit = ((m - 1) % 64).astype(np.uint64)
+    for j in range(int(n.max(initial=0))):
+        peq = np.packbits(pat == txt[:, j:j + 1], axis=1, bitorder="little")
+        peq = peq.view("<u8")
+        active = j < n
+        # the top row is D[0][j] = j, so block 0 sees a +1 horizontal delta
+        h_pos, h_neg = np.ones(len(a), bool), np.zeros(len(a), bool)
+        for blk in range(blocks):
+            eq, p, q = peq[:, blk], pv[blk], mv[blk]
+            xv = eq | q
+            eq = eq | h_neg.astype(np.uint64)
+            xh = (((eq & p) + p) ^ p) | eq
+            ph = q | ~(xh | p)
+            mh = p & xh
+            at = active & (last_blk == blk)
+            score += np.where(at, ((ph >> last_bit) & one).astype(np.int64)
+                              - ((mh >> last_bit) & one).astype(np.int64), 0)
+            h_out_pos, h_out_neg = (ph >> top).astype(bool), (mh >> top).astype(bool)
+            ph = (ph << one) | h_pos.astype(np.uint64)
+            mh = (mh << one) | h_neg.astype(np.uint64)
+            pv[blk] = mh | ~(xv | ph)
+            mv[blk] = ph & xv
+            h_pos, h_neg = h_out_pos, h_out_neg
+    return np.where(m == 0, n, score)
+
+
+def _lev_sig(codes, lens, sid_l, sid_r, same) -> np.ndarray:
+    """Signature-Levenshtein similarity of each pair (signature ids into
+    `codes`/`lens`); the distance runs once per distinct unordered
+    signature pair of the batch:
+    - identical content (`same`) scores 1.0;
+    - two EMPTY signatures of different content score 0.0 — 1.0 is
+      reserved for the same-content case (ADVICE fix);
+    - equal signatures score 1.0, which is the distance-0 value;
+    - otherwise 1 − d / max(len, 1), and a distance above _LEV_THRESHOLD
+      clamps to 0.0 (the values of Spark's levenshtein(a, b, threshold))."""
+    la, lb = lens[sid_l], lens[sid_r]
+    both_empty = (la == 0) & (lb == 0)
+    out = (same | ((sid_l == sid_r) & ~both_empty)).astype(np.float64)
+    run = ~same & ~both_empty & (sid_l != sid_r)
+    if run.any():
+        lo = np.minimum(sid_l, sid_r)[run]
+        hi = np.maximum(sid_l, sid_r)[run]
+        pairs, inv = np.unique((lo << 32) | hi, return_inverse=True)
+        d = _levenshtein(codes, lens, pairs >> 32, pairs & 0xFFFFFFFF)[inv]
+        width = np.maximum(np.maximum(la[run], lb[run]), 1)
+        out[run] = np.where(
+            d > _LEV_THRESHOLD, 0.0, 1.0 - d.astype(np.float64) / width.astype(np.float64)
+        )
+    return out
+
+
+def _jw_batch(av: list, bv: list, memo: dict | None = None) -> np.ndarray:
     """Jaro-Winkler over one batch of string pairs (None reads as ""):
     each distinct pair is scored once by `_jaro_winkler` — paths repeat
     heavily across candidate pairs (clone families share module names), so
-    a repeat costs one dict lookup."""
-    memo: dict = {}
+    a repeat costs one dict lookup. Pass one `memo` to every batch of a
+    task to share it across batches."""
+    memo = {} if memo is None else memo
     out = np.empty(len(av))
     for i, (x, y) in enumerate(zip(av, bv)):
         # memo on (x, y) TUPLES — a separator-joined key would mis-split
@@ -363,52 +457,6 @@ def _jw_batch(av: list, bv: list) -> np.ndarray:
             v = memo[key] = _jaro_winkler(*key)
         out[i] = v
     return out
-
-
-def _feature_kernel(key_cols: tuple[str, str], with_paths: bool):
-    """mapInArrow kernel computing the Python-side pair features in ONE
-    JVM→Python crossing with NO pandas object conversion: token-id/weight
-    list columns are consumed as flat Arrow buffers (pyarrow.compute), and
-    Catalyst-computed columns (lev_sig, metadata features) pass through as
-    untouched Arrow arrays. Measured 3.4× faster than the equivalent
-    pandas_udf on the same batch stream (round-2 profiling)."""
-    import pyarrow as pa
-
-    pass_cols = ["lev_sig", "any_empty", "both_empty"] + (
-        ["same_lang", "dir_sim"] if with_paths else []
-    )
-
-    def kernel(batches):
-        for rb in batches:
-            idx = {name: i for i, name in enumerate(rb.schema.names)}
-            n = rb.num_rows
-            cos, jac = _cos_jac_batch(
-                rb.column(idx["tid_l"]), rb.column(idx["tw_l"]),
-                rb.column(idx["tid_r"]), rb.column(idx["tw_r"]), n,
-            )
-            same = rb.column(idx["_same"]).to_numpy(zero_copy_only=False)
-            cos = np.where(same, 1.0, cos)
-            jac = np.where(same, 1.0, jac)
-            arrays = [
-                rb.column(idx[key_cols[0]]),
-                rb.column(idx[key_cols[1]]),
-                pa.array(jac, type=pa.float64()),
-                pa.array(cos, type=pa.float64()),
-            ]
-            names = [key_cols[0], key_cols[1], "jaccard", "tfidf_cos"]
-            for c in pass_cols:
-                arrays.append(rb.column(idx[c]))
-                names.append(c)
-            if with_paths:
-                jw = _jw_batch(
-                    rb.column(idx["path_l"]).to_pylist(),
-                    rb.column(idx["path_r"]).to_pylist(),
-                )
-                arrays.append(pa.array(jw, type=pa.float64()))
-                names.append("jw_path")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return kernel
 
 
 def _jaro_winkler(s1: str, s2: str) -> float:
@@ -456,96 +504,83 @@ def _jaro_winkler(s1: str, s2: str) -> float:
     return jaro + prefix * 0.1 * (1.0 - jaro)
 
 
-@F.pandas_udf(DoubleType())
-def _jw_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Jaro-Winkler column UDF over `_jw_batch` — jw_path of the
-    per-content plan, whose kernel runs on content pairs without paths."""
-    av = a.fillna("").to_numpy(dtype=object)
-    bv = b.fillna("").to_numpy(dtype=object)
-    return pd.Series(_jw_batch(list(av), list(bv)))
+def _content_table(shafk: DataFrame):
+    """The feature table collected once, csid-sorted: (csids, CSR offsets,
+    int32 token ids, float32 weights, dense signature id per content,
+    signature code points, signature lengths)."""
+    t = shafk.toArrow().sort_by("csid")
+    csid, sig, tid, tw = (t.column(c).combine_chunks() for c in ("csid", "sig", "tid", "tw"))
+    lens, ids, ws = _arrow_side(tid, tw)
+    return (csid.to_numpy(), _offsets(lens), ids, ws) + _sig_codes(sig)
 
 
-def _lev_expr(suffix_a: str, suffix_b: str) -> F.Column:
-    """Signature-levenshtein similarity, pure Catalyst:
-    - identical content short-circuits to 1.0 (never runs levenshtein);
-    - two EMPTY signatures (no tokens, different content) score 0.0 — 1.0
-      is reserved for the same-content case (ADVICE fix);
-    - banded: distance beyond _LEV_THRESHOLD clamps similarity to 0.0,
-      turning the O(len²) inner loop into O(threshold·len)."""
-    same = F.col(f"csid{suffix_a}") == F.col(f"csid{suffix_b}")
-    both_empty = (F.length(f"sig{suffix_a}") == 0) & (F.length(f"sig{suffix_b}") == 0)
-    d = F.levenshtein(f"sig{suffix_a}", f"sig{suffix_b}", _LEV_THRESHOLD)
-    lev = F.when(d < 0, F.lit(0.0)).otherwise(
-        F.lit(1.0)
-        - d.cast("double")
-        / F.greatest(
-            F.length(f"sig{suffix_a}"), F.length(f"sig{suffix_b}"), F.lit(1)
-        )
-    )
-    # equal non-empty sigs short-circuit to 1.0 — exactly lev's value for
-    # d=0 (1 − 0/max = 1.0), so the DP is skipped on the ~13% of ER pairs
-    # where clone-family members share the sorted-token prefix (r6
-    # measurement); must sit AFTER the both-empty case, which equal empty
-    # sigs would otherwise shadow
-    return (
-        F.when(same, F.lit(1.0))
-        .when(both_empty, F.lit(0.0))
-        .when(F.col(f"sig{suffix_a}") == F.col(f"sig{suffix_b}"), F.lit(1.0))
-        .otherwise(lev)
-    ).alias("lev_sig")
+def _find(csids: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Row of each of `q` in the sorted `csids`, -1 where it has none."""
+    pos = np.searchsorted(csids, q)
+    hit = pos < len(csids)
+    hit[hit] = csids[pos[hit]] == q[hit]
+    return np.where(hit, pos, -1)
 
 
-def _score_content(
-    base: DataFrame, shafk: DataFrame, keys: tuple[str, str],
-    sides: tuple[str, str], bcast, meta_feats: dict | None = None,
-) -> DataFrame:
-    """Attach both sides' content features to `base` (joined on
-    csid{sides[0]} / csid{sides[1]}) and run the feature kernel once over
-    the result; output rows are keyed by `keys`. With `meta_feats`, the
-    metadata features ride the kernel as pass-through columns and paths
-    ride it for jw_path (`base` then carries path_l/path_r and the
-    metadata columns)."""
-    a, b = sides
-    fa = shafk.select(
-        F.col("csid").alias(f"csid{a}"), F.col("sig").alias(f"sig{a}"),
-        F.col("tid").alias("tid_l"), F.col("tw").alias("tw_l"),
-    )
-    fb = shafk.select(
-        F.col("csid").alias(f"csid{b}"), F.col("sig").alias(f"sig{b}"),
-        F.col("tid").alias("tid_r"), F.col("tw").alias("tw_r"),
-    )
-    # B21 imputation flags: an empty tid list (or a missing feature row)
-    # means the side had no tokens — its content features are sentinel
-    # values the classifier should be able to discount
-    e_a = F.coalesce(F.size("tid_l"), F.lit(0)) == 0
-    e_b = F.coalesce(F.size("tid_r"), F.lit(0)) == 0
-    with_paths = meta_feats is not None
-    extra = (
-        [c.alias(name) for name, c in meta_feats.items()] + ["path_l", "path_r"]
-        if with_paths else []
-    )
-    pre = (
-        base.join(bcast(fa), f"csid{a}")
-        .join(bcast(fb), f"csid{b}")
-        .select(
-            *keys,
-            (F.col(f"csid{a}") == F.col(f"csid{b}")).alias("_same"),
-            _lev_expr(a, b),
-            (e_a | e_b).cast("double").alias("any_empty"),
-            (e_a & e_b).cast("double").alias("both_empty"),
-            *extra,
-            "tid_l", "tw_l", "tid_r", "tw_r",
-        )
-    )
-    key_t = dict(base.dtypes)
-    schema = (
-        f"{keys[0]} {key_t[keys[0]]}, {keys[1]} {key_t[keys[1]]}, "
-        "jaccard double, tfidf_cos double, lev_sig double, any_empty double, "
-        "both_empty double"
-    )
-    if with_paths:
-        schema += ", same_lang double, dir_sim double, jw_path double"
-    return pre.mapInArrow(_feature_kernel(keys, with_paths), schema=schema)
+def _take_rows(off, tid, tw, rows: np.ndarray):
+    """(lens, tids, weights) of content-table `rows`, in the given order."""
+    lens = off[rows + 1] - off[rows]
+    flat = np.repeat(off[rows] - (np.cumsum(lens) - lens), lens)
+    flat += np.arange(len(flat), dtype=np.int64)
+    return lens, tid[flat], tw[flat]
+
+
+def _pair_kernel(content):
+    """mapInArrow kernel computing every pair feature in ONE JVM→Python
+    crossing with no pandas conversion. Its content features come from one
+    of two sources:
+    - `content` (a broadcast of `_content_table`): each pair carries only
+      its two csids, and both sides' vectors and signatures are gathered
+      from the table; a pair whose content has no feature row is dropped;
+    - `content` None: each pair carries both sides' tid/tw lists and
+      signature strings from the sort-merge attach.
+    Metadata features (same_lang, dir_sim) pass through as Arrow arrays;
+    the Jaro-Winkler memo lives for the whole task."""
+    import pyarrow as pa
+
+    def kernel(batches):
+        table = content.value if content is not None else None
+        memo: dict = {}
+        for rb in batches:
+            if table is None:
+                left = _arrow_side(rb.column("tid_l"), rb.column("tw_l"))
+                right = _arrow_side(rb.column("tid_r"), rb.column("tw_r"))
+                sids, codes, slens = _sig_codes(
+                    pa.concat_arrays([rb.column("sig_l"), rb.column("sig_r")])
+                )
+                sid_l, sid_r = sids[:rb.num_rows], sids[rb.num_rows:]
+            else:
+                csids, off, tid, tw, sid, codes, slens = table
+                pl = _find(csids, rb.column("csid_l").to_numpy())
+                pr = _find(csids, rb.column("csid_r").to_numpy())
+                keep = (pl >= 0) & (pr >= 0)
+                if not keep.all():
+                    rb, pl, pr = rb.filter(pa.array(keep)), pl[keep], pr[keep]
+                left, right = _take_rows(off, tid, tw, pl), _take_rows(off, tid, tw, pr)
+                sid_l, sid_r = sid[pl], sid[pr]
+            same = rb.column("csid_l").to_numpy() == rb.column("csid_r").to_numpy()
+            cos, jac = _cos_jac_batch(left, right, rb.num_rows)
+            e_l, e_r = left[0] == 0, right[0] == 0
+            jw = _jw_batch(
+                rb.column("path_l").to_pylist(), rb.column("path_r").to_pylist(), memo
+            )
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("left"), rb.column("right"),
+                 pa.array(np.where(same, 1.0, jac)),
+                 pa.array(np.where(same, 1.0, cos)),
+                 pa.array(_lev_sig(codes, slens, sid_l, sid_r, same)),
+                 pa.array(jw), rb.column("same_lang"), rb.column("dir_sim"),
+                 pa.array((e_l | e_r).astype(np.float64)),
+                 pa.array((e_l & e_r).astype(np.float64))],
+                names=["left", "right", *FEATURES],
+            )
+
+    return kernel
 
 
 def pair_features(
@@ -561,111 +596,64 @@ def pair_features(
     All join keys are int64 surrogates: record ids via `id_col`, contents
     via csid = xxhash64(content_sha) — a 64-char sha never rides a shuffle.
 
-    Two plans, picked by the corpus' duplicate ratio:
-    - dedup_content (files > DEDUP_CONTENT_MIN_RATIO × distinct contents)
-      — content features computed once per distinct canonical
-      (csid_a ≤ csid_b) pair, joined back (the reference's
-      embed-each-distinct-value-once economy, main.py:89-93). Wins when
-      many files share identical content.
-    - otherwise — features computed directly per file pair (skips the
-      distinct + join-back shuffles). Wins when contents are mostly unique
-      (mutation-heavy corpora).
-    Output: left, right, *FEATURES.
+    One kernel (`_pair_kernel`) scores every pair. Content features are
+    computed from the per-distinct-content table `shaf` (the reference's
+    embed-each-distinct-value-once economy, main.py:89-93), attached in
+    one of two ways picked by the table's row count:
+    - within BROADCAST_BUDGET_BYTES (~1 KB/row) the driver collects the
+      table once and broadcasts it; pairs cross into Python carrying only
+      ids, paths and the Catalyst metadata features;
+    - above it the table is cluster-scale and joins both pair sides by
+      sort-merge, so each pair carries both sides' arrays.
+    Either way the Levenshtein distance runs once per distinct signature
+    pair of an Arrow batch. A pair whose content has no feature row is
+    dropped. Output: left, right, *FEATURES.
     """
-    built_shaf = shaf is None
     if shaf is None:
-        shaf = sha_features(files, tokens_col=tokens_col)
-    shafk = shaf.withColumn("csid", F.xxhash64("content_sha")).drop("content_sha")
-    if built_shaf:
-        # materialize the freshly-built feature table ONCE: both join sides
-        # (fa, fb) reference it, so an unmaterialized plan would run the
-        # whole TF-IDF build twice (once per broadcast side). Skipped when
-        # the caller passed a checkpointed shaf (the staged pipeline).
-        # localCheckpoint auto-releases on GC.
-        shafk = shafk.localCheckpoint(eager=True)
-
-    # decide from the (cheap, often cached) files table — counting shaf
-    # would materialize the whole TF-IDF build once for the count and then
-    # recompute it in the real plan
-    row = files.agg(
-        F.count("*").alias("n"),
-        F.count_distinct("content_sha").alias("d")
-        if "content_sha" in files.columns
-        else F.count_distinct(tokens_col).alias("d"),
-    ).collect()[0]
-    n_files, n_shas = row["n"], row["d"]
-    dedup_content = n_files > DEDUP_CONTENT_MIN_RATIO * n_shas
-    # byte-budgeted broadcast decision (~1 KB/row measured). The
-    # candidate-pair stream is 50-1000× the feature table, so broadcasting
-    # turns BOTH attach joins into shuffle-free broadcast-hash joins (vs
-    # sort-merge shuffling pair_count × 2 KB — the round-1 scoring stage's
-    # hidden cost). Above the budget the plan falls back to sort-merge, the
-    # correct shape when the distinct-content table itself is cluster-scale.
-    broadcast_features = n_shas * _FEATURE_ROW_BYTES <= BROADCAST_BUDGET_BYTES
-
-    def _maybe_bcast(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_features else df
+        # materialized once: the count below and the collect (or both
+        # attach sides) read it. localCheckpoint auto-releases on GC.
+        shaf = sha_features(files, tokens_col=tokens_col).localCheckpoint(eager=True)
+    shafk = shaf.select(F.xxhash64("content_sha").alias("csid"), "sig", "tid", "tw")
+    broadcast = shafk.count() * _FEATURE_ROW_BYTES <= BROADCAST_BUDGET_BYTES
 
     lang_col = F.col("lang") if "lang" in files.columns else F.lit("und")
     dirs = F.array_distinct(
         F.slice(F.split("path", "/"), 1, F.greatest(F.size(F.split("path", "/")) - 1, F.lit(0)))
     )
-    meta = files.select(
-        F.col(id_col),
-        F.xxhash64("content_sha").alias("csid"),
-        F.col("path"),
-        lang_col.alias("lang"),
-        dirs.alias("dirs"),
-    )
-    p = (
-        pairs.select("left", "right")
-        .join(
-            _maybe_bcast(meta.select(
-                F.col(id_col).alias("left"),
-                F.col("csid").alias("csid_l"),
-                F.col("path").alias("path_l"),
-                F.col("lang").alias("lang_l"),
-                F.col("dirs").alias("dirs_l"),
-            )),
-            "left",
+
+    def side(key: str, s: str) -> DataFrame:
+        meta = files.select(
+            F.col(id_col).alias(key), F.xxhash64("content_sha").alias(f"csid{s}"),
+            F.col("path").alias(f"path{s}"), lang_col.alias(f"lang{s}"),
+            dirs.alias(f"dirs{s}"),
         )
-        .join(
-            _maybe_bcast(meta.select(
-                F.col(id_col).alias("right"),
-                F.col("csid").alias("csid_r"),
-                F.col("path").alias("path_r"),
-                F.col("lang").alias("lang_r"),
-                F.col("dirs").alias("dirs_r"),
-            )),
-            "right",
-        )
-    )
+        return F.broadcast(meta) if broadcast else meta
+
     # B11 metadata-rule features (pure Catalyst, computed per file pair)
     dir_union = F.size(F.array_union("dirs_l", "dirs_r"))
-    meta_feats = {
-        "same_lang": (F.col("lang_l") == F.col("lang_r")).cast("double"),
-        "dir_sim": F.when(dir_union == 0, F.lit(1.0)).otherwise(
-            F.size(F.array_intersect("dirs_l", "dirs_r")).cast("double") / dir_union
-        ),
-    }
-
-    if dedup_content:
-        p = p.withColumn("csid_a", F.least("csid_l", "csid_r")).withColumn(
-            "csid_b", F.greatest("csid_l", "csid_r")
+    p = (
+        pairs.select("left", "right")
+        .join(side("left", "_l"), "left")
+        .join(side("right", "_r"), "right")
+        .select(
+            "left", "right", "csid_l", "csid_r", "path_l", "path_r",
+            (F.col("lang_l") == F.col("lang_r")).cast("double").alias("same_lang"),
+            F.when(dir_union == 0, F.lit(1.0)).otherwise(
+                F.size(F.array_intersect("dirs_l", "dirs_r")).cast("double") / dir_union
+            ).alias("dir_sim"),
         )
-        sha_scored = _score_content(
-            p.select("csid_a", "csid_b").distinct(), shafk,
-            ("csid_a", "csid_b"), ("_a", "_b"), _maybe_bcast,
-        )
-        return (
-            p.join(sha_scored, ["csid_a", "csid_b"])
-            .withColumn("jw_path", _jw_udf("path_l", "path_r"))
-            .withColumns(meta_feats)
-            .select("left", "right", *FEATURES)
-        )
-    return _score_content(
-        p, shafk, ("left", "right"), ("_l", "_r"), _maybe_bcast, meta_feats
-    ).select("left", "right", *FEATURES)
+    )
+    if broadcast:
+        content = files.sparkSession.sparkContext.broadcast(_content_table(shafk))
+    else:
+        content = None
+        for s in ("_l", "_r"):
+            p = p.join(shafk.select([F.col(c).alias(c + s) for c in shafk.columns]), f"csid{s}")
+    key_t = dict(pairs.dtypes)
+    schema = f"left {key_t['left']}, right {key_t['right']}, " + ", ".join(
+        f"{f} double" for f in FEATURES
+    )
+    return p.mapInArrow(_pair_kernel(content), schema=schema)
 
 
 # ----------------------------------------------------------------- scoring

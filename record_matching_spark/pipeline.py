@@ -14,7 +14,8 @@ Parquet directory and the per-stage CLI restarts anywhere,
   s7_clusters     large-star/small-star transitive closure (main.py:629-651)
 
 Every stage writes Parquet + a _manifest.json carrying rows, wall_ms,
-per-partition row counts (lineage), codegen_compiles (generated classes
+per-file row counts (lineage, one entry per part file, read from the Parquet
+footers without a Spark job), codegen_compiles (generated classes
 compiled while building and writing the stage; 0 when a repeat run in the
 same session finds every query shape in the codegen cache) and the config
 fingerprint; a rerun skips stages whose manifest matches — so a killed run
@@ -28,6 +29,7 @@ import time
 from dataclasses import asdict, dataclass, field
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -134,19 +136,20 @@ class Pipeline:
         return self._input_fp is None or m.get("input_fp") == self._input_fp
 
     def _write_stage(self, stage: str, build) -> DataFrame:
-        """Materialize a stage: parquet + manifest with per-partition lineage
-        and the generated classes compiled while building and writing it."""
+        """Materialize a stage: parquet + manifest with per-file lineage
+        and the generated classes compiled while building and writing it.
+        The write is the stage's only Spark job: row counts come from the
+        part files' Parquet footers, read on the driver, and the stage is
+        read back with the written schema (a file source makes a given
+        schema nullable, as Spark writes it), so nothing is inferred."""
         out = self._path(stage)
         compiles0 = codegen_compiles(self.spark)
         df = build()
         t0 = time.monotonic()
         df.write.mode("overwrite").parquet(str(out / "data"))
-        back = self.spark.read.parquet(str(out / "data"))
         part_counts = [
-            {"partition_id": r["pid"], "rows": r["rows"]}
-            for r in back.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
+            {"file": f.name, "rows": pq.read_metadata(f).num_rows}
+            for f in sorted((out / "data").glob("part-*.parquet"))
         ]
         rows = sum(p["rows"] for p in part_counts)
         wall_ms = int((time.monotonic() - t0) * 1000)
@@ -166,7 +169,7 @@ class Pipeline:
         self.stage_metrics[stage] = {"rows": rows, "wall_ms": wall_ms,
                                      "n_partitions": len(part_counts),
                                      "codegen_compiles": compiles}
-        return back
+        return self.spark.read.schema(df.schema).parquet(str(out / "data"))
 
     def _read_stage(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(str(self._path(stage) / "data"))

@@ -10,7 +10,7 @@ import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from record_matching_spark.operators.scoring import _cos_jac_batch
+from record_matching_spark.operators.scoring import _arrow_side, _cos_jac_batch
 
 # a pair = (sorted distinct tids, aligned weights) per side; tids < 2^31
 _tid = st.integers(min_value=0, max_value=(1 << 31) - 1)
@@ -49,7 +49,7 @@ def test_cos_jac_batch_matches_per_pair_oracle(pairs):
     tw_l = pa.array([p[0][1] for p in pairs], type=pa.list_(pa.float32()))
     tid_r = pa.array([p[1][0] for p in pairs], type=pa.list_(pa.int32()))
     tw_r = pa.array([p[1][1] for p in pairs], type=pa.list_(pa.float32()))
-    cos, jac = _cos_jac_batch(tid_l, tw_l, tid_r, tw_r, n)
+    cos, jac = _cos_jac_batch(_arrow_side(tid_l, tw_l), _arrow_side(tid_r, tw_r), n)
     want_cos, want_jac = _oracle(pairs)
     # float32 weights ride the Arrow arrays, so compare at float32 precision
     assert np.allclose(jac, want_jac, atol=1e-12)
@@ -57,10 +57,10 @@ def test_cos_jac_batch_matches_per_pair_oracle(pairs):
 
 
 def test_cos_jac_batch_null_rows():
-    """Null list slots (left-join misses) behave as empty token sets."""
+    """Null list slots (empty-token documents) behave as empty token sets."""
     tid_l = pa.array([None, [1, 2]], type=pa.list_(pa.int32()))
     tw_l = pa.array([None, [0.5, 0.5]], type=pa.list_(pa.float32()))
     tid_r = pa.array([[1], None], type=pa.list_(pa.int32()))
     tw_r = pa.array([[1.0], None], type=pa.list_(pa.float32()))
-    cos, jac = _cos_jac_batch(tid_l, tw_l, tid_r, tw_r, 2)
+    cos, jac = _cos_jac_batch(_arrow_side(tid_l, tw_l), _arrow_side(tid_r, tw_r), 2)
     assert list(jac) == [0.0, 0.0] and list(cos) == [0.0, 0.0]

@@ -67,7 +67,7 @@ def test_cluster_quality(run, truth_df):
     assert m["f1"] >= 0.99, m
 
 
-def test_manifests_and_lineage(run):
+def test_manifests_and_lineage(run, spark):
     for stage in Pipeline.STAGES:
         mf = run["work"] / stage / "_manifest.json"
         assert mf.exists(), f"missing manifest for {stage}"
@@ -75,10 +75,42 @@ def test_manifests_and_lineage(run):
         assert m["complete"] and m["rows"] > 0
         assert isinstance(m["partitions"], list) and len(m["partitions"]) >= 1
         assert sum(p["rows"] for p in m["partitions"]) == m["rows"]
+        data = run["work"] / stage / "data"
+        assert sorted(p["file"] for p in m["partitions"]) == sorted(
+            f.name for f in data.glob("part-*.parquet"))
+        assert spark.read.parquet(str(data)).count() == m["rows"]
         assert isinstance(m["codegen_compiles"], int) and m["codegen_compiles"] >= 0
         assert run["pipe"].stage_metrics[stage]["codegen_compiles"] == m["codegen_compiles"]
     metrics = json.loads((run["work"] / "metrics.json").read_text())
     assert all("codegen_compiles" in metrics[s] for s in Pipeline.STAGES)
+    # the clusters frame run() returns is s7's read-back with the written schema
+    inferred = spark.read.parquet(str(run["work"] / "s7_clusters" / "data")).schema
+    assert run["clusters"].schema == inferred
+
+
+def test_write_stage_runs_one_job(spark, tmp_path):
+    """After build(), a stage write runs one Spark job (the write itself):
+    lineage comes from the Parquet footers and the read-back takes the
+    written schema, which equals the one Spark would infer (nullable
+    fields, nested types included)."""
+    pipe = Pipeline(spark, tmp_path)
+    df = spark.range(0, 500, 1, 3).selectExpr(
+        "id", "array(id, id + 1) AS arr", "named_struct('x', id, 'y', 'v') AS st"
+    )
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    sc.setJobGroup("write-stage", "one job per stage write")
+    try:
+        back = pipe._write_stage("s_probe", lambda: df)
+        bus.waitUntilEmpty(10_000)
+        ids = list(sc.statusTracker().getJobIdsForGroup("write-stage"))
+    finally:
+        sc.setJobGroup("write-stage-after", "")
+    assert len(ids) == 1, ids
+    m = json.loads((tmp_path / "s_probe" / MANIFEST).read_text())
+    assert m["rows"] == 500 and sum(p["rows"] for p in m["partitions"]) == 500
+    assert back.schema == spark.read.parquet(str(tmp_path / "s_probe" / "data")).schema
+    assert sorted(r["id"] for r in back.collect()) == list(range(500))
 
 
 def test_rerun_compiles_no_new_code(spark, truth_df, tmp_path_factory):

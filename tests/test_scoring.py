@@ -162,11 +162,94 @@ def test_metadata_features(spark):
     assert xz["dir_sim"] == 0.0          # src/a vs lib/b
 
 
-def test_pair_features_plans_agree(spark, monkeypatch):
-    """The per-distinct-content-pair plan and the per-file-pair plan must
-    give every pair the same features. Forced on one dup-heavy corpus
-    (which picks the per-content plan by itself); 1e-12, not exact, because
-    _cos_jac_batch sums in an order that depends on which side is left."""
+def test_lev_kernel_matches_spark_levenshtein(spark):
+    """The kernel's lev_sig equals Spark's levenshtein(a, b, 48) under the
+    same-content, both-empty and equal-signature rules, exactly: random
+    signatures of 0-96 code points on both sides of the 64-char block
+    edge, near-copies whose distance straddles the threshold, equal and
+    empty strings, and BMP and astral characters."""
+    import random
+
+    import pyarrow as pa
+
+    from record_matching_spark.operators.scoring import _lev_sig, _sig_codes
+
+    rng = random.Random(7)
+    alphabet = list("ab c_z") + ["é", "中", "\U0001F600"]
+
+    def sig(n):
+        return "".join(rng.choice(alphabet[:rng.randint(2, 9)]) for _ in range(n))
+
+    def edit(s, k):
+        c = list(s)
+        for _ in range(k):
+            i = rng.randint(0, len(c))
+            if c and rng.random() < 0.5:
+                c.pop(min(i, len(c) - 1))
+            else:
+                c.insert(i, rng.choice(alphabet))
+        return "".join(c)[:96]
+
+    lengths = [0, 1, 2, 31, 63, 64, 65, 95, 96]
+    rows = []
+    for k in range(1500):
+        a = sig(rng.choice(lengths + [rng.randint(0, 96)]))
+        b = (sig(rng.choice(lengths + [rng.randint(0, 96)])) if k % 3 == 0
+             else a if k % 17 == 0 else edit(a, rng.randint(0, 60)))
+        csid_a = rng.randint(0, 40)
+        csid_b = csid_a if k % 13 == 0 else rng.randint(0, 40)
+        rows.append((k, csid_a, csid_b, a, b))
+    rows += [(2000, 1, 2, "", ""), (2001, 3, 3, "", ""), (2002, 4, 5, "", "ab"),
+             (2003, 6, 7, "中" * 64, ""), (2004, 8, 9, "é" * 96, "é" * 96)]
+
+    df = spark.createDataFrame(rows, "k long, csid_a long, csid_b long, sig_a string, sig_b string")
+    # the Catalyst expression the kernel replaces
+    d = F.levenshtein("sig_a", "sig_b", 48)
+    oracle = (
+        F.when(F.col("csid_a") == F.col("csid_b"), F.lit(1.0))
+        .when((F.length("sig_a") == 0) & (F.length("sig_b") == 0), F.lit(0.0))
+        .when(F.col("sig_a") == F.col("sig_b"), F.lit(1.0))
+        .otherwise(F.when(d < 0, F.lit(0.0)).otherwise(
+            F.lit(1.0) - d.cast("double")
+            / F.greatest(F.length("sig_a"), F.length("sig_b"), F.lit(1))
+        ))
+    )
+    want = dict(df.select("k", oracle.alias("v")).collect())
+    assert len(set(want.values())) > 100  # the threshold and the DP both ran
+
+    n = len(rows)
+    ids, codes, lens = _sig_codes(pa.array([r[3] for r in rows] + [r[4] for r in rows]))
+    same = np.array([r[1] == r[2] for r in rows])
+    got = _lev_sig(codes, lens, ids[:n], ids[n:], same)
+    bad = [(r, got[i], want[r[0]]) for i, r in enumerate(rows) if got[i] != want[r[0]]]
+    assert not bad, bad[:3]
+
+
+def _map_in_arrow_inputs(df) -> list[str]:
+    """Input column names of the MapInArrow node of df's executed plan,
+    found by walking plan nodes (adaptive and query-stage wrappers too)."""
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "MapInArrowExec":
+            out = node.child().output()
+            return [out.apply(i).name() for i in range(out.size())]
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        seq = node.children()
+        todo.extend(seq.apply(i) for i in range(seq.size()))
+    raise AssertionError("no MapInArrow node in the plan")
+
+
+def test_pair_features_attach_sources_agree(spark, monkeypatch):
+    """The broadcast content table and the sort-merge attach (forced by a
+    zero budget) feed the one kernel the same inputs, so every feature of
+    every pair is equal; both drop the pairs of a content that has no
+    feature row (the inner-join contract), and with the broadcast table the
+    kernel's input carries no token arrays."""
     import record_matching_spark.operators.scoring as S
     from record_matching_spark.operators.blocking import blocking_keys, candidate_pairs
     from record_matching_spark.synth import repo_files, synth_repo_files_with_truth
@@ -174,24 +257,29 @@ def test_pair_features_plans_agree(spark, monkeypatch):
     truth = synth_repo_files_with_truth(spark, n_families=40, seed=42,
                                         mutations_max=0, heavy_families=2)
     norm = normalize_files(repo_files(truth)).cache()
-    n_files, n_shas = norm.agg(F.count("*"), F.count_distinct("content_sha")).first()
-    assert n_files > S.DEDUP_CONTENT_MIN_RATIO * n_shas
     pairs = candidate_pairs(blocking_keys(norm, id_col="fid"), id_col="fid").cache()
+    gone = pairs.join(norm.select(F.col("fid").alias("left"), "content_sha"), "left") \
+        .first()["content_sha"]
+    shaf = S.sha_features(norm).filter(F.col("content_sha") != gone).localCheckpoint()
+    fid_sha = dict(norm.select("fid", "content_sha").collect())
+    kept = {(r["left"], r["right"]) for r in pairs.collect()
+            if gone not in (fid_sha[r["left"]], fid_sha[r["right"]])}
 
-    def run(ratio):
-        monkeypatch.setattr(S, "DEDUP_CONTENT_MIN_RATIO", ratio)
-        feats = pair_features(pairs, norm, id_col="fid")
-        # only the per-content plan evaluates jw_path in a pandas UDF
-        plan = feats._jdf.queryExecution().executedPlan().toString()
-        assert ("ArrowEvalPython" in plan) == (ratio == 0.0)
-        return {(r["left"], r["right"]): r for r in feats.collect()}
+    def run(budget):
+        monkeypatch.setattr(S, "BROADCAST_BUDGET_BYTES", budget)
+        feats = pair_features(pairs, norm, shaf=shaf, id_col="fid")
+        rows = {(r["left"], r["right"]): r for r in feats.collect()}
+        return rows, _map_in_arrow_inputs(feats)
 
-    per_sha, per_file = run(0.0), run(math.inf)
-    assert per_sha.keys() == per_file.keys() and len(per_sha) > 1000
-    for key, a in per_sha.items():
-        b = per_file[key]
+    (bcast, bcast_in), (merged, merged_in) = run(S.BROADCAST_BUDGET_BYTES), run(0)
+    assert bcast.keys() == merged.keys() == kept
+    assert 1000 < len(kept) < pairs.count()
+    for key, a in bcast.items():
+        b = merged[key]
         for f in FEATURES:
-            assert abs(a[f] - b[f]) <= 1e-12, (key, f, a[f], b[f])
+            assert a[f] == b[f], (key, f, a[f], b[f])
+    assert not [c for c in bcast_in if c.startswith(("tid_", "tw_"))], bcast_in
+    assert {"tid_l", "tw_l", "tid_r", "tw_r"} <= set(merged_in)
 
 
 def test_score_monotone(spark):
