@@ -139,10 +139,9 @@ def ngram_jaccard_pairs(
     )
 
 
-# corpora of at most this many documents verify against a broadcast
-# payload; larger ones sort-merge the pair stream against it, the only
-# attach that is safe at scale. Tests patch it to reach that branch.
-VERIFY_BROADCAST_MAX_DOCS = 200_000
+# bytes of one verify-payload row besides its token hashes (id, content
+# hash and set size); each token adds one 8-byte hash
+_PAYLOAD_ROW_BYTES = 24
 
 # verify-payload column names of the two sides of a cross-corpus pair
 _CORPUS = ("corpus_id", "_ta", "_sha_a", "_na")
@@ -288,9 +287,11 @@ def minhash_near_dup_pairs(
 
     Join strategy: candidate pairs are deduped first (distinct on the two id
     columns only — cross-band duplicates would otherwise multiply the
-    verification's array work), then per-doc token features are attached —
-    broadcast when the corpus has at most VERIFY_BROADCAST_MAX_DOCS
-    documents, sort-merge otherwise.
+    verification's array work), then the per-doc verify payload is
+    attached — broadcast when its bytes, measured on the action that
+    materializes it (rows and total token count), fit
+    session.BROADCAST_BUDGET_BYTES; sort-merge otherwise, or when the
+    measurement does not arrive.
     """
     # single-file corpora otherwise run tokenize+signature on one core
     df = _fan_out(df)
@@ -300,22 +301,21 @@ def minhash_near_dup_pairs(
     # sizes. localCheckpoint (not persist): auto-released when the plan is
     # GC'd instead of pinning executor storage for the session (ADVICE fix);
     # the staged pipeline gets the same effect from its parquet checkpoint.
-    # The corpus row count rides the SAME materialization action via
-    # observe() — every doc emits exactly num_bands band rows + 1
-    # content-sha row, so n_docs = n_block_rows/(num_bands+1) and the join
-    # strategy needs NO separate count job (VERDICT r2 item 5). No count
-    # within the timeout → the sort-merge attach, safe at any size.
-    obs = Observation("dedup_blocks_n")
-    blocks = blocks.observe(obs, F.count(F.lit(1)).alias("n"))
     blocks = blocks.localCheckpoint(eager=True)
-    row = session.observed_row(obs)
-    broadcast = (
-        row is not None
-        and row["n"] / (num_bands + 1) <= VERIFY_BROADCAST_MAX_DOCS
-    )
     # materialized ONCE: both verify sides and the size table read it, so
-    # tokenize runs one more time total instead of once per join side
-    toksh = _payload(df, id_col, text_col, shingle_k).localCheckpoint(eager=True)
+    # tokenize runs one more time total instead of once per join side. The
+    # payload's size rides the SAME action via observe(), so the join
+    # strategy needs NO separate count job (VERDICT r2 item 5). No size
+    # within the timeout → the sort-merge attach, safe at any size.
+    obs = Observation("dedup_payload")
+    toksh = _payload(df, id_col, text_col, shingle_k).observe(
+        obs, F.count(F.lit(1)).alias("rows"), F.sum("_n").alias("tokens")
+    ).localCheckpoint(eager=True)
+    row = session.observed_row(obs)
+    broadcast = row is not None and (
+        row["rows"] * _PAYLOAD_ROW_BYTES + 8 * (row["tokens"] or 0)
+        <= session.BROADCAST_BUDGET_BYTES
+    )
     if broadcast:
         # split attach (all four joins map-side broadcast): sizes+sha first
         # so the size filter runs before any array row is built

@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+from record_matching_spark import session
+
 # tiny deterministic stopword marker sets per language (heuristic lang-id)
 _LANG_MARKERS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "is"],
@@ -859,7 +861,6 @@ def unigram_logprob(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Corpus-self-trained unigram language-model score per document: the
     mean negative natural-log probability of the document's tokens under
@@ -872,10 +873,10 @@ def unigram_logprob(
     token) counts FIRST (one shuffle on id_col+token), so the vocabulary
     join touches one row per distinct token per doc, not one per
     occurrence; the vocabulary itself (Zipf-small relative to any corpus)
-    is re-aggregated from those counts and broadcast when
-    `broadcast_vocab` (at true 100-TB vocab sizes, disable and let AQE
-    pick the join). The only driver-side value is the scalar total token
-    count. No UDFs; fully SQL-expressible -> DuckDB oracle q46.
+    is re-aggregated from those counts and broadcast when its bytes fit
+    session.BROADCAST_BUDGET_BYTES. The only driver-side values are one
+    aggregate's scalars (total tokens, vocabulary rows and bytes). No
+    UDFs; fully SQL-expressible -> DuckDB oracle q46.
 
     Output: (id_col, n_tokens, neg_logprob double) — one row per input
     row; tokenless docs get neg_logprob 0.0. Reference analog: the
@@ -890,8 +891,14 @@ def unigram_logprob(
         .agg(F.count(F.lit(1)).alias("c"))
     )
     vocab = doc_tok.groupBy("tok").agg(F.sum("c").alias("cnt"))
-    total = vocab.agg(F.sum("cnt").alias("t")).collect()[0]["t"] or 0
-    v = F.broadcast(vocab) if broadcast_vocab else vocab
+    stats = vocab.agg(
+        F.sum("cnt").alias("t"), F.count(F.lit(1)).alias("n"),
+        F.sum(F.octet_length("tok")).alias("b"),
+    ).collect()[0]
+    total = stats["t"] or 0
+    # a row is its key's bytes plus an 8-byte string header and value
+    fits = 16 * stats["n"] + (stats["b"] or 0) <= session.BROADCAST_BUDGET_BYTES
+    v = F.broadcast(vocab) if fits else vocab
     scored = (
         doc_tok.join(v, "tok")
         .groupBy(id_col)
@@ -975,7 +982,6 @@ def bigram_logprob(
     text_col: str = "text",
     id_col: str = "doc_id",
     add_k: float = 1.0,
-    broadcast_model: bool = True,
     smoothing: str = "addk",
     discount: float = 0.75,
 ) -> DataFrame:
@@ -995,9 +1001,10 @@ def bigram_logprob(
 
     Scale shape mirrors unigram_logprob: the exploded bigram stream
     collapses to per-(doc, bigram) counts first; the bigram and unigram
-    count tables (Zipf-small) re-aggregate from those and broadcast when
-    `broadcast_model`; V (distinct unigrams) and nothing else comes to
-    the driver. No UDFs; fully SQL-expressible -> DuckDB oracle q56.
+    count tables (Zipf-small) re-aggregate from those, and the model
+    broadcasts when its bytes fit session.BROADCAST_BUDGET_BYTES. Only one
+    aggregate's scalars (V, bigram types and bytes) come to the driver.
+    No UDFs; fully SQL-expressible -> DuckDB oracle q56.
 
     Output: (id_col, n_bigrams, neg_logprob double); docs with < 2
     tokens get 0.0."""
@@ -1016,27 +1023,27 @@ def bigram_logprob(
     bg_counts = doc_bg.groupBy("bg").agg(F.sum("c").alias("c_bg"))
     # unigram CONTEXT counts: occurrences of w1 as a bigram left side ==
     # token occurrences except each doc's last token; derive from the
-    # bigram table itself so the two marginals are exactly consistent
+    # bigram table itself so the two marginals are exactly consistent;
+    # n1f = bigram types starting with w1
     ug_counts = (
         bg_counts.select(
-            F.split_part(F.col("bg"), F.lit(" "), F.lit(1)).alias("w1"), "c_bg"
+            F.split_part(F.col("bg"), F.lit(" "), F.lit(1)).alias("w1"), "c_bg",
+            F.octet_length("bg").alias("bg_bytes"),
         )
         .groupBy("w1")
-        .agg(F.sum("c_bg").alias("c_w1"))
+        .agg(F.sum("c_bg").alias("c_w1"), F.count(F.lit(1)).alias("n1f"),
+             F.sum("bg_bytes").alias("bg_bytes"))
     )
+    stats = ug_counts.agg(
+        F.count(F.lit(1)).alias("v"), F.sum("n1f").alias("n_types"),
+        F.sum("bg_bytes").alias("b"),
+    ).collect()[0]
+    n_types = int(stats["n_types"] or 0)
     bgm = bg_counts.withColumn(
         "w1", F.split_part(F.col("bg"), F.lit(" "), F.lit(1))
     ).join(ug_counts, "w1")
     if smoothing == "kn":
         d = float(discount)
-        n_types = int(bg_counts.count())
-        n1f = (
-            bg_counts.withColumn(
-                "w1", F.split_part(F.col("bg"), F.lit(" "), F.lit(1))
-            )
-            .groupBy("w1")
-            .agg(F.count(F.lit(1)).alias("n1f"))
-        )
         n1b = (
             bg_counts.withColumn(
                 "w2", F.split_part(F.col("bg"), F.lit(" "), F.lit(2))
@@ -1045,8 +1052,7 @@ def bigram_logprob(
             .agg(F.count(F.lit(1)).alias("n1b"))
         )
         model = (
-            bgm.join(n1f, "w1")
-            .withColumn("w2", F.split_part(F.col("bg"), F.lit(" "), F.lit(2)))
+            bgm.withColumn("w2", F.split_part(F.col("bg"), F.lit(" "), F.lit(2)))
             .join(n1b, "w2")
             .select(
                 "bg",
@@ -1059,7 +1065,7 @@ def bigram_logprob(
             )
         )
     else:
-        vocab_size = int(ug_counts.count())
+        vocab_size = int(stats["v"])
         model = bgm.select(
             "bg",
             (
@@ -1067,7 +1073,7 @@ def bigram_logprob(
                 / (F.col("c_w1") + F.lit(float(add_k) * vocab_size))
             ).alias("p"),
         )
-    if broadcast_model:
+    if 16 * n_types + (stats["b"] or 0) <= session.BROADCAST_BUDGET_BYTES:
         model = F.broadcast(model)
     scored = (
         doc_bg.join(model, "bg")

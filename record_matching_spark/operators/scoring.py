@@ -30,8 +30,6 @@ Feature vector (per candidate pair):
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -86,19 +84,11 @@ _SIG_TOKENS = 12
 _SIG_CHARS = 96
 _LEV_THRESHOLD = _SIG_CHARS // 2
 
-# broadcast budget for the content table the driver collects (csid, CSR
-# token ids/weights, signature): measured payload ≈ 1 KB/row (int32 tid +
-# float32 tw arrays + 96-char sig). The 256 MB cap targets the smallest
-# executors a mixed cluster is likely to run (VERDICT r2 item 5: a forced
-# 500 MB broadcast can OOM small executors).
+# measured payload of one content-table row pair_features collects and
+# broadcasts (int32 tid + float32 tw arrays + 96-char sig) ≈ 1 KB; one
+# vocabulary row sha_features broadcasts is an int64 tid + float64 df
 _FEATURE_ROW_BYTES = 1024
-BROADCAST_BUDGET_BYTES = 256 << 20
-
-# sha_features: above this many distinct documents the vocabulary may not
-# fit the driver/broadcast, so the idf attach falls back to the shuffle
-# join instead of the numpy-broadcast map-side finish (module constant so
-# tests can force the fallback and pin both paths to identical outputs)
-VOCAB_BROADCAST_MAX_DOCS = 1_000_000
+_VOCAB_ROW_BYTES = 16
 
 
 # ---------------------------------------------------------------- features
@@ -119,21 +109,22 @@ def sha_features(files: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     inside one pair's union perturbs jaccard by ~1%, far below the decision
     margin).
 
-    r6 plan (guide §2.3 'aggregate before you shuffle' + §4.2): the round-5
-    shape exploded every token occurrence into a (csid, tid) row, shuffled
-    it twice (groupBy (csid,tid), then groupBy csid + collect_list + sort)
-    and joined the idf table back — the token explosion was the widest
-    exchange in the ER scoring stage (er_shaf isolated at 10.2s of the
-    15.0s er_scoring probe). Now the per-doc (tid, tf) arrays are built
-    MAP-SIDE in one Arrow pass (np.unique over packed (row<<31)|tid keys —
-    no per-row Python), only the tid→df aggregate shuffles (vocab-sized,
-    map-side partial agg), the idf table broadcasts as two numpy arrays,
-    and the weights+norms are computed map-side in a second Arrow pass.
-    Zero doc-sized exchanges. The doc count rides the stage-1 checkpoint
-    via observe() — no separate count job. Beyond 1M distinct docs the
-    vocabulary may not fit the driver, so the round-5 shuffle shape is
-    kept as the fallback (same outputs, pinned by
-    tests/test_scoring.py::test_sha_features_paths_agree)."""
+    Two Arrow passes, no doc-sized exchange (guide §2.3 'aggregate before
+    you shuffle'). The first builds each document's sorted (tid, tf)
+    arrays map-side (np.unique over packed (row<<31)|tid keys) and is
+    checkpointed; the document count rides that action via observe(). The
+    only shuffle is then the vocabulary-sized tid→df aggregate. The second
+    pass, `w_kernel`, is the one TF-IDF weight formula, (1 + ln tf) ·
+    (ln((N+1)/(df+1)) + 1), L2-normalized per document. It takes df from
+    one of two sources, picked by the vocabulary rows actually pulled:
+    - within session.BROADCAST_BUDGET_BYTES (16 B/row) the vocabulary is
+      collected once and broadcast as two sorted numpy arrays;
+    - above it nothing is collected: a JVM join attaches a per-document df
+      array aligned with tid (posexplode(tid) ⋈ vocab → groupBy(csid) →
+      array_sort(collect_list(struct(pos, df)))).
+    Both sources give bit-identical tw (pinned by
+    tests/test_scoring.py::test_sha_features_paths_agree). A document
+    without tokens gets NULL tid and tw."""
     from pyspark.sql import Observation
 
     docs = files.select("content_sha", tokens_col).dropDuplicates(["content_sha"])
@@ -190,100 +181,73 @@ def sha_features(files: DataFrame, tokens_col: str = "tokens") -> DataFrame:
         schema="content_sha string, csid long, sig string, "
                "tid array<int>, tf array<bigint>",
     ).observe(obs, F.count(F.lit(1)).alias("n"))
-    # materialized once: the df aggregate below and the final weight pass
-    # both read it, and the observe rides this single action (no count
-    # within the timeout → count the checkpointed table)
+    # materialized once: the df aggregate below and the weight pass both
+    # read it, and the observe rides this single action (no count within
+    # the timeout → count the checkpointed table)
     stage1 = stage1.localCheckpoint(eager=True)
     row = session.observed_row(obs)
-    n_docs = int(row["n"]) if row is not None else stage1.count()
+    nd = float(row["n"] if row is not None else stage1.count())
 
-    if n_docs <= VOCAB_BROADCAST_MAX_DOCS:
-        # vocab ≪ corpus: ship the idf table to executors as two sorted
-        # numpy arrays and finish entirely map-side. The only shuffle in
-        # this whole operator is the vocab-sized tid→df aggregate.
-        vocab = (
-            stage1.select(F.explode("tid").alias("tid"))
-            .groupBy("tid")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .toArrow()
-        )
-        vt = vocab.column("tid").to_numpy().astype(np.int64)
-        vdf = vocab.column("df").to_numpy().astype(np.float64)
+    vocab = (
+        stage1.select(F.explode("tid").alias("tid"))
+        .groupBy("tid")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
+    table = session.collect_within_budget(vocab, _VOCAB_ROW_BYTES)
+    if table is not None:
+        vt = table.column("tid").to_numpy().astype(np.int64)
+        vdf = table.column("df").to_numpy().astype(np.float64)
         order = np.argsort(vt)
-        vt, vdf = vt[order], vdf[order]
-        bc = files.sparkSession.sparkContext.broadcast((vt, vdf))
-        nd = float(n_docs)
+        bc = files.sparkSession.sparkContext.broadcast((vt[order], vdf[order]))
+    else:
+        bc = None
+        dfs = (
+            stage1.select("csid", F.posexplode("tid").alias("pos", "tid"))
+            .join(vocab, "tid")
+            .groupBy("csid")
+            .agg(F.array_sort(F.collect_list(F.struct("pos", "df"))).alias("pd"))
+            .select("csid", F.col("pd.df").alias("df"))
+        )
+        stage1 = stage1.join(dfs, "csid", "left")
 
-        def w_kernel(batches):
-            import pyarrow as pa
+    def w_kernel(batches):
+        import pyarrow as pa
 
-            vt_l, vdf_l = bc.value
-            for rb in batches:
-                idx = {name: i for i, name in enumerate(rb.schema.names)}
-                tid_arr = rb.column(idx["tid"])
-                lens, flat_tid = _flat_lists(tid_arr)
-                _, flat_tf = _flat_lists(rb.column(idx["tf"]))
-                n = rb.num_rows
+        vocab_arrays = bc.value if bc is not None else None
+        for rb in batches:
+            tid_arr = rb.column("tid")
+            lens, flat_tid = _flat_lists(tid_arr)
+            _, flat_tf = _flat_lists(rb.column("tf"))
+            if vocab_arrays is None:
+                dfv = _flat_lists(rb.column("df"))[1].astype(np.float64)
+            else:
+                vt_l, vdf_l = vocab_arrays
                 dfv = vdf_l[np.searchsorted(vt_l, flat_tid.astype(np.int64))]
-                # identical formula/order to the JVM expression:
-                # (1 + ln tf) * (ln((N+1)/(df+1)) + 1)
-                w = (1.0 + np.log(flat_tf.astype(np.float64))) * (
-                    np.log((nd + 1.0) / (dfv + 1.0)) + 1.0
-                )
-                rows = np.repeat(np.arange(n, dtype=np.int64), lens)
-                # per-doc sum of squares in tid order — the same sequential
-                # fold order as the round-5 JVM aggregate over the sorted tv
-                norms = np.sqrt(np.bincount(rows, weights=w * w, minlength=n))
-                tw = (w / norms[rows]).astype(np.float32)
-                offsets = _offsets(lens, np.int32)
-                tw_col = pa.ListArray.from_arrays(pa.array(offsets), pa.array(tw))
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(idx["content_sha"]), rb.column(idx["sig"]),
-                     tid_arr, tw_col],
-                    names=["content_sha", "sig", "tid", "tw"],
-                )
+            w = (1.0 + np.log(flat_tf.astype(np.float64))) * (
+                np.log((nd + 1.0) / (dfv + 1.0)) + 1.0
+            )
+            n = rb.num_rows
+            rows = np.repeat(np.arange(n, dtype=np.int64), lens)
+            # per-doc sum of squares, folded in tid order
+            norms = np.sqrt(np.bincount(rows, weights=w * w, minlength=n))
+            tw = (w / norms[rows]).astype(np.float32)
+            tw_col = pa.ListArray.from_arrays(pa.array(_offsets(lens, np.int32)), pa.array(tw))
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("content_sha"), rb.column("sig"), tid_arr, tw_col],
+                names=["content_sha", "sig", "tid", "tw"],
+            )
 
-        out = stage1.mapInArrow(
-            w_kernel,
-            schema="content_sha string, sig string, tid array<int>, "
-                   "tw array<float>",
-        )
-        # empty-token docs carried NULL tid/tw in the round-5 left-join
-        # shape; keep that contract (consumers flag them via
-        # coalesce(size(tid), 0) == 0 and the s2 parquet stage round-trips)
-        return out.select(
-            "content_sha", "sig",
-            F.when(F.size("tid") > 0, F.col("tid")).alias("tid"),
-            F.when(F.size("tid") > 0, F.col("tw")).alias("tw"),
-        )
-
-    # >1M distinct docs: the vocab may not fit the driver/broadcast — keep
-    # the round-5 shuffle shape (explode from the per-doc tf arrays, join
-    # the df table, rebuild sorted vectors)
-    tf = stage1.select(
-        "csid", F.explode(F.arrays_zip("tid", "tf")).alias("z")
-    ).select("csid", F.col("z.tid").alias("tid"), F.col("z.tf").alias("tf"))
-    df_tok = tf.groupBy("tid").agg(F.count("*").alias("df"))
-    weighted = tf.join(df_tok, "tid").withColumn(
-        "w",
-        (F.lit(1.0) + F.log(F.col("tf").cast("double")))
-        * (F.log((F.lit(float(n_docs)) + 1.0) / (F.col("df") + 1.0)) + 1.0),
+    out = stage1.mapInArrow(
+        w_kernel,
+        schema="content_sha string, sig string, tid array<int>, tw array<float>",
     )
-    vecs = (
-        weighted.groupBy("csid")
-        .agg(F.array_sort(F.collect_list(F.struct("tid", "w"))).alias("tv"))
-        .withColumn(
-            "norm",
-            F.sqrt(F.aggregate("tv", F.lit(0.0), lambda acc, x: acc + x["w"] * x["w"])),
-        )
-        .select(
-            "csid",
-            F.transform("tv", lambda x: x["tid"]).alias("tid"),
-            F.transform("tv", lambda x: (x["w"] / F.col("norm")).cast("float")).alias("tw"),
-        )
+    # consumers flag empty-token docs via coalesce(size(tid), 0) == 0, and
+    # the s2 parquet stage round-trips the NULLs
+    return out.select(
+        "content_sha", "sig",
+        F.when(F.size("tid") > 0, F.col("tid")).alias("tid"),
+        F.when(F.size("tid") > 0, F.col("tw")).alias("tw"),
     )
-    sigs = stage1.select("content_sha", "csid", "sig")
-    return sigs.join(vecs, "csid", "left").drop("csid")
 
 
 def _flat_lists(arr):
@@ -504,11 +468,11 @@ def _jaro_winkler(s1: str, s2: str) -> float:
     return jaro + prefix * 0.1 * (1.0 - jaro)
 
 
-def _content_table(shafk: DataFrame):
-    """The feature table collected once, csid-sorted: (csids, CSR offsets,
-    int32 token ids, float32 weights, dense signature id per content,
-    signature code points, signature lengths)."""
-    t = shafk.toArrow().sort_by("csid")
+def _content_table(table):
+    """The collected feature table (Arrow: csid, sig, tid, tw), csid-sorted:
+    (csids, CSR offsets, int32 token ids, float32 weights, dense signature
+    id per content, signature code points, signature lengths)."""
+    t = table.sort_by("csid")
     csid, sig, tid, tw = (t.column(c).combine_chunks() for c in ("csid", "sig", "tid", "tw"))
     lens, ids, ws = _arrow_side(tid, tw)
     return (csid.to_numpy(), _offsets(lens), ids, ws) + _sig_codes(sig)
@@ -599,10 +563,10 @@ def pair_features(
     One kernel (`_pair_kernel`) scores every pair. Content features are
     computed from the per-distinct-content table `shaf` (the reference's
     embed-each-distinct-value-once economy, main.py:89-93), attached in
-    one of two ways picked by the table's row count:
-    - within BROADCAST_BUDGET_BYTES (~1 KB/row) the driver collects the
-      table once and broadcasts it; pairs cross into Python carrying only
-      ids, paths and the Catalyst metadata features;
+    one of two ways picked by the rows the driver pulls:
+    - within session.BROADCAST_BUDGET_BYTES (~1 KB/row) the driver collects
+      the table once and broadcasts it; pairs cross into Python carrying
+      only ids, paths and the Catalyst metadata features;
     - above it the table is cluster-scale and joins both pair sides by
       sort-merge, so each pair carries both sides' arrays.
     Either way the Levenshtein distance runs once per distinct signature
@@ -610,11 +574,12 @@ def pair_features(
     dropped. Output: left, right, *FEATURES.
     """
     if shaf is None:
-        # materialized once: the count below and the collect (or both
-        # attach sides) read it. localCheckpoint auto-releases on GC.
+        # materialized once: the bounded collect (or both attach sides)
+        # reads it. localCheckpoint auto-releases on GC.
         shaf = sha_features(files, tokens_col=tokens_col).localCheckpoint(eager=True)
     shafk = shaf.select(F.xxhash64("content_sha").alias("csid"), "sig", "tid", "tw")
-    broadcast = shafk.count() * _FEATURE_ROW_BYTES <= BROADCAST_BUDGET_BYTES
+    table = session.collect_within_budget(shafk, _FEATURE_ROW_BYTES)
+    broadcast = table is not None
 
     lang_col = F.col("lang") if "lang" in files.columns else F.lit("und")
     dirs = F.array_distinct(
@@ -644,7 +609,7 @@ def pair_features(
         )
     )
     if broadcast:
-        content = files.sparkSession.sparkContext.broadcast(_content_table(shafk))
+        content = files.sparkSession.sparkContext.broadcast(_content_table(table))
     else:
         content = None
         for s in ("_l", "_r"):
@@ -810,7 +775,3 @@ def choose_threshold(scored_labeled: DataFrame, grid: int = 99) -> tuple[float, 
         tp -= pos[b]
         fp -= neg[b]
     return best
-
-
-def sigmoid(x: float) -> float:
-    return 1.0 / (1.0 + math.exp(-x))

@@ -15,9 +15,10 @@ Parquet directory and the per-stage CLI restarts anywhere,
 
 Every stage writes Parquet + a _manifest.json carrying rows, wall_ms,
 per-file row counts (lineage, one entry per part file, read from the Parquet
-footers without a Spark job), codegen_compiles (generated classes
-compiled while building and writing the stage; 0 when a repeat run in the
-same session finds every query shape in the codegen cache) and the config
+footers without a Spark job), the written schema (every read of the stage
+uses it, so none infers one), codegen_compiles (generated classes compiled
+while building and writing the stage; 0 when a repeat run in the same
+session finds every query shape in the codegen cache) and the config
 fingerprint; a rerun skips stages whose manifest matches — so a killed run
 resumes where it died (north-rule resumability requirement).
 """
@@ -32,6 +33,7 @@ from pathlib import Path
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from record_matching_spark.operators.blocking import blocking_keys, candidate_pairs
 from record_matching_spark.operators.cluster import cluster_assignments
@@ -127,7 +129,8 @@ class Pipeline:
             m = json.loads(mf.read_text())
         except json.JSONDecodeError:
             return False
-        if not (m.get("complete") and m.get("config") == self.config.fingerprint()):
+        if not (m.get("complete") and "schema" in m
+                and m.get("config") == self.config.fingerprint()):
             return False
         # _input_fp is None until run() computes it; a freshly constructed
         # Pipeline inspecting an existing workdir (register_pipeline_views)
@@ -136,12 +139,11 @@ class Pipeline:
         return self._input_fp is None or m.get("input_fp") == self._input_fp
 
     def _write_stage(self, stage: str, build) -> DataFrame:
-        """Materialize a stage: parquet + manifest with per-file lineage
-        and the generated classes compiled while building and writing it.
-        The write is the stage's only Spark job: row counts come from the
-        part files' Parquet footers, read on the driver, and the stage is
-        read back with the written schema (a file source makes a given
-        schema nullable, as Spark writes it), so nothing is inferred."""
+        """Materialize a stage: parquet + manifest with per-file lineage,
+        the written schema and the generated classes compiled while
+        building and writing it. The write is the stage's only Spark job:
+        row counts come from the part files' Parquet footers, read on the
+        driver, and the stage is read back like a resumed one."""
         out = self._path(stage)
         compiles0 = codegen_compiles(self.spark)
         df = build()
@@ -161,6 +163,7 @@ class Pipeline:
             "wall_ms": wall_ms,
             "partitions": part_counts,
             "codegen_compiles": compiles,
+            "schema": df.schema.json(),
             "config": self.config.fingerprint(),
             "input_fp": self._input_fp,
             "written_at": time.time(),
@@ -169,10 +172,14 @@ class Pipeline:
         self.stage_metrics[stage] = {"rows": rows, "wall_ms": wall_ms,
                                      "n_partitions": len(part_counts),
                                      "codegen_compiles": compiles}
-        return self.spark.read.schema(df.schema).parquet(str(out / "data"))
+        return self._read_stage(stage)
 
     def _read_stage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(str(self._path(stage) / "data"))
+        """A written stage, read with its manifest's schema (made nullable,
+        as Spark writes it), so the read runs no Spark job."""
+        m = json.loads((self._path(stage) / MANIFEST).read_text())
+        schema = StructType.fromJson(json.loads(m["schema"]))
+        return self.spark.read.schema(schema).parquet(str(self._path(stage) / "data"))
 
     def _stage(self, stage: str, build) -> DataFrame:
         if self._is_done(stage):

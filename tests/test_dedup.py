@@ -89,7 +89,8 @@ def test_minhash_jaccard_values_match_oracle(spark):
 
 def test_minhash_verify_attach_shapes_agree(spark, monkeypatch):
     """The broadcast split attach and the sort-merge attach (forced by a
-    zero doc-count bound) verify the same pairs to the same values."""
+    zero broadcast budget) verify the same pairs to the same values."""
+    from record_matching_spark import session
     from record_matching_spark.functions import dedup
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -102,7 +103,7 @@ def test_minhash_verify_attach_shapes_agree(spark, monkeypatch):
         )
 
     broadcast = pairs()
-    monkeypatch.setattr(dedup, "VERIFY_BROADCAST_MAX_DOCS", 0)
+    monkeypatch.setattr(session, "BROADCAST_BUDGET_BYTES", 0)
     sort_merge = pairs()
     assert sort_merge == broadcast and len(broadcast) > 0
 

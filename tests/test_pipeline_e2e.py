@@ -113,6 +113,37 @@ def test_write_stage_runs_one_job(spark, tmp_path):
     assert sorted(r["id"] for r in back.collect()) == list(range(500))
 
 
+def test_resumed_stage_read_runs_no_job(spark, tmp_path):
+    """A resumed stage is read with the schema its manifest records: the
+    read runs no Spark job and gives the schema the write returned. A
+    manifest without a schema counts as not done, so the stage
+    recomputes."""
+    df = spark.range(0, 50, 1, 2).selectExpr(
+        "id", "array(id) AS arr", "named_struct('x', id, 'y', 'v') AS st"
+    )
+    written = Pipeline(spark, tmp_path)._write_stage("s_probe", lambda: df)
+    pipe = Pipeline(spark, tmp_path)
+    assert pipe._is_done("s_probe")
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty(10_000)
+    sc.setJobGroup("read-stage", "no job per resumed stage read")
+    try:
+        back = pipe._stage("s_probe", lambda: df)
+        bus.waitUntilEmpty(10_000)
+        ids = list(sc.statusTracker().getJobIdsForGroup("read-stage"))
+    finally:
+        sc.setJobGroup("read-stage-after", "")
+    assert ids == [] and pipe.stage_metrics["s_probe"] == {"resumed": True}
+    assert back.schema == written.schema
+    assert sorted(r["id"] for r in back.collect()) == list(range(50))
+    mf = tmp_path / "s_probe" / MANIFEST
+    m = json.loads(mf.read_text())
+    del m["schema"]
+    mf.write_text(json.dumps(m))
+    assert not pipe._is_done("s_probe")
+
+
 def test_rerun_compiles_no_new_code(spark, truth_df, tmp_path_factory):
     """One pipeline run compiles more generated classes than Spark's default
     100-entry codegen cache holds (at 100 entries a second run recompiled

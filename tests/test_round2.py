@@ -1,10 +1,10 @@
 """Round-2 operators: search (B24), normalization analogs (B10), SQL surface
-(A25), empty-token pair scoring (ADVICE), RF CV (B19), and the CSV
-source/sink round-trip (A1/A4)."""
+(A25), the Iceberg DDL recipe and the CSV source/sink round-trip (A1/A4).
+The empty-token pair scoring and RF CV (B19) tests live in
+tests/test_scoring.py."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -75,53 +75,6 @@ def test_sql_views_over_testdata(spark):
         GROUP BY r.r_name ORDER BY r.r_name
     """).collect()
     assert len(got) == 5 and sum(r["n"] for r in got) == 25
-
-
-def test_empty_token_pairs_score_low(spark):
-    from record_matching_spark.operators.normalize import normalize_files
-    from record_matching_spark.operators.scoring import pair_features
-
-    rows = [
-        ("r0", "a.py", "c0", "python", "!!! ???"),
-        ("r1", "b.py", "c1", "python", "$$$ %%%"),
-    ]
-    files = normalize_files(spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, content string"
-    ))
-    ids = sorted(r["file_id"] for r in files.select("file_id").collect())
-    pairs = spark.createDataFrame([tuple(ids)], "left string, right string")
-    r = pair_features(pairs, files).collect()[0]
-    assert r["jaccard"] == 0.0 and r["tfidf_cos"] == 0.0 and r["lev_sig"] == 0.0
-
-
-# --------------------------------------------------------------- B19 RF CV
-
-
-def test_random_forest_cv_and_threshold(spark):
-    import random
-
-    from record_matching_spark.operators.scoring import train_random_forest_cv
-
-    rng = random.Random(7)
-    rows = []
-    for i in range(240):
-        match = i % 2 == 0
-        base = 0.85 if match else 0.25
-        f = lambda: min(1.0, max(0.0, base + rng.uniform(-0.1, 0.1)))
-        rows.append((f"l{i}", f"r{i}", f(), f(), f(), 0.5, 1.0, f(), 0.0, 0.0,
-                     match))
-    df = spark.createDataFrame(
-        rows, "left string, right string, jaccard double, tfidf_cos double, "
-              "lev_sig double, jw_path double, same_lang double, dir_sim double, "
-              "any_empty double, both_empty double, match boolean")
-    model, importances, tau, f1, auc = train_random_forest_cv(
-        df, num_trees=20, folds=3)
-    assert f1 > 0.95 and auc > 0.95
-    assert 0.0 < tau < 1.0
-    # the informative features carry the importance mass
-    flat = importances["jw_path"] + importances["same_lang"]
-    assert sum(importances.values()) == pytest.approx(1.0, abs=1e-6)
-    assert flat < 0.2
 
 
 def test_iceberg_ddl_recipe():

@@ -1,9 +1,9 @@
 """Round-3 gates: B16 field-frequency canonicalization, B20 data-driven
-threshold discovery, B21 imputation-flag features."""
+threshold discovery and winnowing. The B21 imputation-flag test lives in
+tests/test_scoring.py."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from record_matching_spark.operators.canonical import canonical_fields
@@ -194,45 +194,3 @@ def test_winnow_deterministic_across_parallelism(spark):
         for n in (1, 7)
     ]
     assert got[0] == got[1]
-
-
-# ------------------------------------------------- B21 imputation features
-
-
-def test_imputation_flags_in_pair_features(spark):
-    """any_empty / both_empty must mark pairs whose side(s) have no tokens
-    (the engine's imputation-sentinel analog of the reference's
-    is_original flags, main.py:394-405) and be 0 on normal pairs."""
-    from record_matching_spark.operators.normalize import normalize_files
-    from record_matching_spark.operators.scoring import FEATURES, pair_features
-
-    files = normalize_files(
-        spark.createDataFrame(
-            [
-                ("r", "a.py", "c1", "def alpha_one(): return 42"),
-                ("r", "b.py", "c1", "def alpha_one(): return 43"),
-                ("r", "empty1.py", "c1", "!!!"),   # tokenizes to nothing
-                ("r", "empty2.py", "c1", "???"),   # tokenizes to nothing
-            ],
-            "repo string, path string, commit string, content string",
-        )
-    )
-    ids = {r["path"]: r["fid"] for r in files.select("path", "fid").collect()}
-
-    def pair(p1, p2):
-        lo, hi = sorted([ids[p1], ids[p2]])
-        return (lo, hi)
-
-    pairs = spark.createDataFrame(
-        [pair("a.py", "b.py"), pair("a.py", "empty1.py"),
-         pair("empty1.py", "empty2.py")],
-        "left long, right long",
-    )
-    got = {
-        (r["left"], r["right"]): (r["any_empty"], r["both_empty"])
-        for r in pair_features(pairs, files, id_col="fid").collect()
-    }
-    assert got[pair("a.py", "b.py")] == (0.0, 0.0)
-    assert got[pair("a.py", "empty1.py")] == (1.0, 0.0)
-    assert got[pair("empty1.py", "empty2.py")] == (1.0, 1.0)
-    assert "any_empty" in FEATURES and "both_empty" in FEATURES

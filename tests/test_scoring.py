@@ -251,6 +251,7 @@ def test_pair_features_attach_sources_agree(spark, monkeypatch):
     feature row (the inner-join contract), and with the broadcast table the
     kernel's input carries no token arrays."""
     import record_matching_spark.operators.scoring as S
+    from record_matching_spark import session
     from record_matching_spark.operators.blocking import blocking_keys, candidate_pairs
     from record_matching_spark.synth import repo_files, synth_repo_files_with_truth
 
@@ -266,12 +267,12 @@ def test_pair_features_attach_sources_agree(spark, monkeypatch):
             if gone not in (fid_sha[r["left"]], fid_sha[r["right"]])}
 
     def run(budget):
-        monkeypatch.setattr(S, "BROADCAST_BUDGET_BYTES", budget)
+        monkeypatch.setattr(session, "BROADCAST_BUDGET_BYTES", budget)
         feats = pair_features(pairs, norm, shaf=shaf, id_col="fid")
         rows = {(r["left"], r["right"]): r for r in feats.collect()}
         return rows, _map_in_arrow_inputs(feats)
 
-    (bcast, bcast_in), (merged, merged_in) = run(S.BROADCAST_BUDGET_BYTES), run(0)
+    (bcast, bcast_in), (merged, merged_in) = run(session.BROADCAST_BUDGET_BYTES), run(0)
     assert bcast.keys() == merged.keys() == kept
     assert 1000 < len(kept) < pairs.count()
     for key, a in bcast.items():
@@ -327,11 +328,120 @@ def test_train_weights_separates(spark):
     assert bad == 0
 
 
+def test_empty_token_pairs_score_low(spark):
+    from record_matching_spark.operators.normalize import normalize_files
+    from record_matching_spark.operators.scoring import pair_features
+
+    rows = [
+        ("r0", "a.py", "c0", "python", "!!! ???"),
+        ("r1", "b.py", "c1", "python", "$$$ %%%"),
+    ]
+    files = normalize_files(spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    ))
+    ids = sorted(r["file_id"] for r in files.select("file_id").collect())
+    pairs = spark.createDataFrame([tuple(ids)], "left string, right string")
+    r = pair_features(pairs, files).collect()[0]
+    assert r["jaccard"] == 0.0 and r["tfidf_cos"] == 0.0 and r["lev_sig"] == 0.0
+
+
+def test_random_forest_cv_and_threshold(spark):
+    import random
+
+    from record_matching_spark.operators.scoring import train_random_forest_cv
+
+    rng = random.Random(7)
+    rows = []
+    for i in range(240):
+        match = i % 2 == 0
+        base = 0.85 if match else 0.25
+        f = lambda: min(1.0, max(0.0, base + rng.uniform(-0.1, 0.1)))
+        rows.append((f"l{i}", f"r{i}", f(), f(), f(), 0.5, 1.0, f(), 0.0, 0.0,
+                     match))
+    df = spark.createDataFrame(
+        rows, "left string, right string, jaccard double, tfidf_cos double, "
+              "lev_sig double, jw_path double, same_lang double, dir_sim double, "
+              "any_empty double, both_empty double, match boolean")
+    model, importances, tau, f1, auc = train_random_forest_cv(
+        df, num_trees=20, folds=3)
+    assert f1 > 0.95 and auc > 0.95
+    assert 0.0 < tau < 1.0
+    # the informative features carry the importance mass
+    flat = importances["jw_path"] + importances["same_lang"]
+    assert sum(importances.values()) == pytest.approx(1.0, abs=1e-6)
+    assert flat < 0.2
+
+
+def test_imputation_flags_in_pair_features(spark):
+    """any_empty / both_empty must mark pairs whose side(s) have no tokens
+    (the engine's imputation-sentinel analog of the reference's
+    is_original flags, main.py:394-405) and be 0 on normal pairs."""
+    from record_matching_spark.operators.normalize import normalize_files
+    from record_matching_spark.operators.scoring import FEATURES, pair_features
+
+    files = normalize_files(
+        spark.createDataFrame(
+            [
+                ("r", "a.py", "c1", "def alpha_one(): return 42"),
+                ("r", "b.py", "c1", "def alpha_one(): return 43"),
+                ("r", "empty1.py", "c1", "!!!"),   # tokenizes to nothing
+                ("r", "empty2.py", "c1", "???"),   # tokenizes to nothing
+            ],
+            "repo string, path string, commit string, content string",
+        )
+    )
+    ids = {r["path"]: r["fid"] for r in files.select("path", "fid").collect()}
+
+    def pair(p1, p2):
+        lo, hi = sorted([ids[p1], ids[p2]])
+        return (lo, hi)
+
+    pairs = spark.createDataFrame(
+        [pair("a.py", "b.py"), pair("a.py", "empty1.py"),
+         pair("empty1.py", "empty2.py")],
+        "left long, right long",
+    )
+    got = {
+        (r["left"], r["right"]): (r["any_empty"], r["both_empty"])
+        for r in pair_features(pairs, files, id_col="fid").collect()
+    }
+    assert got[pair("a.py", "b.py")] == (0.0, 0.0)
+    assert got[pair("a.py", "empty1.py")] == (1.0, 0.0)
+    assert got[pair("empty1.py", "empty2.py")] == (1.0, 1.0)
+    assert "any_empty" in FEATURES and "both_empty" in FEATURES
+
+
+def _has_join(df) -> bool:
+    """Whether the optimized logical plan of `df` holds a join node."""
+    todo = [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName() == "Join":
+            return True
+        seq = node.children()
+        todo.extend(seq.apply(i) for i in range(seq.size()))
+    return False
+
+
+def _sha_rows(df) -> dict:
+    """content_sha → (sig, tid, tw) with the arrays as tuples."""
+    return {
+        r["content_sha"]: (
+            r["sig"],
+            None if r["tid"] is None else tuple(r["tid"]),
+            None if r["tw"] is None else tuple(r["tw"]),
+        )
+        for r in df.collect()
+    }
+
+
 def test_sha_features_paths_agree(spark, monkeypatch):
-    """The numpy-broadcast fast path and the >1M-docs shuffle fallback must
-    emit identical (content_sha, sig, tid, tw) tables — same tids, same
-    float32 weights — modulo the empty-doc null-vs-missing-row detail that
-    both normalize to NULL."""
+    """The broadcast vocabulary and the joined per-document df arrays
+    (forced by a zero budget) feed the one weight kernel the same df
+    values, so both emit identical (content_sha, sig, tid, tw) tables:
+    same tids, bit-identical float32 weights, NULL tid/tw for the
+    empty-token document."""
+    from record_matching_spark import session
     import record_matching_spark.operators.scoring as S
 
     rows = [
@@ -348,30 +458,42 @@ def test_sha_features_paths_agree(spark, monkeypatch):
                  lambda t: F.length(t) >= 2),
     )
     fast = S.sha_features(files)
-    monkeypatch.setattr(S, "VOCAB_BROADCAST_MAX_DOCS", 0)
+    monkeypatch.setattr(session, "BROADCAST_BUDGET_BYTES", 0)
     slow = S.sha_features(files)
+    assert not _has_join(fast) and _has_join(slow)
 
-    def norm(df):
-        out = {}
-        for r in df.collect():
-            out[r["content_sha"]] = (
-                r["sig"],
-                None if r["tid"] is None else tuple(r["tid"]),
-                None if r["tw"] is None else tuple(r["tw"]),
-            )
-        return out
-
-    nf, ns = norm(fast), norm(slow)
-    assert set(nf) == set(ns)
-    for sha in nf:
-        assert nf[sha][0] == ns[sha][0], "sig mismatch"
-        assert nf[sha][1] == ns[sha][1], "tid mismatch"
-        if nf[sha][2] is None:
-            assert ns[sha][2] is None
-        else:
-            for x, y in zip(nf[sha][2], ns[sha][2]):
-                assert x == pytest.approx(y, abs=1e-6)
+    nf, ns = _sha_rows(fast), _sha_rows(slow)
+    assert nf == ns
+    assert sum(v[1] is None and v[2] is None for v in nf.values()) == 1
     # weights are L2-normalized
     for sha, (_, tid, tw) in nf.items():
         if tw:
             assert sum(w * w for w in tw) == pytest.approx(1.0, abs=1e-5)
+
+
+def test_sha_features_gates_on_vocabulary(spark, monkeypatch):
+    """The df source is picked by the vocabulary rows pulled, not by the
+    document count: 5 documents with 200 distinct tokens take the join
+    source under a budget of 100 vocabulary rows and the broadcast under
+    one of 200, with bit-identical outputs."""
+    from record_matching_spark import session
+    import record_matching_spark.operators.scoring as S
+
+    rows = [(f"f{d}", " ".join(f"tok{d}x{j} " * (1 + j % 3) for j in range(40))
+             + " shared common")
+            for d in range(5)]
+    files = spark.createDataFrame(rows, "file_id string, content string")
+    files = files.withColumn("content_sha", F.sha2("content", 256)).withColumn(
+        "tokens", F.filter(F.split("content", " "), lambda t: F.length(t) > 0)
+    )
+
+    def run(vocab_rows):
+        monkeypatch.setattr(session, "BROADCAST_BUDGET_BYTES",
+                            vocab_rows * S._VOCAB_ROW_BYTES)
+        out = S.sha_features(files)
+        return _has_join(out), _sha_rows(out)
+
+    (joined, small), (broadcast, large) = run(100), run(202)
+    assert joined and not broadcast
+    assert small == large and len(small) == 5
+    assert all(len(tid) == 42 for _, tid, _ in small.values())

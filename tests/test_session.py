@@ -49,5 +49,5 @@ def test_missing_observations_keep_outputs(spark, monkeypatch):
 
     monkeypatch.setattr(session, "observed_row", missing)
     assert outputs() == observed
-    assert {"shaf_n_docs", "dedup_blocks_n", "cc_fp_0"} <= set(missed)
+    assert {"shaf_n_docs", "dedup_payload", "cc_fp_0"} <= set(missed)
     assert len(observed[1]) > 0
