@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
@@ -1000,10 +1000,12 @@ def bigram_logprob(
     from the same bigram aggregate, no extra corpus scan.
 
     Scale shape mirrors unigram_logprob: the exploded bigram stream
-    collapses to per-(doc, bigram) counts first; the bigram and unigram
-    count tables (Zipf-small) re-aggregate from those, and the model
-    broadcasts when its bytes fit session.BROADCAST_BUDGET_BYTES. Only one
-    aggregate's scalars (V, bigram types and bytes) come to the driver.
+    collapses to per-(doc, bigram) counts first, materialized once; the
+    bigram and unigram count tables (Zipf-small) re-aggregate from those,
+    and V and the bigram types join the model as one row, so no scalar
+    comes to the driver. The model broadcasts when a bound on its bytes
+    (the per-(doc, bigram) rows and their key bytes, observed on the
+    action that materializes them) fits session.BROADCAST_BUDGET_BYTES.
     No UDFs; fully SQL-expressible -> DuckDB oracle q56.
 
     Output: (id_col, n_bigrams, neg_logprob double); docs with < 2
@@ -1015,10 +1017,16 @@ def bigram_logprob(
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
         lambda a, b: F.concat_ws(" ", a, b),
     )
+    # materialized once: the model and the scoring join both read it, and
+    # the bound the broadcast gate needs rides the same action
+    obs = Observation("bigram_doc_counts")
     doc_bg = (
         df.select(F.col(id_col), F.explode(grams).alias("bg"))
         .groupBy(id_col, "bg")
         .agg(F.count(F.lit(1)).alias("c"))
+        .observe(obs, F.count(F.lit(1)).alias("rows"),
+                 F.sum(F.octet_length("bg")).alias("bytes"))
+        .localCheckpoint(eager=True)
     )
     bg_counts = doc_bg.groupBy("bg").agg(F.sum("c").alias("c_bg"))
     # unigram CONTEXT counts: occurrences of w1 as a bigram left side ==
@@ -1027,21 +1035,20 @@ def bigram_logprob(
     # n1f = bigram types starting with w1
     ug_counts = (
         bg_counts.select(
-            F.split_part(F.col("bg"), F.lit(" "), F.lit(1)).alias("w1"), "c_bg",
-            F.octet_length("bg").alias("bg_bytes"),
+            F.split_part(F.col("bg"), F.lit(" "), F.lit(1)).alias("w1"), "c_bg"
         )
         .groupBy("w1")
-        .agg(F.sum("c_bg").alias("c_w1"), F.count(F.lit(1)).alias("n1f"),
-             F.sum("bg_bytes").alias("bg_bytes"))
+        .agg(F.sum("c_bg").alias("c_w1"), F.count(F.lit(1)).alias("n1f"))
     )
+    # V and the bigram types join the model as one row, so no scalar comes
+    # to the driver; the replicated nested-loop join reads that row where
+    # it was aggregated (a broadcast of it would run one more job)
     stats = ug_counts.agg(
-        F.count(F.lit(1)).alias("v"), F.sum("n1f").alias("n_types"),
-        F.sum("bg_bytes").alias("b"),
-    ).collect()[0]
-    n_types = int(stats["n_types"] or 0)
+        F.count(F.lit(1)).alias("v"), F.sum("n1f").alias("n_types")
+    ).hint("shuffle_replicate_nl")
     bgm = bg_counts.withColumn(
         "w1", F.split_part(F.col("bg"), F.lit(" "), F.lit(1))
-    ).join(ug_counts, "w1")
+    ).join(ug_counts, "w1").crossJoin(stats)
     if smoothing == "kn":
         d = float(discount)
         n1b = (
@@ -1060,20 +1067,25 @@ def bigram_logprob(
                     F.greatest(F.col("c_bg") - F.lit(d), F.lit(0.0))
                     / F.col("c_w1")
                     + (F.lit(d) * F.col("n1f") / F.col("c_w1"))
-                    * (F.col("n1b") / F.lit(float(n_types)))
+                    * (F.col("n1b") / F.col("n_types").cast("double"))
                 ).alias("p"),
             )
         )
     else:
-        vocab_size = int(stats["v"])
         model = bgm.select(
             "bg",
             (
                 (F.col("c_bg") + F.lit(float(add_k)))
-                / (F.col("c_w1") + F.lit(float(add_k) * vocab_size))
+                / (F.col("c_w1") + F.lit(float(add_k)) * F.col("v"))
             ).alias("p"),
         )
-    if 16 * n_types + (stats["b"] or 0) <= session.BROADCAST_BUDGET_BYTES:
+    # the (doc, bigram) rows bound the model's: it has at most that many
+    # rows, each a key seen among them. No bound within the timeout → the
+    # sort-merge join
+    row = session.observed_row(obs)
+    if row is not None and (
+        16 * row["rows"] + (row["bytes"] or 0) <= session.BROADCAST_BUDGET_BYTES
+    ):
         model = F.broadcast(model)
     scored = (
         doc_bg.join(model, "bg")

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
@@ -42,25 +42,15 @@ def _perm_table(num_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def with_minhash_signature(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    out_col: str = "minhash",
-    num_hashes: int = 128,
-    seed: int = 1,
-    uniq_col: str | None = None,
-) -> DataFrame:
-    """Append `out_col: array<long>` — the MinHash signature of the distinct
-    tokens in `tokens_col`.
+def token_hashes(tokens: Column) -> Column:
+    """The xxhash64 of each distinct token: the set a signature is taken
+    over."""
+    return F.transform(F.array_distinct(tokens), lambda t: F.xxhash64(t))
 
-    Empty token sets get a per-row UNIQUE sentinel signature with EVERY
-    position derived from xxhash64(uniq_col) via a splitmix step, so no
-    band slice — hence no LSH block key — can match across two different
-    empty-token documents (round-2 uniquified only position 0, leaving
-    bands 1..n-1 shared; ADVICE r2 medium). Identical-content pairs are
-    still caught by the content-sha blocking key. Without `uniq_col` all
-    empty docs share one fixed sentinel (callers that pre-filter empty
-    docs)."""
+
+def _signature(hashes: Column, uniq: Column, num_hashes: int, seed: int) -> Column:
+    """The MinHash signature (array<long>) of a token-hash set. Repeated
+    hashes do not change a minimum, so the set need not be distinct."""
     a_tab, b_tab = _perm_table(num_hashes, seed)
 
     @F.pandas_udf(ArrayType(LongType()))
@@ -92,47 +82,53 @@ def with_minhash_signature(
             out.append(sig)
         return pd.Series(out)
 
-    token_hashes = F.transform(
-        F.array_distinct(F.col(tokens_col)), lambda t: F.xxhash64(t)
-    )
+    return minhash_udf(hashes, uniq)
+
+
+def with_minhash_signature(
+    df: DataFrame,
+    tokens_col: str = "tokens",
+    out_col: str = "minhash",
+    num_hashes: int = 128,
+    seed: int = 1,
+    uniq_col: str | None = None,
+) -> DataFrame:
+    """Append `out_col: array<long>` — the MinHash signature of the distinct
+    tokens in `tokens_col`.
+
+    Empty token sets get a per-row UNIQUE sentinel signature with EVERY
+    position derived from xxhash64(uniq_col) via a splitmix step, so no
+    band slice — hence no LSH block key — can match across two different
+    empty-token documents (round-2 uniquified only position 0, leaving
+    bands 1..n-1 shared; ADVICE r2 medium). Identical-content pairs are
+    still caught by the content-sha blocking key. Without `uniq_col` all
+    empty docs share one fixed sentinel (callers that pre-filter empty
+    docs)."""
     uniq = (
         F.xxhash64(F.lit("mh-empty"), F.col(uniq_col))
         if uniq_col is not None
         else F.lit(-1).cast("long")
     )
-    return df.withColumn(out_col, minhash_udf(token_hashes, uniq))
+    return df.withColumn(out_col, _signature(
+        token_hashes(F.col(tokens_col)), uniq, num_hashes, seed))
 
 
-def minhash_bands(
+def minhash_bands_of_hashes(
     df: DataFrame,
-    id_col: str = "file_id",
-    tokens_col: str = "tokens",
+    id_col: str,
+    hashes_col: str,
     num_bands: int = 32,
     rows_per_band: int = 4,
     seed: int = 1,
     keep_cols: list[str] | tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, *keep_cols, block_key) LSH band rows of the MinHash signature of
-    `tokens_col`. The band layout is the only signature parameter: the
-    signature has exactly num_bands × rows_per_band hashes, so every band
-    slice is full (a shorter signature would leave the trailing bands as
-    one empty slice shared by every document). Empty token sets get unique
-    sentinel signatures keyed by `id_col`, so they never share a band.
-    `keep_cols` ride along (streaming near-dup carries the token-hash set
-    for in-state exact verification).
-
-    block_key = xxhash64('mh', band_idx, band slice) — a compact int64 so
-    the downstream self-join and pair-dedup shuffle 8-byte keys instead of
-    strings (a cross-namespace or cross-band hash collision merely merges
-    two blocks: candidates are verified/scored downstream, so a ~2⁻⁶⁴
-    collision costs a few extra candidate pairs, never correctness).
-    Two records share a band key iff their signatures agree on all
-    `rows_per_band` positions of that band: P(share ≥1 band) = 1-(1-J^r)^b.
-    """
-    sigs = with_minhash_signature(
-        df, tokens_col=tokens_col, out_col="_sig",
-        num_hashes=num_bands * rows_per_band, seed=seed, uniq_col=id_col,
-    )
+    """`minhash_bands` of a column that already holds each row's xxhash64
+    token hashes (the verify payload's `_t`), so a caller that hashes its
+    tokens once for verification bands the same hashes instead of
+    tokenizing again. The bands are bit-identical to `minhash_bands` of the
+    tokens."""
+    uniq = F.xxhash64(F.lit("mh-empty"), F.col(id_col))
+    sig = _signature(F.col(hashes_col), uniq, num_bands * rows_per_band, seed)
     bands = F.transform(
         F.sequence(F.lit(0), F.lit(num_bands - 1)),
         lambda i: F.xxhash64(
@@ -147,8 +143,36 @@ def minhash_bands(
             ),
         ),
     )
-    return sigs.select(
-        F.col(id_col),
-        *[F.col(c) for c in keep_cols],
-        F.explode(bands).alias("block_key"),
+    keep = [F.col(c) for c in keep_cols]
+    return df.select(F.col(id_col), *keep, sig.alias("_sig")).select(
+        F.col(id_col), *keep, F.explode(bands).alias("block_key"),
+    )
+
+
+def minhash_bands(
+    df: DataFrame,
+    id_col: str = "file_id",
+    tokens_col: str = "tokens",
+    num_bands: int = 32,
+    rows_per_band: int = 4,
+    seed: int = 1,
+) -> DataFrame:
+    """(id, block_key) LSH band rows of the MinHash signature of
+    `tokens_col`. The band layout is the only signature parameter: the
+    signature has exactly num_bands × rows_per_band hashes, so every band
+    slice is full (a shorter signature would leave the trailing bands as
+    one empty slice shared by every document). Empty token sets get unique
+    sentinel signatures keyed by `id_col`, so they never share a band.
+
+    block_key = xxhash64('mh', band_idx, band slice) — a compact int64 so
+    the downstream self-join and pair-dedup shuffle 8-byte keys instead of
+    strings (a cross-namespace or cross-band hash collision merely merges
+    two blocks: candidates are verified/scored downstream, so a ~2⁻⁶⁴
+    collision costs a few extra candidate pairs, never correctness).
+    Two records share a band key iff their signatures agree on all
+    `rows_per_band` positions of that band: P(share ≥1 band) = 1-(1-J^r)^b.
+    """
+    return minhash_bands_of_hashes(
+        df.withColumn("_th", token_hashes(F.col(tokens_col))), id_col, "_th",
+        num_bands, rows_per_band, seed,
     )

@@ -167,13 +167,12 @@ def streaming_near_dup(
     stream = stream.select(
         F.col(id_col).cast("string").alias(id_col), F.col(text_col)
     )
-    if verify:
-        # the representative's verify payload rides through the band explode
-        stream = _payload(stream, id_col, text_col, shingle_k,
-                          (id_col, "_th", "_sha", "_n"), keep_cols=[text_col])
+    # bands come from the payload's token hashes; when verifying, the
+    # representative's hashes also ride through the band explode
+    names = (id_col, "_th", "_sha", "_n")
     bands = _bands(
-        stream, id_col, text_col, num_bands, rows_per_band, shingle_k,
-        keep_cols=["_th"] if verify else [],
+        _payload(stream, id_col, text_col, shingle_k, names), names,
+        num_bands, rows_per_band, keep_cols=["_th"] if verify else [],
     )
 
     def match_fn(
@@ -181,7 +180,7 @@ def streaming_near_dup(
     ) -> Iterator[pd.DataFrame]:
         ids: list[str] = []
         for pdf in batches:
-            ids.extend(pdf["_id"].tolist())
+            ids.extend(pdf[id_col].tolist())
         if not ids:
             return
         ids = sorted(set(ids))
@@ -199,7 +198,7 @@ def streaming_near_dup(
     ) -> Iterator[pd.DataFrame]:
         docs: dict[str, np.ndarray] = {}
         for pdf in batches:
-            for _id, th in zip(pdf["_id"], pdf["_th"]):
+            for _id, th in zip(pdf[id_col], pdf["_th"]):
                 if _id not in docs:
                     docs[_id] = np.asarray(
                         [] if th is None else th, dtype=np.int64
@@ -289,11 +288,10 @@ def streaming_decontaminate(
 
     # the verify payload is plain column exprs over the SAME rows — attach
     # it before the band explode (a stream cannot re-join itself later)
-    enriched = _payload(stream, id_col, text_col, shingle_k,
-                        (id_col, "_ta", "_sha_a", "_na"), keep_cols=[text_col])
+    names = (id_col, "_ta", "_sha_a", "_na")
     bands = _bands(
-        enriched, id_col, text_col, num_bands, rows_per_band, shingle_k,
-        keep_cols=["_ta", "_sha_a", "_na"],
+        _payload(stream, id_col, text_col, shingle_k, names), names,
+        num_bands, rows_per_band, keep_cols=list(names[1:]),
     )
     pb, pf = _index(probe, _PROBE, id_col, text_col,
                     num_bands, rows_per_band, shingle_k)
@@ -304,7 +302,7 @@ def streaming_decontaminate(
     )
     return (
         _verified(hits, threshold)
-        .select(F.col("_id").alias("doc_id"), "probe_id", "jaccard")
+        .select(F.col(id_col).alias("doc_id"), "probe_id", "jaccard")
         .dropDuplicates(["doc_id", "probe_id"])
     )
 

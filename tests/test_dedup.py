@@ -1,15 +1,122 @@
 """Dedup operators (functions/dedup.py and its streaming forms): MinHash-LSH
-near-dup pairs against the brute-force oracle, its two verify attach
-shapes and scan fan-out, the cross-corpus / persisted-index / incremental
-paths, streaming decontamination parity, exact n-gram decontamination and
-keep-one near-dup dedup."""
+near-dup pairs against the brute-force oracle, over duplicate-heavy
+corpora, under its two verify attach shapes and with chunked expansion,
+its Spark job count and scan fan-out, the cross-corpus / persisted-index /
+incremental paths, streaming decontamination parity, exact n-gram
+decontamination, keep-one near-dup dedup, SimHash signatures and C4-style
+line dedup."""
 
 from __future__ import annotations
+
+import hashlib
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
+
+
+def _dup_heavy_docs(spark):
+    """62 documents, most sharing an exact token set with others: a
+    20-token set nine times (other orders, cases and multiplicities), that
+    set plus one token six times (J = 20/21 against it), 18 of its tokens
+    five times (J = 0.9), ten unrelated sets, three identical and one
+    different punctuation-only text and two empty texts. Ids are shuffled,
+    so group minima interleave."""
+    rng = random.Random(11)
+    base = [f"w{j}" for j in range(20)]
+
+    def variant(words, n_extra):
+        toks = words + rng.sample(words, n_extra)
+        rng.shuffle(toks)
+        return " ".join(t.upper() if rng.random() < 0.2 else t for t in toks)
+
+    texts = [variant(base, rng.randrange(6)) for _ in range(9)]
+    texts += [variant(base + ["extra"], rng.randrange(4)) for _ in range(6)]
+    texts += [variant(base[:18], rng.randrange(3)) for _ in range(5)]
+    texts += [variant([f"u{k}_{j}" for j in range(12)], 1) for k in range(10)]
+    texts += ["!!! ???"] * 3 + ["$$$ %%%", "", ""]
+    ids = rng.sample(range(1000), len(texts))
+    return spark.createDataFrame(list(zip(ids, texts)), "doc_id long, text string")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select("left", "right", "jaccard").collect())
+
+
+def test_grouped_pairs_equal_bruteforce(spark, monkeypatch):
+    """On a corpus where most documents share an exact token set, the
+    grouped path (LSH and verify over one representative per set, expanded
+    last) gives exactly ngram_jaccard_pairs' (left, right, jaccard), with
+    the broadcast and the sort-merge attach, and with groups of nine and
+    six members cut into chunks of 4 (salt_cap=4)."""
+    from record_matching_spark import session
+    from record_matching_spark.functions.dedup import (
+        minhash_near_dup_pairs, ngram_jaccard_pairs,
+    )
+
+    docs = _dup_heavy_docs(spark)
+    want = _rows(ngram_jaccard_pairs(docs, threshold=0.8))
+    # 9·8/2 + 6·5/2 + 5·4/2 within the word sets, 9·6 + 9·5 + 6·5 across
+    # them, 3 identical punctuation pairs, 1 empty-text pair
+    assert len(want) == 36 + 15 + 10 + 54 + 45 + 30 + 3 + 1
+    for budget in (session.BROADCAST_BUDGET_BYTES, 0):
+        monkeypatch.setattr(session, "BROADCAST_BUDGET_BYTES", budget)
+        for salt_cap in (2000, 4):
+            got = _rows(minhash_near_dup_pairs(docs, threshold=0.8,
+                                               salt_cap=salt_cap))
+            assert got == want, (budget, salt_cap)
+
+
+def test_grouped_shingle_pairs_equal_per_document_bruteforce(spark):
+    """shingle_k=8 on the duplicate-heavy corpus, plus periodic texts that
+    share one shingle set at different lengths and one-character edits of
+    a sentence, equals a per-document brute force in Python: every pair's
+    exact 8-shingle Jaccard (texts shorter than 8 characters are one
+    shingle), kept when ≥ 0.5."""
+    from record_matching_spark.functions.dedup import minhash_near_dup_pairs
+
+    line = "the quick brown fox jumps over the lazy dog near the river bank"
+    extra = [(1000 + n, "ab" * n) for n in (10, 12, 15)]
+    extra += [(1010 + n, "abc" * n) for n in (9, 11)]
+    extra += [(1020 + i, line[:i] + "#" + line[i + 1:]) for i in (5, 30, 50)]
+    docs = _dup_heavy_docs(spark).unionByName(
+        spark.createDataFrame(extra, "doc_id long, text string"))
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+
+    def shingles(t):
+        return {t[i:i + 8] for i in range(max(len(t) - 7, 1))}
+
+    sets = {i: shingles(t) for i, t in texts.items()}
+    want = []
+    for a in sorted(sets):
+        for b in sorted(sets):
+            if a < b:
+                j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+                if j >= 0.5:
+                    want.append((a, b, j))
+    assert len(want) > 10
+    got = _rows(minhash_near_dup_pairs(docs, threshold=0.5, shingle_k=8))
+    assert got == want
+
+
+def test_grouped_pairs_run_no_more_jobs(spark):
+    """Grouping adds no Spark job: minhash_near_dup_pairs plus its collect
+    runs at most the 11 jobs the per-document path ran on this corpus
+    (measured in this suite's session, 8 shuffle partitions)."""
+    from record_matching_spark.functions.dedup import minhash_near_dup_pairs
+
+    docs = _dup_heavy_docs(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("grouped-near-dup", "near-dup pairs job count")
+    try:
+        pairs = minhash_near_dup_pairs(docs, threshold=0.8).collect()
+        ids = sc.statusTracker().getJobIdsForGroup("grouped-near-dup")
+    finally:
+        sc.setJobGroup("grouped-near-dup-after", "")
+    assert len(pairs) == 194
+    assert len(ids) <= 11, f"{len(ids)} jobs"
 
 
 def test_shingle_lsh_matches_bruteforce(spark):
@@ -416,3 +523,87 @@ def test_near_dedup_keep_min(spark):
     assert out[20] == (20, True) and out[21] == (20, False)
     assert out[30] == (30, True)
     assert len(out) == 6
+
+
+def test_simhash_single_token_is_token_hash(spark):
+    """Vote-sign regression (found by the q24 oracle): for a one-token doc
+    every bit's vote is ±1, so the signature must equal the token's hash
+    exactly. The round-3 implementation summed bits in uint64, so
+    minority-bit votes underflowed to huge positives and the signature
+    saturated towards all-ones."""
+    from record_matching_spark.functions.dedup import simhash64
+
+    d = spark.createDataFrame([(1, "hello")], "doc_id long, text string")
+    got = simhash64(d).collect()[0]["simhash"]
+    expected = spark.createDataFrame([("hello",)], "t string").select(
+        F.xxhash64("t").alias("h")
+    ).collect()[0]["h"]
+    assert got == expected, (got, expected)
+    # portable mode: md5 first-15-hex token hash, reproducible anywhere
+    gotp = simhash64(d, portable=True).collect()[0]["simhash"]
+    expp = int(hashlib.md5(b"hello").hexdigest()[:15], 16)
+    assert gotp == expp, (gotp, expp)
+
+
+def test_simhash_majority_two_tokens(spark):
+    """Two distinct tokens: tied bits (vote 0) must clear, bits shared by
+    both hashes must set — i.e. signature == AND of the two hashes for set
+    bits, and no bit outside their OR."""
+    from record_matching_spark.functions.dedup import simhash64
+
+    d = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
+    got = simhash64(d).collect()[0]["simhash"] & (2**64 - 1)
+    hs = spark.createDataFrame([("alpha",), ("beta",)], "t string").select(
+        F.xxhash64("t").alias("h")
+    ).collect()
+    a, b = (r["h"] & (2**64 - 1) for r in hs)
+    assert got == (a & b), (hex(got), hex(a), hex(b))
+
+
+def test_dedup_lines_reconstruction(spark):
+    """Boilerplate lines (trimmed match, >= 2 distinct docs) vanish from
+    every doc; every other line survives in original order, blank lines
+    included (the VERDICT item-2 reconstruction gate)."""
+    from record_matching_spark.functions.dedup import dedup_lines
+
+    docs = spark.createDataFrame(
+        [
+            (1, "unique one\nSHARED HEADER\nbody A\n\nbody A2"),
+            (2, "SHARED HEADER\nbody B\n  SHARED HEADER  \nunique two"),
+            (3, "totally distinct\n\n\nlines only"),
+        ],
+        "doc_id long, text string",
+    )
+    out = {
+        r["doc_id"]: r
+        for r in dedup_lines(docs, min_docs=2, keep_text=True).collect()
+    }
+    assert out[1]["dedup_text"] == "unique one\nbody A\n\nbody A2"
+    # '  SHARED HEADER  ' is removed too (trimmed match), order preserved
+    assert out[2]["dedup_text"] == "body B\nunique two"
+    assert out[3]["dedup_text"] == "totally distinct\n\n\nlines only"
+    assert (out[1]["n_lines"], out[1]["n_kept"]) == (5, 4)
+    assert (out[2]["n_lines"], out[2]["n_kept"]) == (4, 2)
+    for r in out.values():
+        assert r["dedup_sha"] == hashlib.sha256(
+            r["dedup_text"].encode()
+        ).hexdigest()
+    # within-doc repetition alone is NOT boilerplate
+    solo = spark.createDataFrame(
+        [(1, "again\nagain\nagain")], "doc_id long, text string"
+    )
+    r = dedup_lines(solo, min_docs=2, keep_text=True).collect()[0]
+    assert r["dedup_text"] == "again\nagain\nagain"
+
+
+def test_dedup_lines_doc_reduced_to_nothing(spark):
+    from record_matching_spark.functions.dedup import dedup_lines
+
+    docs = spark.createDataFrame(
+        [(1, "same line"), (2, "same line")], "doc_id long, text string"
+    )
+    rows = dedup_lines(docs, min_docs=2, keep_text=True).collect()
+    assert len(rows) == 2  # every input doc appears
+    for r in rows:
+        assert (r["n_lines"], r["n_kept"], r["dedup_text"]) == (1, 0, "")
+        assert r["dedup_sha"] == hashlib.sha256(b"").hexdigest()

@@ -177,6 +177,27 @@ def test_text_features(docs):
     assert out.filter(F.col("fingerprint").isNull()).count() == 0
 
 
+def test_bigram_logprob_job_counts(spark, docs):
+    """V and the bigram types join the model inside its plan instead of
+    reaching the driver through a scalar aggregate, and the (doc, bigram)
+    counts are materialized once: on the 500-document table (8 shuffle
+    partitions, cached) add-k runs at most 12 Spark jobs and KN at most
+    17, where the scalar aggregate ran 15 and 18."""
+    from record_matching_spark.functions.text import bigram_logprob
+
+    sc = spark.sparkContext
+    for smoothing, most in (("addk", 12), ("kn", 17)):
+        group = f"bigram-{smoothing}"
+        sc.setJobGroup(group, "bigram_logprob job count")
+        try:
+            rows = bigram_logprob(docs, smoothing=smoothing).collect()
+            ids = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup("bigram-after", "")
+        assert len(rows) == 500
+        assert len(ids) <= most, (smoothing, len(ids))
+
+
 def test_multimodal_plumbing(spark):
     media = synth_media(spark, n=48)
     feats = extract_media_features(media.repartition(4))

@@ -1,10 +1,8 @@
-"""Round-4 gates: executed catalog-table path, the simhash vote-sign
-regression the q24 oracle exposed, winnowing spans, and the
-ADVICE r3 fixes (null-score histogram, canonical_fields column clash)."""
+"""Round-4 gates: executed catalog-table path, winnowing spans, and the
+ADVICE r3 fixes (null-score histogram, canonical_fields column clash). The
+simhash vote-sign tests moved to test_dedup.py."""
 
 from __future__ import annotations
-
-import hashlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -68,41 +66,6 @@ def test_iceberg_round_trip(spark, tmp_path):
     snaps = spark.sql(f"SELECT snapshot_id FROM {table}.snapshots").collect()
     assert len(snaps) >= 1  # time-travel-able
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_simhash_single_token_is_token_hash(spark):
-    """Vote-sign regression (found by the q24 oracle): for a one-token doc
-    every bit's vote is ±1, so the signature must equal the token's hash
-    exactly. The round-3 implementation summed bits in uint64, so
-    minority-bit votes underflowed to huge positives and the signature
-    saturated towards all-ones."""
-    from record_matching_spark.functions.dedup import simhash64
-
-    d = spark.createDataFrame([(1, "hello")], "doc_id long, text string")
-    got = simhash64(d).collect()[0]["simhash"]
-    expected = spark.createDataFrame([("hello",)], "t string").select(
-        F.xxhash64("t").alias("h")
-    ).collect()[0]["h"]
-    assert got == expected, (got, expected)
-    # portable mode: md5 first-15-hex token hash, reproducible anywhere
-    gotp = simhash64(d, portable=True).collect()[0]["simhash"]
-    expp = int(hashlib.md5(b"hello").hexdigest()[:15], 16)
-    assert gotp == expp, (gotp, expp)
-
-
-def test_simhash_majority_two_tokens(spark):
-    """Two distinct tokens: tied bits (vote 0) must clear, bits shared by
-    both hashes must set — i.e. signature == AND of the two hashes for set
-    bits, and no bit outside their OR."""
-    from record_matching_spark.functions.dedup import simhash64
-
-    d = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
-    got = simhash64(d).collect()[0]["simhash"] & (2**64 - 1)
-    hs = spark.createDataFrame([("alpha",), ("beta",)], "t string").select(
-        F.xxhash64("t").alias("h")
-    ).collect()
-    a, b = (r["h"] & (2**64 - 1) for r in hs)
-    assert got == (a & b), (hex(got), hex(a), hex(b))
 
 
 def test_winnow_portable_array_matches_long_form(spark):

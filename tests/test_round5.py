@@ -1,14 +1,14 @@
 """Round-5 gates. First batch: lazy hyperplane planes (VERDICT r4 item
-6), C4-style line-level dedup (item 2), Gopher repetition signals
-(item 3), the embedding near-dup LSH scale path
-(item 4), the mid-stage-kill manifest gate (item 8), span decontamination,
+6), Gopher repetition signals (item 3), the embedding near-dup LSH scale
+path (item 4), the mid-stage-kill manifest gate (item 8), span decontamination,
 PII scrub, substring dedup, packing, JSONL, HTML extraction. Second batch
 (q46-q60): unigram/bigram/Kneser-Ney LM scoring, mixture accounting,
 temperature resampling, quality-filter chain, global shuffle rank,
 token-balanced shards, BPE pretokenizer counting, leakage-safe splitting,
 IVF-PQ (residual) with its recall gate, URL dedup, the two-level
 prefix-sum property gate, streaming stateless parity, and the two
-runnable end-to-end examples (ER + pretraining recipe)."""
+runnable end-to-end examples (ER + pretraining recipe). The C4-style
+line-level dedup tests (item 2) live in tests/test_dedup.py."""
 
 from __future__ import annotations
 
@@ -50,58 +50,6 @@ def test_lsh_plan_builds_without_jobs(spark):
     )
     assert lazy == eager and len(lazy) == 60 * 4
     assert df.count() > 0
-
-
-# ------------------------------------------------------ C4-style line dedup
-
-
-def test_dedup_lines_reconstruction(spark):
-    """Boilerplate lines (trimmed match, >= 2 distinct docs) vanish from
-    every doc; every other line survives in original order, blank lines
-    included (the VERDICT item-2 reconstruction gate)."""
-    from record_matching_spark.functions.dedup import dedup_lines
-
-    docs = spark.createDataFrame(
-        [
-            (1, "unique one\nSHARED HEADER\nbody A\n\nbody A2"),
-            (2, "SHARED HEADER\nbody B\n  SHARED HEADER  \nunique two"),
-            (3, "totally distinct\n\n\nlines only"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in dedup_lines(docs, min_docs=2, keep_text=True).collect()
-    }
-    assert out[1]["dedup_text"] == "unique one\nbody A\n\nbody A2"
-    # '  SHARED HEADER  ' is removed too (trimmed match), order preserved
-    assert out[2]["dedup_text"] == "body B\nunique two"
-    assert out[3]["dedup_text"] == "totally distinct\n\n\nlines only"
-    assert (out[1]["n_lines"], out[1]["n_kept"]) == (5, 4)
-    assert (out[2]["n_lines"], out[2]["n_kept"]) == (4, 2)
-    for r in out.values():
-        assert r["dedup_sha"] == hashlib.sha256(
-            r["dedup_text"].encode()
-        ).hexdigest()
-    # within-doc repetition alone is NOT boilerplate
-    solo = spark.createDataFrame(
-        [(1, "again\nagain\nagain")], "doc_id long, text string"
-    )
-    r = dedup_lines(solo, min_docs=2, keep_text=True).collect()[0]
-    assert r["dedup_text"] == "again\nagain\nagain"
-
-
-def test_dedup_lines_doc_reduced_to_nothing(spark):
-    from record_matching_spark.functions.dedup import dedup_lines
-
-    docs = spark.createDataFrame(
-        [(1, "same line"), (2, "same line")], "doc_id long, text string"
-    )
-    rows = dedup_lines(docs, min_docs=2, keep_text=True).collect()
-    assert len(rows) == 2  # every input doc appears
-    for r in rows:
-        assert (r["n_lines"], r["n_kept"], r["dedup_text"]) == (1, 0, "")
-        assert r["dedup_sha"] == hashlib.sha256(b"").hexdigest()
 
 
 # ------------------------------------------------ Gopher repetition signals
