@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-`entry(spark)` — flagship: MinHash-LSH near-dup blocking + large-star/
-small-star transitive closure over the sf0.001 documents table (the
+`entry(spark)` — flagship: MinHash-LSH near-dup blocking + connected-
+components transitive closure over the sf0.001 documents table (the
 reference pipeline's block→pair→cluster core re-expressed Spark-first).
 
 `queries()` / `oracle_sql()` — one entry per implemented operator family
@@ -303,7 +303,7 @@ def _q20_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q21_cc_groups(spark: SparkSession, sf: str) -> DataFrame:
-    """B14: transitive closure via large-star/small-star on chain graphs
+    """B14: transitive closure (connected_components) on chain graphs
     (worst-case diameter) — cluster = min doc_id of the chain."""
     from record_matching_spark.operators.cluster import cluster_assignments
 
@@ -876,7 +876,7 @@ def _q34_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
 
 def _q26_er_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """Mini-ER over the documents table: MinHash-LSH near-dup pairs →
-    large-star/small-star transitive closure → (doc_id, cluster_id) with
+    connected-components transitive closure → (doc_id, cluster_id) with
     singleton completion. DuckDB oracle = brute-force Jaccard pairs + a
     recursive-CTE reachability closure (VERDICT item 7: the round-1 q26 was
     rows-only; the full synthetic-corpus pipeline moved to q30)."""

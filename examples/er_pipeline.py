@@ -12,7 +12,7 @@ final clusters are byte-identical.
 Stages (pipeline.py): normalize/tokenize -> content-sha dedup ->
 blocking keys (minhash-LSH bands + token-sorted + content-sha) ->
 salted self-join candidate pairs -> mapInArrow pair features ->
-sigmoid scoring -> large/small-star transitive closure.
+sigmoid scoring -> connected-components transitive closure.
 """
 
 from __future__ import annotations

@@ -7,8 +7,9 @@ threshold → transitive closure → clusters → evaluate.
 
 The execution strategy is idiomatic Spark: declarative DataFrame plans
 (Catalyst/Tungsten/AQE), MinHash-LSH + token-sorted blocking keys, salted
-self-joins within blocks, vectorized pandas/Arrow UDF scoring, and iterative
-large-star/small-star connected components — no per-row Python anywhere.
+self-joins within blocks, vectorized pandas/Arrow UDF scoring, and connected
+components (a driver-side union-find within the broadcast budget, iterative
+large-star/small-star above it) — no per-row Python anywhere.
 """
 
 __version__ = "0.1.0"

@@ -804,12 +804,13 @@ def near_dedup_keep_min(
 ) -> DataFrame:
     """End-to-end near-duplicate DEDUP of a corpus: MinHash-LSH candidate
     pairs with exact-Jaccard verification (minhash_near_dup_pairs), then
-    transitive closure over the verified pair graph (large/small-star CC),
+    transitive closure over the verified pair graph (connected_components),
     then keep-one-per-cluster — the lowest id in each near-dup cluster
     survives. This is the composed operation a training pipeline actually
     runs ("dedup the corpus"), not just the pair listing; the composition
-    is itself the scale path: banded LSH pairs + O(log n)-round
-    distributed CC, never all-pairs, never a driver-side union-find.
+    is itself the scale path: banded LSH pairs, never all-pairs, then a
+    driver-side union-find when the pair graph fits the broadcast budget
+    and O(log n)-round distributed CC when it does not.
 
     Output: (id_col, cluster_id, kept) for EVERY input row — kept is true
     exactly for the cluster minimum (singletons are their own cluster and

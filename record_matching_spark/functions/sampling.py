@@ -112,7 +112,7 @@ def leakage_safe_split(
     is therefore EXACTLY hash_split's, and grouping only moves the
     non-singleton families.
 
-    Scale shape: minhash-LSH verified pairs → distributed CC (the q50
+    Scale shape: minhash-LSH verified pairs → connected components (the q50
     machinery) → the same one-column hash threshold as hash_split.
     Output: (id_col, cluster_id, split); fully SQL-expressible (recursive
     -CTE closure + md5 bucket on the cluster min) -> DuckDB oracle q57."""

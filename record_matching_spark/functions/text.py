@@ -1087,12 +1087,22 @@ def bigram_logprob(
         16 * row["rows"] + (row["bytes"] or 0) <= session.BROADCAST_BUDGET_BYTES
     ):
         model = F.broadcast(model)
+    # a doc's terms are summed in bigram order: a broadcast and a sort-merge
+    # join hand them over in different orders, and a double sum follows it
+    terms = F.array_sort(
+        F.collect_list(F.struct("bg", (F.col("c") * -F.log("p")).alias("t")))
+    )
     scored = (
         doc_bg.join(model, "bg")
         .groupBy(id_col)
-        .agg(
-            F.sum("c").alias("n_bigrams"),
-            (F.sum(F.col("c") * -F.log("p")) / F.sum("c")).alias("neg_logprob"),
+        .agg(F.sum("c").alias("n_bigrams"), terms.alias("terms"))
+        .select(
+            id_col,
+            "n_bigrams",
+            (
+                F.aggregate("terms", F.lit(0.0), lambda acc, x: acc + x["t"])
+                / F.col("n_bigrams")
+            ).alias("neg_logprob"),
         )
     )
     return (

@@ -1,19 +1,27 @@
-"""Stage S8: transitive closure via large-star / small-star connected
-components on DataFrames.
+"""Stage S8: transitive closure (connected components) in two regimes,
+chosen by the size of the edge set against the one broadcast budget.
 
-Replaces the reference's driver-side scipy DisjointSet over streamed batches
-(/root/reference/record_matching/main.py:629-651) and networkx
-connected_components (/root/reference/claude_poc_v2/
-vector_enhanced_entity_resolution_v2.py:1929-1960) — neither distributes.
+The reference closes its matches with a driver-side DisjointSet fed by
+streamed batches (reference `main.py:629-651`).
 
-Algorithm: Kiveris et al., "Connected Components in MapReduce and Beyond"
-(SoCC 2014) — alternate:
-  large-star(u): attach every neighbor v > u to m = min(N(u) ∪ {u})
-  small-star(u): attach every neighbor v ≤ u (and u) to that minimum
-until the edge set reaches a fixpoint; converges in O(log n) rounds and
-leaves a star forest where every node points at its component minimum.
+- Edge set within `session.BROADCAST_BUDGET_BYTES` (ids of fixed width:
+  integral, or a struct of integral fields such as the `id_bits=128`
+  `struct<h1,h2>`): the raw edges reach the driver in one bounded pull and a
+  numpy min-root union-find labels them. This is the reference's design, and
+  it costs one Spark job where the star loop below runs ~5 per round.
+- Otherwise (a larger graph, or ids without a fixed width such as strings):
+  the distributed large-star / small-star loop of Kiveris et al.,
+  "Connected Components in MapReduce and Beyond" (SoCC 2014) — alternate
+    large-star(u): attach every neighbor v > u to m = min(N(u) ∪ {u})
+    small-star(u): attach every neighbor v ≤ u (and u) to that minimum
+  until the edge set reaches a fixpoint; converges in O(log n) rounds and
+  leaves a star forest where every node points at its component minimum.
 
-Round-cost design (round-3 rework, VERDICT r2 item 2; round-6 trim):
+Both regimes give the same relation: every node of an edge that is not a
+self loop and has no null endpoint, labelled with its component's minimum id.
+
+Round-cost design of the star loop (round-3 rework, VERDICT r2 item 2;
+round-6 trim):
 - each star op is ONE window aggregation over a single hash exchange on
   `src` (min — and for small-star row_number — share the same window
   partitioning); only small-star closes the round with a distinct, so a
@@ -35,10 +43,92 @@ Round-cost design (round-3 rework, VERDICT r2 item 2; round-6 trim):
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from record_matching_spark import session
+
+
+def _id_fields(t: T.DataType) -> int:
+    """Number of integral fields (at most 8 bytes each) of a fixed-width id
+    type (integral, or a struct of integral fields), else 0."""
+    if isinstance(t, T.IntegralType):
+        return 1
+    if isinstance(t, T.StructType) and all(
+        isinstance(f.dataType, T.IntegralType) for f in t.fields
+    ):
+        return len(t.fields)
+    return 0
+
+
+def _min_roots(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Min-root union-find over dense node ranks 0..n-1: each round hooks the
+    larger root of every edge that still joins two roots to the smallest root
+    it meets, then pointer-jumps to a fixpoint. A parent never exceeds its
+    node, so each component ends on its minimum rank."""
+    parent = np.arange(n)
+    while True:
+        ru, rv = parent[u], parent[v]
+        split = ru != rv
+        if not split.any():
+            return parent
+        ru, rv = ru[split], rv[split]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
+def _driver_components(e: DataFrame) -> DataFrame | None:
+    """connected_components of the raw (src, dst) edges labelled on the
+    driver, or None when the ids have no fixed width or the edges exceed the
+    budget. One Spark job (the bounded pull). The result is a local relation
+    with the input's id type, whose exact size lets the planner broadcast it
+    into cluster_assignments' join."""
+    id_type = e.schema["src"].dataType
+    width = _id_fields(id_type)
+    if not width or id_type != e.schema["dst"].dataType:
+        return None
+    table = session.collect_within_budget(e, 2 * 8 * width)
+    if table is None:
+        return None
+    src, dst = table.column("src"), table.column("dst")
+    ids = pa.chunked_array(src.chunks + dst.chunks, type=src.type).combine_chunks()
+    fields = ids.flatten() if width > 1 else [ids]
+    if any(f.null_count != ids.null_count for f in fields):
+        return None  # a struct id with a null field: no dense int64 key
+    # dense keys: one int64 column per field; struct ids compare field by
+    # field, as Spark orders structs
+    keys = np.stack(
+        [pc.fill_null(f, 0).to_numpy().astype(np.int64) for f in fields], axis=1
+    )
+    m = table.num_rows
+    valid = ids.is_valid().to_numpy(zero_copy_only=False)
+    # drop null endpoints and self loops, as _canon does
+    kept = np.flatnonzero(valid[:m] & valid[m:] & (keys[:m] != keys[m:]).any(axis=1))
+    rows = np.concatenate([kept, kept + m])
+    # one field ranks as 1-D: np.unique over rows sorts a structured view,
+    # ~7x slower
+    rowkeys = keys[rows] if width > 1 else keys[rows, 0]
+    _, first, rank = np.unique(
+        rowkeys, axis=0 if width > 1 else None, return_index=True, return_inverse=True
+    )
+    rank = rank.reshape(-1)
+    root = _min_roots(rank[: len(kept)], rank[len(kept):], len(first))
+    out = pa.table({
+        "node": ids.take(rows[first]),
+        "component": ids.take(rows[first[root]]),
+    })
+    schema = T.StructType(
+        [T.StructField("node", id_type), T.StructField("component", id_type)]
+    )
+    return e.sparkSession.createDataFrame(out, schema)
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -144,8 +234,11 @@ def connected_components(
     DataFrame(node, component) where component = min node id of the
     component. Nodes that appear in no edge are absent (caller unions
     singletons). Deterministic: output depends only on the edge set."""
-    e = _canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    e = e.localCheckpoint(eager=True)
+    raw = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    local = _driver_components(raw)
+    if local is not None:
+        return local
+    e = _canon(raw).localCheckpoint(eager=True)
     prev_fp = None
     for i in range(max_iter):
         e = _large_star(e)

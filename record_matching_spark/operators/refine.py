@@ -9,8 +9,9 @@ subgraph. Transitive closure chains false-positive edges into mega-clusters;
 this is the pass that breaks those chains.
 
 Spark-first restatement: all set logic is DataFrame joins; the re-clustering
-reuses the large-star/small-star connected components. No driver-side
-graphs, no per-row Python.
+reuses connected_components (a driver-side union-find when the strong-edge
+set fits the broadcast budget, else large-star/small-star). No per-row
+Python.
 """
 
 from __future__ import annotations

@@ -11,7 +11,7 @@ Parquet directory and the per-stage CLI restarts anywhere,
   s4_pairs        salted self-join candidate pairs         (main.py:552-577)
   s5_features     batched pair similarity features         (main.py:353-434)
   s6_scores       sigmoid(w·x+b) match scores              (main.py:606-626)
-  s7_clusters     large-star/small-star transitive closure (main.py:629-651)
+  s7_clusters     connected-components transitive closure  (main.py:629-651)
 
 Every stage writes Parquet + a _manifest.json carrying rows, wall_ms,
 per-file row counts (lineage, one entry per part file, read from the Parquet

@@ -198,6 +198,22 @@ def test_bigram_logprob_job_counts(spark, docs):
         assert len(ids) <= most, (smoothing, len(ids))
 
 
+@pytest.mark.parametrize("smoothing", ["addk", "kn"])
+def test_bigram_logprob_same_bits_either_attach(spark, docs, monkeypatch, smoothing):
+    """Each doc's terms are summed in one fixed order, so the model attached
+    by broadcast and by sort-merge (budget 0) give bit-identical scores."""
+    from record_matching_spark import session
+    from record_matching_spark.functions.text import bigram_logprob
+
+    def scores():
+        rows = bigram_logprob(docs, smoothing=smoothing).collect()
+        return sorted((r["doc_id"], r["neg_logprob"]) for r in rows)
+
+    broadcast = scores()
+    monkeypatch.setattr(session, "BROADCAST_BUDGET_BYTES", 0)
+    assert scores() == broadcast
+
+
 def test_multimodal_plumbing(spark):
     media = synth_media(spark, n=48)
     feats = extract_media_features(media.repartition(4))

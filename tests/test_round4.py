@@ -1,6 +1,7 @@
-"""Round-4 gates: executed catalog-table path, winnowing spans, and the
-ADVICE r3 fixes (null-score histogram, canonical_fields column clash). The
-simhash vote-sign tests moved to test_dedup.py."""
+"""Round-4 gates: executed catalog-table path and winnowing spans. The
+simhash vote-sign tests live in test_dedup.py, the null-score histogram
+test in test_tune.py and the canonical_fields column clash in
+test_canonical.py."""
 
 from __future__ import annotations
 
@@ -144,34 +145,3 @@ def test_winnow_span_pairs_finds_shared_region(spark):
         assert r["r_start"] < len(shared) // 2, (portable, r)
         # doc 1 carries it as a SUFFIX: its span ends deep into the doc
         assert r["l_end"] > len(a_pre) - 1, (portable, r)
-
-
-def test_score_histogram_ignores_null_scores(spark):
-    """ADVICE r3: null/NaN scores must be dropped, not crash the fill
-    loop with a None bin."""
-    from record_matching_spark.operators.tune import score_histogram
-
-    df = spark.createDataFrame(
-        [(0.2,), (0.8,), (None,), (float("nan"),)], "score double"
-    )
-    h = score_histogram(df, bins=4)
-    assert h.sum() == 2
-    assert h[0] == 1 and h[3] == 1
-
-
-def test_canonical_fields_clashing_column(spark):
-    """ADVICE r3: records already carrying a cluster_id column must not
-    trigger an ambiguous-column error — only id+fields are joined."""
-    from record_matching_spark.operators.canonical import canonical_fields
-
-    clusters = spark.createDataFrame(
-        [(1, 10), (2, 10)], "file_id long, cluster_id long"
-    )
-    records = spark.createDataFrame(
-        [(1, 99, "py"), (2, 98, "go")],
-        "file_id long, cluster_id long, lang string",
-    )
-    out = canonical_fields(clusters, records, fields=["lang"]).collect()
-    assert len(out) == 1
-    assert out[0]["cluster_size"] == 2
-    assert out[0]["lang"] == "go"  # tie of py/go → lowest value

@@ -12,7 +12,8 @@ def test_missing_observations_keep_outputs(spark, monkeypatch):
     """Every operator that reads an observe() row has a fallback for a row
     that does not arrive: sha_features counts its checkpoint, the near-dup
     verify attaches by sort-merge, and CC fingerprints each round with its
-    own pass. Each gives the same output either way."""
+    own pass. Each gives the same output either way. CC runs with the budget
+    at 0: an edge set that fits labels on the driver and observes nothing."""
     from record_matching_spark.functions.dedup import minhash_near_dup_pairs
     from record_matching_spark.operators.cluster import connected_components
     from record_matching_spark.operators.scoring import sha_features
@@ -34,10 +35,13 @@ def test_missing_observations_keep_outputs(spark, monkeypatch):
     )
 
     def outputs():
+        with monkeypatch.context() as m:
+            m.setattr(session, "BROADCAST_BUDGET_BYTES", 0)
+            components = sorted(tuple(r) for r in connected_components(edges).collect())
         return (
             sorted(tuple(r) for r in sha_features(files).collect()),
             sorted(tuple(r) for r in minhash_near_dup_pairs(docs, threshold=0.8).collect()),
-            sorted(tuple(r) for r in connected_components(edges).collect()),
+            components,
         )
 
     observed = outputs()
